@@ -121,3 +121,146 @@ def test_load_partitioned_sink_matches_single_file(spark, tmp_path):
     assert r1 == r2 and len(r1) == 1000
     assert all(validation(spark, w1, deep=True).values())
     assert all(validation(spark, w2, deep=True).values())
+
+
+def _write_etl_inputs(tmp_path, rows=3000, seed=7):
+    """A small grocery_sales.csv plus a 13-column extra_data.parquet with
+    unmatched parquet keys, null Weekly_Sales/CPI/Unemployment, a null
+    Date and one unparseable Date."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.csv as pacsv
+    import pyarrow.parquet as pq
+
+    from walmart_e_commerce_sales_data_pipeline_spark.schemas import (
+        EXTRA_DATA_SCHEMA,
+    )
+
+    rng = np.random.default_rng(seed)
+    n_extra = rows + rows // 5  # a sixth of the parquet keys never match
+    keys = rng.permutation(n_extra * 2)[:n_extra].astype(np.int64)
+    store_keys = np.sort(keys[:rows])
+
+    def nulls(values, rate, keep=()):
+        mask = rng.random(len(values)) < rate
+        mask[list(keep)] = False
+        return pa.array(values, mask=mask)
+
+    weeks = np.datetime64("2010-02-05") + rng.integers(0, 143, rows) * 7
+    dates = np.char.add(weeks.astype(str), "T00:00:00.000").astype(object)
+    dates[5], dates[11] = "not-a-date", None
+    sales = np.round(rng.lognormal(9.4, 1.0, rows), 2)
+    sales[[5, 11]] = 50000.0  # both Date-less rows pass the > 10000 filter
+    csv_path = str(tmp_path / "grocery_sales.csv")
+    pacsv.write_csv(
+        pa.table({
+            "level_0": np.arange(rows, dtype=np.int64),
+            "index": store_keys,
+            "Store_ID": rng.integers(1, 46, rows),
+            "Date": pa.array(dates, pa.string()),
+            "Dept": rng.integers(1, 100, rows),
+            "Weekly_Sales": nulls(sales, 0.02, keep=(5, 11)),
+        }),
+        csv_path,
+        pacsv.WriteOptions(quoting_style="none"),
+    )
+    extra = {
+        "index": rng.permutation(keys),
+        "IsHoliday": (rng.random(n_extra) < 0.07).astype(np.int64),
+    }
+    for f in EXTRA_DATA_SCHEMA.fields[2:]:
+        extra[f.name] = np.round(rng.uniform(1.0, 200.0, n_extra), 3)
+    extra["CPI"] = nulls(extra["CPI"], 0.02)
+    extra["Unemployment"] = nulls(extra["Unemployment"], 0.02)
+    pq_path = str(tmp_path / "extra_data.parquet")
+    pq.write_table(pa.table(extra), pq_path)
+    return csv_path, pq_path
+
+
+def _reference_steps(csv_path, pq_path):
+    """The reference ETL's pandas steps (wallmart_pipeline.py:52-119)."""
+    import pandas as pd
+
+    merged = pd.read_csv(csv_path).merge(pd.read_parquet(pq_path), on="index")
+    for col in ("Weekly_Sales", "CPI", "Unemployment"):
+        merged[col] = merged[col].fillna(merged[col].mean())
+    merged["Date"] = pd.to_datetime(
+        merged["Date"], format="%Y-%m-%dT%H:%M:%S.%f", errors="coerce"
+    )
+    merged["Month"] = merged["Date"].dt.month
+    clean = merged[merged["Weekly_Sales"] > 10000][
+        ["Store_ID", "Weekly_Sales", "IsHoliday", "CPI", "Unemployment", "Month"]
+    ]
+    agg = clean.groupby("Month")["Weekly_Sales"].mean().reset_index().round(2)
+    return clean, agg
+
+
+def _read_sink(path):
+    from pathlib import Path
+
+    import pandas as pd
+
+    parts = sorted(Path(path).glob("part-*"))
+    assert len(parts) == 1, parts
+    return pd.read_csv(parts[0])
+
+
+def test_main_end_to_end_on_generated_inputs(spark, tmp_path, monkeypatch):
+    """``main`` on generated inputs matches a pandas run of the reference
+    steps, and the join it persists is projected to the six columns
+    ``transform`` reads, so the parquet scan under the cache reads only
+    the join key plus three of its 13 columns."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+
+    from walmart_e_commerce_sales_data_pipeline_spark.pipeline import main
+    from walmart_e_commerce_sales_data_pipeline_spark.schemas import (
+        TRANSFORM_INPUT_COLUMNS,
+    )
+
+    csv_path, pq_path = _write_etl_inputs(tmp_path)
+    cls = type(spark.range(0))
+    orig_persist = cls.persist
+    persisted = []
+
+    def capture(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        persisted.append((list(self.columns), plan))
+        return orig_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", capture)
+    out = tmp_path / "out"
+    main(spark, csv_path, pq_path, output_dir=str(out))
+    monkeypatch.undo()
+
+    columns, plan = persisted[0]
+    assert columns == list(TRANSFORM_INPUT_COLUMNS)
+    scans = re.findall(r"FileScan parquet .*?ReadSchema: struct<([^>]*)>", plan)
+    assert len(scans) == 1, plan
+    assert [f.split(":")[0] for f in scans[0].split(",")] == [
+        "index", "IsHoliday", "CPI", "Unemployment",
+    ]
+
+    want_clean, want_agg = _reference_steps(csv_path, pq_path)
+    got_agg = _read_sink(out / "agg_data.csv")
+    assert got_agg["Month"].tolist() == want_agg["Month"].astype(int).tolist()
+    np.testing.assert_allclose(
+        got_agg["Avg_Sales"], want_agg["Weekly_Sales"], rtol=0, atol=0.005
+    )
+
+    got_clean = _read_sink(out / "clean_data.csv")
+    assert list(got_clean.columns) == list(want_clean.columns)
+    assert len(got_clean) == len(want_clean)
+    assert want_clean["Month"].isna().sum() == 2  # the null and the bad Date
+
+    def ordered(df):
+        df = df.astype(float).fillna(-1.0)
+        return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+    got, want = ordered(got_clean), ordered(want_clean)
+    exact = ["Store_ID", "IsHoliday", "Month"]
+    pd.testing.assert_frame_equal(got[exact], want[exact])
+    filled = ["Weekly_Sales", "CPI", "Unemployment"]
+    np.testing.assert_allclose(got[filled], want[filled], rtol=1e-9, atol=0)

@@ -185,11 +185,11 @@ def test_checked_window_composition():
         "events_sliding_hll",
         "cms_join_size_estimate",
         "cube_distinct_hll",
-        "pareto_frontier_parts",  # the stalest 28 r15 greens start here
+        "pareto_frontier_parts",
         "events_session_window",
     ]
     assert _PRIORITY[22:50] == [
-        "concurrent_sessions_profile",
+        "concurrent_sessions_profile",  # the stalest 28 r15 greens start here
         "time_decayed_engagement",
         "events_forward_decay",
         "survival_time_to_purchase",

@@ -4,6 +4,7 @@ the write-once derived artifacts (WARC export, MERGE scratch)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -35,6 +36,22 @@ def test_fingerprint_sees_nested_partition_files(tmp_path):
     # add a new nested file -> moves again
     _write(str(t / "lang=de" / "part-0.parquet"), b"ccc")
     assert table_fingerprint(str(tmp_path), "documents") not in (fp1, fp2)
+
+
+def test_fingerprint_sees_rewrite_that_keeps_size_and_mtime(tmp_path):
+    """A same-size rewrite that restores the old mtime (what ``cp -p`` or
+    ``rsync -a`` leave behind) still moves the fingerprint: the new ctime
+    cannot be restored, so the schema memo never serves a stale schema."""
+    path = str(tmp_path / "orders.parquet")
+    _write(path, b"aaaa")
+    before = os.stat(path)
+    fp1 = table_fingerprint(str(tmp_path), "orders")
+    time.sleep(0.05)  # past the coarse clock tick file timestamps use
+    _write(path, b"bbbb")
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(path)
+    assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
+    assert table_fingerprint(str(tmp_path), "orders") != fp1
 
 
 def test_fingerprint_single_file_and_version_key(tmp_path):

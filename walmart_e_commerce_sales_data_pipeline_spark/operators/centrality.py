@@ -43,12 +43,17 @@ def pagerank(
     Each iteration: rank_v ← (1−d)/N + d·Σ_{u∈Γ(v)} rank_u / deg_u —
     two shuffles (the contribution join on the source id, the grouped
     sum on the destination id).  The per-node degree table and the
-    degree-annotated edge set are MATERIALIZED once at construction
-    (eager localCheckpoints — jobs run when this function is called, not
-    at the first action on the result), so every iteration and the node
-    count read bounded materialized state instead of re-deriving the
-    caller's pair plan; the unrolled iteration lineage on top of that
-    state is shallow (two joins per round).
+    degree-annotated edge set are MATERIALIZED once, through LAZY
+    localCheckpoints: no job runs for them when this function is
+    called; each materializes inside the first action that reads it —
+    the degree table inside the node-count job below, the edge set
+    inside the first iteration's contribution join at the first action
+    on the result.  That first action must be a full scan (count,
+    collect, a write — not ``first``/``limit``), or the checkpoint
+    holds only the partitions it touched.  Every iteration then reads
+    bounded materialized state instead of re-deriving the caller's pair
+    plan; the unrolled iteration lineage on top of that state is
+    shallow (two joins per round).
 
     N (the node count) is a driver scalar from one count job — the same
     bounded-materialization posture as ``train_ivf_centroids``; it

@@ -18,10 +18,15 @@ Semantics ported with their edge cases (SURVEY.md §2.5 gotchas):
 - G7: means are computed *before* the ``> 10000`` filter; using collected
   literals preserves that ordering under lazy evaluation.
 
-Scale posture: every step is a Catalyst-optimizable plan node — the parquet
-side is column-pruned to the 4 needed columns of 13, the filter pushes into
-the scan, the join broadcasts the small side, and the group-by runs
-partial+final hash aggregation.  No Python UDFs anywhere.
+Scale posture: every step is a Catalyst-optimizable plan node.  ``main``
+projects the join to the 6 columns ``transform`` reads before it persists
+the join, so the parquet scan reads 4 of its 13 columns (``index`` plus
+three) and the cache holds 6 columns, not 18; a persisted plan is never
+pruned by the plans built on it, so the projection has to come first.
+The ``> 10000`` filter runs on the mean-filled column over that cache, so
+it cannot push into the scan.  AQE picks the join strategy at runtime,
+and the group-by runs partial+final hash aggregation.  No Python UDFs
+anywhere.
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ from .schemas import (
     DATE_FORMAT,
     FILL_MEAN_COLUMNS,
     GROCERY_SALES_SCHEMA,
+    TRANSFORM_INPUT_COLUMNS,
 )
 
 logger = logging.getLogger(__name__)
@@ -91,9 +97,11 @@ def extract(spark: SparkSession, store_data: str, extra_data: str) -> DataFrame:
     - Join strategy is left to AQE (runtime broadcast conversion from
       observed sizes) — both inputs grow with the dataset, so no build
       side is pinned at plan time.
-    - Only the columns the pipeline ever uses survive Catalyst's column
-      pruning; the parquet scan reads 4 of 13 columns (the reference reads
-      all 13, SURVEY.md §4.1).
+    - The result is the reference's full 18-column merge.  Column pruning
+      happens downstream, where a plan selects columns: ``main`` projects
+      to ``TRANSFORM_INPUT_COLUMNS`` before it persists, so the parquet
+      scan reads 4 of 13 columns (the reference reads all 13, SURVEY.md
+      §4.1).
     """
     df = spark.read.option("header", True).schema(GROCERY_SALES_SCHEMA).csv(store_data)
     extra_df = spark.read.parquet(extra_data)
@@ -289,9 +297,19 @@ def main(
         # The scan+join feeds THREE actions (the fill-mean aggregate, then
         # each sink's plan): persist it so the sources are read and joined
         # once — the means job populates the cache, the sinks reuse it.
-        # MEMORY_AND_DISK (persist default) spills rather than OOMs at
-        # scale, and the cache is released in the finally below.
-        merged_df = extract(spark, file_1, file_2).persist()
+        # Project to the columns transform reads FIRST: a persisted plan
+        # is never pruned by its consumers, so persisting the full merge
+        # would scan all 13 parquet columns and cache all 18.  The
+        # projection is where the scan pruning happens; transform's
+        # ``> 10000`` filter reads the mean-filled column over this cache,
+        # so no filter reaches the scan.  MEMORY_AND_DISK
+        # (persist default) spills rather than OOMs at scale, and the
+        # cache is released in the finally below.
+        merged_df = (
+            extract(spark, file_1, file_2)
+            .select(*TRANSFORM_INPUT_COLUMNS)
+            .persist()
+        )
         # clean_data feeds two sinks (its own CSV and the aggregate) —
         # persist so the fill/derive/filter runs once, not per sink.
         clean_data = transform(merged_df).persist()

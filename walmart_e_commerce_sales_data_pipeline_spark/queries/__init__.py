@@ -55,9 +55,9 @@ from . import (  # noqa: F401
 # staleness 4 at ``join_cross``), is the four never-green queries first
 # (standing policy — they carry this round's decimal-to-string fix and
 # must be re-checked), then the 18 r14-green queries in registry order
-# (``mixture_sampling_plan`` ... ``cube_distinct_hll``), then the
+# (``mixture_sampling_plan`` ... ``events_session_window``), then the
 # stalest 28 of the 50 r15-green queries in registry order
-# (``pareto_frontier_parts`` ... ``join_right_outer``).
+# (``concurrent_sessions_profile`` ... ``join_right_outer``).
 # Every tail query is re-proven by the local DuckDB mirror
 # (tests/test_queries_vs_duckdb.py, driver-equivalent strictness) on
 # every pytest run.

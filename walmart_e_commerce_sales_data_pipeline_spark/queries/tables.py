@@ -33,25 +33,22 @@ from pyspark.sql.types import LongType, StructType
 
 from ..session import ensure_utc
 
-# Schema memo (r18 optimization round): ``spark.read.parquet`` without an
-# explicit schema re-infers it on EVERY call — file listing plus a footer
-# read, measured 60-100 ms per call on this driver vs ~13 ms with the
-# schema supplied, and a real metadata round-trip per query at production
-# scale (catalog metadata is exactly what engines cache; guide §6 file
-# listing).  The memo holds table SCHEMAS only — catalog metadata, never
-# rows or results — and is keyed on ``table_fingerprint`` (path + per-file
-# size/mtime), so a rewritten or regenerated table re-infers.  The events
-# loader still adapts to whichever ``ts`` encoding the memoized schema
-# reports, same as before.
-# Fingerprint-keyed schema memo: catalog METADATA only, never rows.
-# Known blind spot (ADVICE r18): the fingerprint is path+size+mtime_ns,
-# so a rewrite that preserves both size and mtime (cp -p, rsync -a,
-# archive extraction with timestamps) would serve a stale schema and the
-# explicit .read.schema() would misread data where plain inference would
-# have re-read the footer.  Accepted trade: such rewrites do not occur in
-# the read-only driver testdata, and folding a footer hash into the key
-# would re-pay the footer read the memo exists to avoid.  If the data
-# source ever becomes mutable-in-place, clear the memo or key on content.
+# Schema memo: ``spark.read.parquet`` without an explicit schema
+# re-infers it on EVERY call — file listing plus a footer read, measured
+# 60-100 ms per call on this driver vs ~13 ms with the schema supplied,
+# and a real metadata round-trip per query at production scale (catalog
+# metadata is exactly what engines cache; guide §6 file listing).  The
+# memo holds table SCHEMAS only — catalog metadata, never rows or
+# results — and is keyed on ``table_fingerprint`` (path plus per-file
+# size, mtime_ns, ctime_ns and inode), so a rewritten or regenerated
+# table re-infers.  ctime and inode close the blind spot of a
+# size+mtime key: a rewrite that restores the mtime (``cp -p``,
+# ``rsync -a``, archive extraction with timestamps) still sets a new
+# ctime, which user tools cannot restore, and a replace-by-rename gets
+# a new inode.  All four come from the one ``os.stat`` per file, so the
+# key adds no footer read (folding in a footer hash would re-pay the
+# read the memo exists to avoid).  The events loader still adapts to
+# whichever ``ts`` encoding the memoized schema reports.
 _SCHEMA_MEMO: dict[str, StructType] = {}
 
 
@@ -97,15 +94,22 @@ def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stat_entry(path: str, rel: str) -> tuple:
+    import os
+
+    st = os.stat(path)
+    return (rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
+
+
 def table_fingerprint(sf_dir: str, name: str, version: int = 0) -> str:
     """Cheap, zero-Spark-job content fingerprint of a testdata table: the
-    sorted recursive list of (relative path, size, mtime_ns) of its data
-    files, hashed with ``version`` (bump the caller's version constant
-    whenever its derived-artifact format changes).  A rewritten or
-    regenerated table changes size or mtime, so any scratch artifact
-    keyed by this fingerprint is invalidated with it.  Raises if no data
-    files are found — an empty entry list would make the key
-    content-insensitive."""
+    sorted recursive list of (relative path, size, mtime_ns, ctime_ns,
+    inode) of its data files, hashed with ``version`` (bump the caller's
+    version constant whenever its derived-artifact format changes).  A
+    rewritten or regenerated table changes ctime even when size and mtime
+    are preserved, so any scratch artifact keyed by this fingerprint is
+    invalidated with it.  Raises if no data files are found — an empty
+    entry list would make the key content-insensitive."""
     import hashlib
     import os
 
@@ -116,13 +120,11 @@ def table_fingerprint(sf_dir: str, name: str, version: int = 0) -> str:
             dirs.sort()
             rel_root = os.path.relpath(root, target)
             for fname in sorted(files):
-                st = os.stat(os.path.join(root, fname))
                 entries.append(
-                    (os.path.join(rel_root, fname), st.st_size, st.st_mtime_ns)
+                    _stat_entry(os.path.join(root, fname), os.path.join(rel_root, fname))
                 )
     elif os.path.isfile(target):
-        st = os.stat(target)
-        entries.append((os.path.basename(target), st.st_size, st.st_mtime_ns))
+        entries.append(_stat_entry(target, os.path.basename(target)))
     if not entries:
         raise FileNotFoundError(
             f"no data files found under {target}; refusing to fingerprint "

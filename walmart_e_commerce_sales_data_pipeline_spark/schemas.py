@@ -62,6 +62,13 @@ FILL_MEAN_COLUMNS = ("Weekly_Sales", "CPI", "Unemployment")
 # Projection kept by transform() (wallmart_pipeline.py:94).
 CLEAN_COLUMNS = ("Store_ID", "Weekly_Sales", "IsHoliday", "CPI", "Unemployment", "Month")
 
+# Columns of the 18-column merge that transform() reads: CLEAN_COLUMNS'
+# inputs (Month derives from Date).  main() persists only these, because
+# a persisted plan is never column-pruned by the plans built on top of it.
+TRANSFORM_INPUT_COLUMNS = (
+    "Store_ID", "Date", "Weekly_Sales", "IsHoliday", "CPI", "Unemployment",
+)
+
 # Date format of the raw CSV Date strings (wallmart_pipeline.py:89,
 # pandas "%Y-%m-%dT%H:%M:%S.%f" → Spark pattern).
 DATE_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSS"
