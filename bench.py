@@ -571,6 +571,46 @@ HEADLINE = [
 ]
 
 
+STDOUT_LINE_LIMIT = 1900  # tail readers of stdout keep only ~2000 bytes
+
+
+def result_line(
+    head: dict,
+    timings: dict,
+    err_names: list,
+    ivf_pruned,
+    sf_val,
+    limit: int = STDOUT_LINE_LIMIT,
+) -> str:
+    """The one stdout JSON line, in the richest of three tiers that fits
+    in ``limit`` bytes: full-precision walls with ``ivf_pruned``; walls
+    rounded to 10 ms; and, as the registry keeps growing, only the ten
+    slowest queries.  Every tier carries all of ``head``; the full
+    per-query map always lives in the sidecar."""
+    err = {"errors": err_names} if err_names else {}
+
+    def line(queries: dict, **extra) -> str:
+        return json.dumps(
+            {
+                **head,
+                "queries": queries,
+                **err,
+                **extra,
+                "sf": sf_val,
+                "details": "bench_details.json",
+            },
+            separators=(",", ":"),
+        )
+
+    payload = line(timings, ivf_pruned=ivf_pruned)
+    if len(payload) > limit:
+        payload = line({n: round(t, 2) for n, t in timings.items()})
+    if len(payload) > limit:
+        slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:10]
+        payload = line({n: round(t, 2) for n, t in slowest})
+    return payload
+
+
 def main() -> None:
     from walmart_e_commerce_sales_data_pipeline_spark import queries as q
     from walmart_e_commerce_sales_data_pipeline_spark.session import get_spark
@@ -1211,6 +1251,8 @@ def main() -> None:
                 "runtime_metrics": runtime,
                 "ivf_pruned": ivf_pruned,
                 "sf": sf_val,
+                "cpus": int(CPUS),
+                "default_parallelism": spark.sparkContext.defaultParallelism,
             },
             fh,
             indent=1,
@@ -1223,8 +1265,7 @@ def main() -> None:
     # in `queries`, trust per query_trusted) and only the per-segment
     # re-measurement failed; "name[sketch_only]" scopes to the
     # production-tier twin sweep.
-    err_names = sorted(errors)
-    payload = json.dumps(
+    payload = result_line(
         {
             "metric": "headline_query_wall_clock_total",
             "value": total,
@@ -1234,54 +1275,14 @@ def main() -> None:
             "calibration_trusted": cal_trusted,
             "n_untrusted": len(untrusted_queries),
             "n_retried": len(spliced_via_retry),
-            "queries": timings,
-            **({"errors": err_names} if err_names else {}),
-            "ivf_pruned": ivf_pruned,
-            "sf": sf_val,
-            "details": "bench_details.json",
+            "cpus": int(CPUS),
+            "default_parallelism": spark.sparkContext.defaultParallelism,
         },
-        separators=(",", ":"),
+        timings,
+        sorted(errors),
+        ivf_pruned,
+        sf_val,
     )
-    if len(payload) > 1900:  # keep the driver tail-capture parseable
-        slim = {n: round(t, 2) for n, t in timings.items()}
-        payload = json.dumps(
-            {
-                "metric": "headline_query_wall_clock_total",
-                "value": total,
-                "unit": "sec",
-                "n_measured": n_measured,
-                "calibration_sec": calibration,
-                "calibration_trusted": cal_trusted,
-                "n_untrusted": len(untrusted_queries),
-                "n_retried": len(spliced_via_retry),
-                "queries": slim,
-                **({"errors": err_names} if err_names else {}),
-                "sf": sf_val,
-                "details": "bench_details.json",
-            },
-            separators=(",", ":"),
-        )
-    if len(payload) > 1900:
-        # Last resort as the registry keeps growing: aggregate + the ten
-        # slowest queries; the full per-query map lives in the sidecar.
-        slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-        payload = json.dumps(
-            {
-                "metric": "headline_query_wall_clock_total",
-                "value": total,
-                "unit": "sec",
-                "n_measured": n_measured,
-                "calibration_sec": calibration,
-                "calibration_trusted": cal_trusted,
-                "n_untrusted": len(untrusted_queries),
-                "n_retried": len(spliced_via_retry),
-                "queries": {n: round(t, 2) for n, t in slowest.items()},
-                **({"errors": err_names} if err_names else {}),
-                "sf": sf_val,
-                "details": "bench_details.json",
-            },
-            separators=(",", ":"),
-        )
     # Emit the JSON as the very last stdout bytes: stop Spark first so JVM
     # shutdown chatter can't land after (or inside) the line the harness
     # tails, then print compact + flush.

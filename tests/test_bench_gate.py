@@ -481,3 +481,24 @@ def test_apply_segment_splice_updates_retry_loadavg():
     )
     assert spliced == ["q1"]
     assert loadavgs == {"q1": 0.4, "q2": 13.9}
+
+
+def test_result_line_keeps_parallelism_in_every_tier():
+    """VERDICT r19 item 2: the stdout line must show the core count and
+    the session's parallelism however far it has to shrink — the full
+    tier, the 10 ms-rounded tier and the ten-slowest tier alike."""
+    import json
+
+    from bench import result_line
+
+    head = {"metric": "m", "value": 1.0, "cpus": 8, "default_parallelism": 8}
+    timings = {f"query_with_a_long_name_{i:03d}": 1.0 + i / 997 for i in range(40)}
+    full = result_line(head, timings, [], {"q": 1}, 0.1, limit=10**6)
+    slim = result_line(head, timings, [], {"q": 1}, 0.1, limit=len(full) - 1)
+    slowest = result_line(head, timings, ["q[retry]"], {"q": 1}, 0.1, limit=400)
+    tiers = [json.loads(line) for line in (full, slim, slowest)]
+    assert "ivf_pruned" in tiers[0] and "ivf_pruned" not in tiers[1]
+    assert len(tiers[1]["queries"]) == 40 and len(tiers[2]["queries"]) == 10
+    assert tiers[2]["errors"] == ["q[retry]"]
+    for tier in tiers:
+        assert tier["cpus"] == 8 and tier["default_parallelism"] == 8

@@ -4,6 +4,8 @@ the duplicate-cluster data (tiny diameters) never exercises."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from walmart_e_commerce_sales_data_pipeline_spark.operators.components import (
     connected_components,
@@ -71,11 +73,16 @@ def test_driver_union_find_equals_distributed_loop(spark):
     assert fast == slow and fast
 
 
-def test_pairs_plan_evaluated_once(spark):
+ALGORITHMS = ("auto", "union_find", "pointer_jumping", "star")
+
+
+@pytest.mark.parametrize("algorithm", ALGORITHMS)
+def test_pairs_plan_evaluated_once(spark, algorithm):
     """connected_components must evaluate the caller's pair plan exactly
-    once, even when it is expensive and NOT persisted/checkpointed — the
-    symmetrization uses a single-reference explode, not a union of two
-    selects (which re-evaluated the plan per branch)."""
+    once on every path, even when it is expensive and NOT
+    persisted/checkpointed — the dispatch count, the symmetrization and
+    the star path's node set all read one checkpoint of it, never the
+    plan again."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
@@ -92,12 +99,36 @@ def test_pairs_plan_evaluated_once(spark):
     expensive = base.select(counted("x").alias("x"), "y")
     labels = {
         (r["id"], r["component"])
-        for r in connected_components(expensive).collect()
+        for r in connected_components(expensive, algorithm=algorithm).collect()
     }
     assert labels == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     assert calls.value == base.count(), (
         f"pair plan evaluated {calls.value} times for {base.count()} rows"
     )
+
+
+@pytest.mark.parametrize("algorithm", ALGORITHMS)
+def test_releases_caches_when_pair_plan_fails(spark, algorithm):
+    """A pair plan that raises must leave nothing in the cache manager,
+    on every path — and so must a successful call (mirrors the
+    poisoned-UDF release test in test_dedup_similarity.py)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    @F.udf(LongType())
+    def boom(v):
+        raise ValueError("synthetic pair-plan failure")
+
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache_mgr.isEmpty()
+    base = spark.createDataFrame([(1, 2), (2, 3)], "x: long, y: long")
+    broken = base.select(boom("x").alias("x"), "y")
+    with pytest.raises(Exception, match="synthetic pair-plan failure"):
+        connected_components(broken, algorithm=algorithm).collect()
+    assert cache_mgr.isEmpty(), "pair frame leaked on the error path"
+    assert _label_sets(spark, base, algorithm=algorithm) == {(1, 1), (2, 1), (3, 1)}
+    assert cache_mgr.isEmpty()
 
 
 def _label_sets(spark, pairs, **kw):
@@ -148,6 +179,62 @@ def test_star_converges_in_logarithmic_rounds(spark):
     assert stats["iterations"] <= 12, stats  # log2(200) ~ 8 + slack
     # final round holds the star forest: one edge per non-root node
     assert stats["rounds"][-1]["edges"] == 200
+
+
+def test_star_exits_on_an_input_star_forest(spark):
+    """An input that already is a star forest — disjoint pairs (one
+    duplicated, one mirrored), a hub star and a self-loop — returns
+    before any large/small-star round; a two-edge chain, which is not
+    one, needs a round."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 4)]
+        + [(100, 100 + i) for i in range(1, 5)]
+        + [(300, 300)],
+        "x: long, y: long",
+    )
+    stats: dict = {}
+    got = _label_sets(spark, pairs, algorithm="star", stats=stats)
+    assert stats["iterations"] == 0 and "rounds" not in stats, stats
+    assert got == {(1, 1), (2, 1), (3, 3), (4, 3), (300, 300)} | {
+        (100 + i, 100) for i in range(5)
+    }
+    chain: dict = {}
+    two_edges = spark.createDataFrame([(1, 2), (2, 3)], "x: long, y: long")
+    assert _label_sets(spark, two_edges, algorithm="star", stats=chain) == {
+        (1, 1), (2, 1), (3, 1)
+    }
+    assert chain["iterations"] >= 1
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 24), st.integers(0, 24)), min_size=1, max_size=30
+    ),
+    n_dup=st.integers(0, 4),
+    n_mirror=st.integers(0, 4),
+    loops=st.lists(st.integers(0, 30), max_size=3),
+)
+def test_star_matches_union_find_on_random_graphs(
+    spark, edges, n_dup, n_mirror, loops
+):
+    """For ANY small graph, with duplicate, mirrored and self-loop rows,
+    the star path's labels equal union-find's: the star-forest exit is
+    exact, wherever in the loop it fires."""
+    rows = (
+        edges
+        + edges[:n_dup]
+        + [(y, x) for x, y in edges[:n_mirror]]
+        + [(v, v) for v in loops]
+    )
+    pairs = spark.createDataFrame(rows, "x: long, y: long")
+    assert _label_sets(spark, pairs, algorithm="star") == _label_sets(
+        spark, pairs, algorithm="union_find"
+    )
 
 
 def test_star_unconverged_raises(spark):

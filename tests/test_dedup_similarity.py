@@ -561,6 +561,55 @@ def test_winnowing_density_and_no_false_sharing(spark):
     assert winnow_fingerprints(short).count() == 0
 
 
+def test_winnowing_passage_repeated_inside_one_doc_is_not_shared(spark):
+    """A passage repeated twice inside ONE document, and nowhere else, is
+    not shared: its fingerprint hashes are held by one document (twice),
+    so the document gets no row.  A rows-per-hash >= 2 shortcut would
+    flag it."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from walmart_e_commerce_sales_data_pipeline_spark.operators.dedup import (
+        substring_dup_coverage,
+        winnow_fingerprints,
+    )
+
+    rng = random.Random(3)
+    passage = "".join(rng.choice("abcdefgh") for _ in range(80))
+    filler = ["".join(rng.choice("ijklmnop") for _ in range(120)) for _ in range(3)]
+    repeated = filler[0] + passage + filler[1] + passage + filler[2]
+    other = "".join(rng.choice("qrstuvwx") for _ in range(400))
+    docs = spark.createDataFrame(
+        [(0, repeated, len(repeated)), (1, other, len(other))],
+        "doc_id long, text string, n_chars long",
+    )
+    # The fixture is live: doc 0 holds some fingerprint hash twice.
+    held_twice = (
+        winnow_fingerprints(docs)
+        .groupBy("doc_id", "hv")
+        .count()
+        .filter((F.col("doc_id") == 0) & (F.col("count") >= 2))
+    )
+    assert held_twice.count() > 0
+    assert substring_dup_coverage(docs).count() == 0
+
+
+def test_substring_dup_coverage_runs_the_kernel_once(spark):
+    """Plan pin: the shared-hash test reads the one fingerprint stream, so
+    the physical plan holds exactly one MapInPandas (the winnowing
+    kernel) — not one per side of a join back."""
+    from walmart_e_commerce_sales_data_pipeline_spark.operators.dedup import (
+        substring_dup_coverage,
+    )
+
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    plan = (
+        substring_dup_coverage(docs)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("MapInPandas") == 1, plan
+
+
 def test_winnow_arrow_path_equals_plan_path(spark):
     """The Arrow winnow kernel (numpy reversed-axis argmin + hashlib md5)
     and the pure-plan nested-HOF expression must produce IDENTICAL

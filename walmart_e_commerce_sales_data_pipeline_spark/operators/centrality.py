@@ -44,16 +44,19 @@ def pagerank(
     two shuffles (the contribution join on the source id, the grouped
     sum on the destination id).  The per-node degree table and the
     degree-annotated edge set are MATERIALIZED once, through LAZY
-    localCheckpoints: no job runs for them when this function is
-    called; each materializes inside the first action that reads it —
-    the degree table inside the node-count job below, the edge set
-    inside the first iteration's contribution join at the first action
-    on the result.  That first action must be a full scan (count,
-    collect, a write — not ``first``/``limit``), or the checkpoint
-    holds only the partitions it touched.  Every iteration then reads
-    bounded materialized state instead of re-deriving the caller's pair
-    plan; the unrolled iteration lineage on top of that state is
-    shallow (two joins per round).
+    localCheckpoints.  Lazy defers only the final, block-storing stage:
+    under AQE, marking a plan with exchanges runs its shuffle and
+    broadcast stages at the call (at sf0.1: one job for the degree table,
+    three for the edge set).  Each final stage then runs inside the
+    first action that reads the frame — the degree table's inside the
+    node-count job below, the edge set's inside the first iteration's
+    contribution join at the first action on the result.  That first
+    action must be a full scan (count, collect, a write — not
+    ``first``/``limit``), or the checkpoint holds only the partitions
+    it touched.  Every iteration then reads bounded materialized state
+    instead of re-deriving the caller's pair plan; the unrolled
+    iteration lineage on top of that state is shallow (two joins per
+    round).
 
     N (the node count) is a driver scalar from one count job — the same
     bounded-materialization posture as ``train_ivf_centroids``; it
@@ -108,11 +111,13 @@ def pagerank(
     # both are the bounded per-iteration state the docstring already
     # commits to.  The node count then reads the materialized deg rows
     # instead of re-running the aggregation from the caller's plan.
-    # Lazy checkpoints (r19, the components-loop trick): deg
-    # materializes inside the node-count job that immediately follows
-    # (count is a full scan — the first-action invariant), and edges_w
-    # inside the first iteration's contribution join at the next action
-    # on the result — one barrier saved each vs the r18 eager form.
+    # Lazy checkpoints (r19, the components-loop trick): the shuffle
+    # stages under each still run here, at the call; only the final
+    # stage waits — deg's rides the node-count job that immediately
+    # follows (count is a full scan — the first-action invariant), and
+    # edges_w's the first iteration's contribution join at the next
+    # action on the result — one barrier saved each vs the r18 eager
+    # form.
     deg = deg.localCheckpoint(eager=False)
     n = deg.count()
     edges_w = edges.join(deg, "u").localCheckpoint(eager=False)

@@ -45,7 +45,7 @@ from pyspark.sql.types import StructField, StructType
 # is skipped and the distributed label-propagation loop runs.  Same
 # bounded-dispatch posture as similarity.verify_pairs: the driver path is
 # an explicit, limited materialization (≤ ~16 MB of edge tuples) chosen
-# only after a cheap count of the already-persisted edge set — never an
+# only after a cheap count of the checkpointed pair set — never an
 # unconditional collect of something unbounded.
 SMALL_EDGE_LIMIT = 500_000
 
@@ -101,6 +101,29 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(data, schema)
 
 
+def _star_forest(edges: DataFrame) -> tuple[bool, int]:
+    """Exact star-forest check on an oriented edge set (x > y, distinct):
+    one global aggregate over the 2E endpoint rows.
+
+    Per node n, let nx = rows with x = n and tot = rows that touch n.  The
+    set is a star forest iff no node has nx > 1 and no node has nx = 1
+    with tot > 1, i.e. every left-side node sits in exactly one row.
+    Then every row joins a leaf to a root that is nobody's leaf, and
+    because x > y on every row, that root is its star's minimum: the rows
+    ARE the (node, component-minimum) labels.  Returns (holds, rows).
+    """
+    ends = (
+        edges.selectExpr("stack(2, x, 1, y, 0) AS (n, isx)")
+        .groupBy("n")
+        .agg(F.sum("isx").alias("nx"), F.count("*").alias("tot"))
+    )
+    row = ends.agg(
+        F.count_if((F.col("nx") > 0) & (F.col("tot") > 1)).alias("bad"),
+        F.sum("nx").alias("rows"),
+    ).first()
+    return row["bad"] == 0, row["rows"] or 0
+
+
 def _star_components(
     oriented: DataFrame,
     max_iterations: int,
@@ -109,7 +132,7 @@ def _star_components(
     """Large-star/small-star alternation over an oriented edge set.
 
     ``oriented``: distinct (x, y) pairs with x > y, no self-loops.
-    Returns the converged star-forest edges — every row is
+    Returns the star-forest edges — every row is
     (node, component-minimum) with node > minimum; component roots do not
     appear on the left side.  Raises on non-convergence.
 
@@ -122,39 +145,30 @@ def _star_components(
       endpoint, with m = min of the (all-smaller) neighbors, connect u
       and every other neighbor to m.
 
-    Convergence = two consecutive small-star outputs identical.  A
-    (row count, bit_xor of xxhash64(x, y)) signature — order-independent,
-    one scan, no join — is the cheap per-round filter; when it reports a
-    fixed point the equality is CONFIRMED exactly with an ``exceptAll``
-    anti-check on the two checkpointed frames (equal counts + empty
-    difference ⇒ equal sets, since rows are distinct).  The exact check
-    runs once, at convergence, so a 2^-64 signature collision can cost
-    one wasted join but can never return wrong component labels
-    (ADVICE r11: silent-corruption hardening).
+    Both steps preserve connectivity (Kiveris et al.), so the loop
+    returns as soon as ``_star_forest`` holds — on the input itself
+    (``stats["iterations"] == 0``) or on a round's output.  The check is
+    exact, so no round is spent reproducing a fixed point.
     """
-
-    def _sig(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(x, y))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    # Lazy checkpoints throughout the loop (r18 optimization round): the
-    # signature aggregation that immediately follows each checkpoint is
-    # what materializes it, so marking the frame lazily checkpoints it
-    # inside the signature's job instead of paying a separate eager
-    # materialization job per round — one driver barrier per round, not
-    # two, with identical lineage truncation.
+    # Lazy checkpoints throughout the loop: the shuffle stages under each
+    # checkpoint run when it is marked (AQE materializes query stages as
+    # the RDD is built); only the final, block-storing stage waits, and it
+    # runs inside the star-forest check's job that follows.
     # INVARIANT (do not break in a refactor): the FIRST action on each
-    # lazily-checkpointed frame must be the full-scan signature
-    # aggregate (_sig's count/bit_xor touches every partition).  A
+    # lazily-checkpointed frame must be that full-scan check.  A
     # partition-partial first action (limit/first/isEmpty on the frame
     # itself) would materialize the checkpoint piecemeal across later
-    # jobs and silently restore the two-barriers-per-round cost.
+    # jobs and add a barrier per round.
     cur = oriented.localCheckpoint(eager=False)
-    prev_sig = _sig(cur)
-    for it in range(1, max_iterations + 1):
+    done, _ = _star_forest(cur)
+    it = 0
+    while not done:
+        if it == max_iterations:
+            raise RuntimeError(
+                f"connected_components (star) did not converge in "
+                f"{max_iterations} iterations"
+            )
+        it += 1
         # Symmetrize for large-star: each node must see its full
         # neighborhood.  union-of-two-selects is safe here (cur is a
         # checkpoint, not an arbitrary caller plan).
@@ -186,7 +200,7 @@ def _star_components(
         )
         mn2 = ls.groupBy("x").agg(F.min("y").alias("m"))
         joined = ls.join(mn2, "x")
-        ss = (
+        cur = (
             joined.select("x", F.col("m").alias("comp"))
             .union(
                 joined.filter(F.col("y") != F.col("m")).select(
@@ -197,22 +211,14 @@ def _star_components(
             .select("x", F.col("comp").alias("y"))
             .localCheckpoint(eager=False)
         )
-        sig = _sig(ss)
-        prev = cur
-        cur = ss
+        done, n_edges = _star_forest(cur)
         if stats is not None:
             stats.setdefault("rounds", []).append(
-                {"iteration": it, "edges": sig[0]}
+                {"iteration": it, "edges": n_edges}
             )
-        if sig == prev_sig and ss.exceptAll(prev).limit(1).count() == 0:
-            if stats is not None:
-                stats["iterations"] = it
-            return cur
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components (star) did not converge in "
-        f"{max_iterations} iterations"
-    )
+    if stats is not None:
+        stats["iterations"] = it
+    return cur
 
 
 def connected_components(
@@ -237,26 +243,31 @@ def connected_components(
     """
     if algorithm not in ("auto", "union_find", "pointer_jumping", "star"):
         raise ValueError(f"unknown algorithm: {algorithm!r}")
-    # Dispatch on the DIRECTED pair count: generators emit each undirected
-    # edge once (x < y), so the symmetrized edge set is exactly 2× the
-    # distinct pair count and `2 · n_pairs ≤ limit` is a conservative bound
-    # even when the caller's pairs carry duplicates.  Persisting the raw
-    # pairs (half the rows of the symmetrized set) and counting them
-    # evaluates the caller's plan exactly ONCE — the driver path then
-    # collects straight from the cache with no symmetrize/distinct job at
-    # all (union-find is direction- and duplicate-insensitive).
-    raw = pairs.select("x", "y").persist()
-    n_pairs = raw.count()
-    if algorithm == "union_find" or (
-        algorithm == "auto" and 2 * n_pairs <= small_edge_limit
-    ):
-        try:
-            return _driver_union_find(raw)
-        finally:
-            raw.unpersist()
-    if algorithm == "star" or (
-        algorithm == "auto" and 2 * n_pairs > star_edge_limit
-    ):
+    # The caller's pair plan is evaluated exactly ONCE: ``raw`` is a lazy
+    # checkpoint of it, and the first action on every path below is a
+    # full scan that stores it (the dispatch count, the union-find
+    # collect, or the first shuffle stage over it), so every later read
+    # hits the stored blocks.  A checkpoint registers nothing with the
+    # cache manager, so a pair plan that raises leaves no cached frame.
+    raw = pairs.select("x", "y").localCheckpoint(eager=False)
+    if algorithm == "auto":
+        # Dispatch on the DIRECTED pair count: generators emit each
+        # undirected edge once (x < y), so the symmetrized edge set is
+        # exactly 2x the distinct pair count and `2 · n_pairs ≤ limit` is
+        # a conservative bound even when the caller's pairs carry
+        # duplicates.
+        n_pairs = raw.count()
+        if 2 * n_pairs <= small_edge_limit:
+            algorithm = "union_find"
+        elif 2 * n_pairs > star_edge_limit:
+            algorithm = "star"
+        else:
+            algorithm = "pointer_jumping"
+    if algorithm == "union_find":
+        # Direction- and duplicate-insensitive: collects the raw pairs
+        # with no symmetrize/distinct job at all.
+        return _driver_union_find(raw)
+    if algorithm == "star":
         # Orient each pair (bigger, smaller), drop self-loops, dedup.
         oriented = (
             raw.filter(F.col("x") != F.col("y"))
@@ -265,33 +276,27 @@ def connected_components(
             )
             .distinct()
         )
-        # Node set from the persisted raw pairs (NOT the caller's plan —
-        # that must be evaluated exactly once), checkpointed so it
-        # survives the unpersist below.  Needed because nodes touched
-        # only by self-loops never enter the oriented edge set.
+        stars = _star_components(oriented, max_iterations, stats=stats)
+        # Star forest → labels: every non-root appears exactly once on the
+        # left; roots label themselves.  The node set comes from ``raw``
+        # because nodes touched only by self-loops never enter the
+        # oriented edge set.
         nodes = (
             raw.select(F.col("x").alias("id"))
             .union(raw.select(F.col("y").alias("id")))
             .distinct()
-            .localCheckpoint()
         )
-        try:
-            # _star_components checkpoints `oriented` on entry, so the
-            # cache is no longer needed once it returns.
-            stars = _star_components(oriented, max_iterations, stats=stats)
-        finally:
-            raw.unpersist()
-        # Star forest → labels: every non-root appears exactly once on the
-        # left; roots label themselves.
         labels = stars.select(
             F.col("x").alias("id"), F.col("y").alias("_comp")
         )
         return nodes.join(labels, "id", "left").select(
             "id", F.coalesce("_comp", F.col("id")).alias("component")
         )
-    # Distributed path: symmetrize out of the cache (explode keeps both
-    # directions in one pass, no second evaluation of the pair plan) and
-    # dedup — the loop's join sizes are bounded by the distinct edge set.
+    # Distributed path: symmetrize (explode keeps both directions in one
+    # pass over ``raw``) and dedup — the loop's join sizes are bounded by
+    # the distinct edge set.  Checkpoints, not persists, hold the loop
+    # state, so no exit path (converged, unconverged, or a raising pair
+    # plan) leaves a cached frame behind.
     edges = (
         raw.select(
             F.explode(
@@ -303,16 +308,13 @@ def connected_components(
         )
         .select("e.x", "e.y")
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
-    edges.count()
-    raw.unpersist()
     labels = (
         edges.select(F.col("x").alias("id")).distinct()
         .withColumn("component", F.col("id"))
-        .persist()
+        .localCheckpoint()
     )
-    labels.count()
 
     for _ in range(max_iterations):
         neighbor_min = (
@@ -338,7 +340,7 @@ def connected_components(
         lut = propagated.select(
             F.col("id").alias("lid"), F.col("component").alias("lcomp")
         )
-        new_labels = (
+        labels = (
             propagated.join(lut, propagated.component == lut.lid, "left")
             .select(
                 "id",
@@ -354,12 +356,8 @@ def connected_components(
             )
             .localCheckpoint()  # truncate lineage per iteration
         )
-        labels.unpersist()
-        labels = new_labels
-        if new_labels.filter("_chg").isEmpty():
-            edges.unpersist()
+        if labels.filter("_chg").isEmpty():
             return labels.select("id", "component")
-    edges.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} iterations"
     )

@@ -1066,9 +1066,10 @@ def substring_dup_coverage(
 
     Pipeline over ``winnow_fingerprints``:
     1. fingerprint hashes held by >= 2 distinct documents mark shared
-       passages (hash groupBy — shuffle keyed on the 48-bit hash; group
-       size is bounded by document frequency, and no pairwise join ever
-       forms, so common boilerplate cannot go quadratic);
+       passages (min(id) != max(id) over a window keyed on the 48-bit
+       hash; a partition holds one hash's fingerprints, so its size is
+       bounded by document frequency, and no pairwise join ever forms,
+       so common boilerplate cannot go quadratic);
     2. each document's shared fingerprints merge into maximal islands
        (gaps-and-islands over a doc-partitioned window: break when the
        next [pos, pos+k) interval clears the previous one);
@@ -1076,23 +1077,28 @@ def substring_dup_coverage(
        (sum of island spans) and coverage in basis points
        (integer-division exact, so both engines agree bit-for-bit).
 
-    Scale: two shuffles (hash, then doc id); the doc-partitioned window
-    and the final per-doc aggregate share the second exchange.  This is
-    the curation signal behind \"remove or down-weight documents that
-    are mostly boilerplate copies\" — the deduplicate-text-datasets
-    finding that exact substring dedup materially improves LM training
-    sets where near-dup methods saturate.
+    Scale: one kernel pass and two keyed shuffles of the raw fingerprint
+    rows (hash, then doc id); nothing is broadcast, and the
+    doc-partitioned window and the final per-doc aggregate share the
+    second exchange.  This is the curation signal behind \"remove or
+    down-weight documents that are mostly boilerplate copies\" — the
+    deduplicate-text-datasets finding that exact substring dedup
+    materially improves LM training sets where near-dup methods
+    saturate.
     """
     fp = winnow_fingerprints(
         docs, k=k, w=w, id_col=id_col, text_col=text_col, carry_cols=(len_col,)
     )
-    shared = (
-        fp.groupBy("hv")
-        .agg(F.countDistinct(id_col).alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("hv")
+    # "held by >= 2 distinct documents" as min(id) != max(id) over the
+    # hash's rows: the same predicate as countDistinct(id) >= 2 (both
+    # ignore NULL ids), but computed in place on the one fingerprint
+    # stream, so the kernel runs once instead of once per join side.
+    wh = Window.partitionBy("hv")
+    sfp = (
+        fp.withColumn("_shared", F.min(id_col).over(wh) != F.max(id_col).over(wh))
+        .filter("_shared")
+        .drop("_shared")
     )
-    sfp = fp.join(shared, "hv")
     wd = Window.partitionBy(id_col).orderBy("pos")
     isl = (
         sfp.withColumn("prev", F.lag("pos").over(wd))
