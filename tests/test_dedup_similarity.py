@@ -8,9 +8,12 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF0001
 from walmart_e_commerce_sales_data_pipeline_spark.operators.dedup import (
+    containment_pairs,
     exact_dedup,
     jaccard_pairs,
+    jaccard_pairs_from_docs,
     minhash_dedup_pairs,
+    prefix_filter_jaccard_pairs,
     shingle_sets,
     simhash_pairs,
     simhash_signatures,
@@ -349,23 +352,66 @@ def test_quantize_int8_exact_semantics(spark):
         assert r["recon_err_max"] <= r["scale"] / 127.0 + 1e-12
 
 
-def test_minhash_releases_caches_on_failed_job(spark, docs):
-    """The persisted intermediates (per-doc profile / shingle table, banded
-    buckets) must be released even when a job inside minhash_dedup_pairs
-    fails mid-flight — a leaked persist pins executor memory for the rest
-    of the session.
-
-    The failure is injected on the ID column, not the text: the oversized-
-    doc probe reads only length(text) (column pruning drops the poisoned
-    id), so the probe SUCCEEDS, the profile frame is persisted, and the
-    error fires in the eager pair-materialization job — exercising the
-    try/finally release path after the persist exists, not the pre-persist
-    probe."""
-    from pyspark.sql.types import LongType
-
-    from walmart_e_commerce_sales_data_pipeline_spark.operators.dedup import (
-        _has_oversized_docs,
+def _poisoned_triangle_graph(spark, docs, poison, monkeypatch):
+    from walmart_e_commerce_sales_data_pipeline_spark.operators import similarity
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.clusters import (
+        dup_graph_triangles,
     )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3)], "x: long, y: long"
+    ).withColumn("x", poison(F.col("x")))
+    monkeypatch.setattr(similarity, "block_cosine_pairs", lambda *a, **k: pairs)
+    return dup_graph_triangles(spark, SF0001)
+
+
+def _poisoned_ids(docs, poison):
+    return docs.withColumn("doc_id", poison(F.col("doc_id")))
+
+
+# Every operator whose cache lifetime is ``operators.dedup.persisted``,
+# built so that ``poison`` fires in the eager checkpoint.  Most poison the
+# document id.  The fused Jaccard and MinHash paths count their persisted
+# profile first, and that job evaluates every cached column, so they
+# poison the threshold, which only the checkpointed pair filter reads.
+RELEASE_CASES = {
+    "jaccard_pairs": lambda spark, docs, poison, mp: jaccard_pairs(
+        shingle_sets(_poisoned_ids(docs, poison)), 0.5
+    ),
+    "jaccard_pairs_from_docs": lambda spark, docs, poison, mp: (
+        jaccard_pairs_from_docs(docs, poison(F.lit(0.5)))
+    ),
+    "minhash_fused": lambda spark, docs, poison, mp: minhash_dedup_pairs(
+        docs, threshold=poison(F.lit(0.5))
+    ),
+    "minhash_unfused": lambda spark, docs, poison, mp: minhash_dedup_pairs(
+        _poisoned_ids(docs, poison), threshold=0.5, max_shingle_df=50
+    ),
+    "simhash_pairs": lambda spark, docs, poison, mp: simhash_pairs(
+        simhash_signatures(_poisoned_ids(docs, poison))
+    ),
+    "containment_pairs": lambda spark, docs, poison, mp: containment_pairs(
+        shingle_sets(_poisoned_ids(docs, poison)), 0.5
+    ),
+    "prefix_filter_jaccard_pairs": lambda spark, docs, poison, mp: (
+        prefix_filter_jaccard_pairs(_poisoned_ids(docs, poison), 1, 2)
+    ),
+    "dup_graph_triangles": _poisoned_triangle_graph,
+}
+
+
+@pytest.mark.parametrize("build", RELEASE_CASES.values(), ids=RELEASE_CASES.keys())
+def test_releases_caches_on_failed_job(spark, docs, monkeypatch, build):
+    """The persisted intermediates (shingle tables, per-doc profiles,
+    banded buckets, chunk pieces, the triangle pair set) must be released
+    even when the eager checkpoint job fails — a leaked persist pins
+    executor memory for the rest of the session.
+
+    A watcher on ``localCheckpoint`` pins the injection point: the
+    synthetic error must escape exactly one checkpoint call made while
+    the cache manager holds the persist, so the failure exercises the
+    release path after the persist exists, not a job before it."""
+    from pyspark.sql.types import LongType
 
     @F.udf(LongType())
     def boom(i):
@@ -374,19 +420,25 @@ def test_minhash_releases_caches_on_failed_job(spark, docs):
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     assert cache_mgr.isEmpty()
-    broken = docs.withColumn("doc_id", boom("doc_id"))
-    # Pin the injection point: the probe itself survives the poisoned id
-    # (if it raised here, the failure would fire before any persist and
-    # the release assertion below would be vacuous).
-    assert _has_oversized_docs(broken, "text", 65_536) is False
+    cls = type(spark.range(0))
+    checkpoint = cls.localCheckpoint
+    failed_with_cache: list[bool] = []
+
+    def watched(self, *args, **kwargs):
+        cached = not cache_mgr.isEmpty()
+        try:
+            return checkpoint(self, *args, **kwargs)
+        except Exception:
+            failed_with_cache.append(cached)
+            raise
+
+    monkeypatch.setattr(cls, "localCheckpoint", watched)
     with pytest.raises(Exception, match="synthetic mid-job failure"):
-        # Analysis and the probe succeed; the eager localCheckpoint job
-        # evaluates the poisoned id with the profile persist registered,
-        # and dies inside the try/finally.
-        minhash_dedup_pairs(broken, threshold=0.5)
+        build(spark, docs, boom, monkeypatch)
+    assert failed_with_cache == [True], failed_with_cache
     assert cache_mgr.isEmpty(), "persisted intermediates leaked on the error path"
     # And the success path still leaves nothing cached behind.
-    minhash_dedup_pairs(docs, threshold=0.5).collect()
+    build(spark, docs, lambda c: c, monkeypatch).collect()
     assert cache_mgr.isEmpty()
 
 

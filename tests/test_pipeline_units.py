@@ -4,6 +4,7 @@ ported to Spark DataFrames (FIXTURES.md §A1-A2)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -264,3 +265,22 @@ def test_main_end_to_end_on_generated_inputs(spark, tmp_path, monkeypatch):
     pd.testing.assert_frame_equal(got[exact], want[exact])
     filled = ["Weekly_Sales", "CPI", "Unemployment"]
     np.testing.assert_allclose(got[filled], want[filled], rtol=1e-9, atol=0)
+
+
+def test_main_releases_the_join_cache_when_the_means_job_fails(
+    spark, tmp_path, monkeypatch
+):
+    """``transform`` runs the fill-mean job over the persisted join; if it
+    fails, ``main`` must still release that cache before re-raising."""
+    from walmart_e_commerce_sales_data_pipeline_spark import pipeline
+
+    def failing_means(raw_data):
+        raise RuntimeError("synthetic means-job failure")
+
+    csv_path, pq_path = _write_etl_inputs(tmp_path, rows=200)
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(pipeline, "transform", failing_means)
+    with pytest.raises(RuntimeError, match="synthetic means-job failure"):
+        pipeline.main(spark, csv_path, pq_path, output_dir=str(tmp_path / "out"))
+    assert cache_mgr.isEmpty(), "the persisted join leaked on the error path"

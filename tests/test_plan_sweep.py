@@ -11,12 +11,13 @@ longer land green.
 Plan building is driver-side for most queries, but NOT side-effect-free
 for all of them (ADVICE r18): queries that materialize intermediates at
 DataFrame-construction time (eager checkpoints / persist+count) run
-real — bounded, sf0.001 — Spark jobs during the sweep, and their
+real — bounded, sf0.01 — Spark jobs during the sweep, and their
 returned plan hides everything upstream of the materialization behind a
-Scan ExistingRDD / InMemoryTableScan.  For those, AUDIT_FORMS maps the
-query to a fully-lazy interior form (a ``materialize=False`` builder on
-the query) that exposes the complete join graph to this audit; the
-returned default form is audited as well (it is what downstream
+Scan ExistingRDD / InMemoryTableScan.  For the queries in AUDIT_FORMS
+the sweep also builds a fully-lazy interior form: the default builder
+runs with ``persist`` and ``localCheckpoint`` patched to the identity
+(``lazy_audit_frames``), so the complete join graph reaches this audit;
+the returned default form is audited as well (it is what downstream
 consumers see).  Queries whose materialization is control-flow-bound
 (driver count dispatch, convergence loops: the dedup_clusters family,
 dup_graph_pagerank's degree scalar, embedding_top_pc's recurrence)
@@ -29,6 +30,8 @@ brute-force whitelist entries.
 """
 
 from __future__ import annotations
+
+import pytest
 
 from tests.conftest import SF001
 from walmart_e_commerce_sales_data_pipeline_spark import queries as q
@@ -459,9 +462,9 @@ SINGLE_PARTITION_WHITELIST = {
 }
 
 
-# Queries with a construction-time materialization AND a lazy
-# ``materialize=False`` audit form: the sweep audits the interior plan
-# through the lazy form (and still audits the returned default form).
+# Queries with a construction-time persist or localCheckpoint whose
+# interior plan the sweep audits through ``lazy_audit_frames`` (and it
+# still audits the returned default form).
 AUDIT_FORMS = (
     "jaccard_prefix_filter",
     "kmv_jaccard_langs",
@@ -473,15 +476,51 @@ AUDIT_FORMS = (
 )
 
 
+def lazy_audit_frames(spark, names) -> tuple[dict, dict[str, list[str]]]:
+    """Build each named query with ``persist`` and ``localCheckpoint``
+    patched to the identity, so its plan keeps the whole interior.
+
+    The patch goes on the classic class, ``type(spark.range(0))``:
+    it overrides both methods, so patching ``pyspark.sql.DataFrame``
+    would leave every checkpoint in place.  Returns the frames and, per
+    query, the patched calls its build made."""
+    cls = type(spark.range(0))
+    frames: dict = {}
+    calls: dict[str, list[str]] = {}
+
+    def identity(log: list[str], meth: str):
+        def call(self, *args, **kwargs):
+            log.append(meth)
+            return self
+
+        return call
+
+    with pytest.MonkeyPatch.context() as mp:
+        for name in names:
+            calls[name] = []
+            for meth in ("persist", "localCheckpoint"):
+                mp.setattr(cls, meth, identity(calls[name], meth))
+            frames[name] = q.REGISTRY[name].fn(spark, SF001)
+    return frames, calls
+
+
 def test_no_unbounded_nested_loop_joins_or_window_funnels_anywhere(spark):
     offenders: dict[str, str] = {}
     unused_whitelist = set(BNLJ_WHITELIST)
     unused_win_whitelist = set(UNPARTITIONED_WINDOW_WHITELIST)
     unused_sp_whitelist = set(SINGLE_PARTITION_WHITELIST)
-    audit_frames = {
-        name: q.REGISTRY[name].fn(spark, SF001, materialize=False)
-        for name in AUDIT_FORMS
-    }
+    audit_frames, audit_calls = lazy_audit_frames(spark, AUDIT_FORMS)
+    # keep AUDIT_FORMS honest: every entry must materialize something
+    # while it builds, and the patch must leave no materialized leaf in
+    # the audited plan (a patch that silently misses shows up here).
+    idle = [name for name, log in audit_calls.items() if not log]
+    assert not idle, (
+        f"stale AUDIT_FORMS entries (no persist/localCheckpoint): {idle}"
+    )
+    for name, df in audit_frames.items():
+        plan = formatted_plan(df)
+        for leaf in ("ExistingRDD", "InMemoryRelation"):
+            assert leaf not in plan, f"{name}: audit plan still reads {leaf}"
     for name, entry in q.REGISTRY.items():
         df = entry.fn(spark, SF001)
         plan = formatted_plan(df)
@@ -558,13 +597,14 @@ def test_prefix_filter_interior_keeps_broadcasts_and_keyed_joins(spark):
     checkpointed pair set (Scan ExistingRDD tail), so its interior —
     the candidate/positional/verification join graph whose persist-form
     statistics keep the size joins broadcast — must be audited through
-    the lazy ``materialize=False`` form.  Pins: no nested loop anywhere
+    the lazy form (``lazy_audit_frames``).  Pins: no nested loop anywhere
     in the interior, the per-doc rank window stays id-PARTITIONED, and
     the size/frequency joins plan as BroadcastHashJoin (the shingle
     stream's statistics are visible to the planner; a stats-less
     rewrite degrading them to SortMergeJoin was measured 2.5 -> 4.3 s
     at sf0.1 in r18)."""
-    df = q.REGISTRY["jaccard_prefix_filter"].fn(spark, SF001, materialize=False)
+    frames, _ = lazy_audit_frames(spark, ["jaccard_prefix_filter"])
+    df = frames["jaccard_prefix_filter"]
     plan = formatted_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     assert not unpartitioned_windows(df)

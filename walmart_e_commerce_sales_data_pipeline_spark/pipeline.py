@@ -310,24 +310,27 @@ def main(
             .select(*TRANSFORM_INPUT_COLUMNS)
             .persist()
         )
-        # clean_data feeds two sinks (its own CSV and the aggregate) —
-        # persist so the fill/derive/filter runs once, not per sink.
-        clean_data = transform(merged_df).persist()
-        agg_data = avg_weekly_sales_per_month(clean_data)
-
-        tables = {"clean_data": clean_data, "agg_data": agg_data}
+        # Always release the caches: a failed means job or sink must not
+        # pin the persisted plans for the rest of the session.
         try:
-            written = load(
-                tables,
-                output_dir=output_dir,
-                jdbc_url=jdbc_url,
-                single_file=single_file,
-            )
-            validation(spark, written)
+            # clean_data feeds two sinks (its own CSV and the aggregate) —
+            # persist so the fill/derive/filter runs once, not per sink.
+            clean_data = transform(merged_df).persist()
+            try:
+                tables = {
+                    "clean_data": clean_data,
+                    "agg_data": avg_weekly_sales_per_month(clean_data),
+                }
+                written = load(
+                    tables,
+                    output_dir=output_dir,
+                    jdbc_url=jdbc_url,
+                    single_file=single_file,
+                )
+                validation(spark, written)
+            finally:
+                clean_data.unpersist()
         finally:
-            # always release the caches — a failed sink must not pin the
-            # persisted plans for the rest of the session
-            clean_data.unpersist()
             merged_df.unpersist()
         logger.info("Data pipeline execution completed successfully.")
         return tables

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import quality_score
 from ..operators.components import connected_components
-from ..operators.dedup import jaccard_pairs_from_docs
+from ..operators.dedup import jaccard_pairs_from_docs, persisted
 from .dedup import _SHINGLE_CTE, JACCARD_THRESHOLD
 from .registry import register
 from .tables import table
@@ -415,49 +415,47 @@ def dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import block_cosine_pairs
 
     emb = table(spark, sf_dir, "embeddings")
-    pairs = block_cosine_pairs(emb, threshold=_EMB_THRESHOLD).select("x", "y").persist()
-    e1 = pairs.select(F.col("x").alias("a"), F.col("y").alias("b"))
-    e2 = pairs.select(F.col("x").alias("b2"), F.col("y").alias("c"))
-    e3 = pairs.select(F.col("x").alias("a3"), F.col("y").alias("c3"))
-    tri = (
-        e1.join(e2, e1.b == e2.b2)
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .agg(F.count("*").alias("t"))
-    )
-    deg = (
-        pairs.select(F.col("x").alias("id"))
-        .unionAll(pairs.select(F.col("y").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("d"))
-    )
-    summary = deg.agg(
-        F.count("*").alias("n_nodes"),
-        F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges"),
-    )
-    n_edges = pairs.agg(F.count("*").alias("n_edges"))
-    out = (
-        tri.crossJoin(F.broadcast(summary))
-        .crossJoin(F.broadcast(n_edges))
-        .select(
-            "n_nodes",
-            "n_edges",
-            F.col("t").alias("n_triangles"),
-            "n_wedges",
-            F.when(
-                F.col("n_wedges") > 0,
-                F.lit(3.0) * F.col("t") / F.col("n_wedges"),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("clustering_coeff"),
+    # The pair set is read three times by the triangle join, then by the
+    # degree and edge counts: ``persisted`` until the 1-row census
+    # checkpoints (localCheckpoint stores a single summary row).
+    pairs = block_cosine_pairs(emb, threshold=_EMB_THRESHOLD).select("x", "y")
+    with persisted(pairs) as pairs:
+        e1 = pairs.select(F.col("x").alias("a"), F.col("y").alias("b"))
+        e2 = pairs.select(F.col("x").alias("b2"), F.col("y").alias("c"))
+        e3 = pairs.select(F.col("x").alias("a3"), F.col("y").alias("c3"))
+        tri = (
+            e1.join(e2, e1.b == e2.b2)
+            .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
+            .agg(F.count("*").alias("t"))
         )
-    )
-    # Materialize the 1-row census now (localCheckpoint stores a single
-    # summary row) so the pair cache — which the triangle join reads three
-    # times — can be released before returning.  Without this the persist
-    # outlives the query and pins executor memory for the session.
-    out = out.localCheckpoint(eager=True)
-    pairs.unpersist()
-    return out
+        deg = (
+            pairs.select(F.col("x").alias("id"))
+            .unionAll(pairs.select(F.col("y").alias("id")))
+            .groupBy("id")
+            .agg(F.count("*").alias("d"))
+        )
+        summary = deg.agg(
+            F.count("*").alias("n_nodes"),
+            F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges"),
+        )
+        n_edges = pairs.agg(F.count("*").alias("n_edges"))
+        out = (
+            tri.crossJoin(F.broadcast(summary))
+            .crossJoin(F.broadcast(n_edges))
+            .select(
+                "n_nodes",
+                "n_edges",
+                F.col("t").alias("n_triangles"),
+                "n_wedges",
+                F.when(
+                    F.col("n_wedges") > 0,
+                    F.lit(3.0) * F.col("t") / F.col("n_wedges"),
+                )
+                .otherwise(F.lit(0.0))
+                .alias("clustering_coeff"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(

@@ -445,15 +445,8 @@ _PREFIX_FILTER_SQL = f"""
     "candidate-bounded verification — nothing all-pairs",
     tags=("dedup", "similarity", "join", "window"),
 )
-def jaccard_prefix_filter(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
-    """``materialize=False`` is the plan-audit form (full lazy interior
-    plan, no persist/checkpoint — see the operator docstring); the
-    default is the executable persist-then-checkpoint form."""
+def jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import prefix_filter_jaccard_pairs
 
     docs = table(spark, sf_dir, "documents")
-    return prefix_filter_jaccard_pairs(
-        docs, _PF_NUM, _PF_DEN, materialize=materialize
-    )
+    return prefix_filter_jaccard_pairs(docs, _PF_NUM, _PF_DEN)

@@ -698,9 +698,7 @@ def _ehb_oracle() -> str:
     "distinct hour-user pairs; nothing pairwise, nothing collected",
     tags=("sketch", "bloom", "event-time", "portable", "streaming-twin"),
 )
-def events_hourly_bloom_returns(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def events_hourly_bloom_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     # Materialize the distinct hour-user frame once (r19, VERDICT r18
     # item 6): it fans into SIX consumers (per-hour totals, the bloom
@@ -709,16 +707,15 @@ def events_hourly_bloom_returns(
     # under-measured it — the sf1 A/B shows real byte savings: shuffle
     # 88.9 -> 74.7 MB and wall 5.78 -> 5.43 s at sf1, 3.03 -> 1.97 s at
     # sf0.1 (min of 2, plans/r19).  Bounded state: one row per distinct
-    # (hour, user).  ``materialize=False`` is the plan-audit form.
+    # (hour, user).
     hu = (
         ev.select(
             F.window("ts", "1 hour").getField("start").alias("hour_ts"),
             "user_id",
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        hu = hu.localCheckpoint(eager=True)
     nh = hu.groupBy("hour_ts").agg(
         F.count(F.lit(1)).cast("long").alias("n_hour_users")
     )

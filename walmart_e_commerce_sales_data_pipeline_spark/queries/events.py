@@ -955,9 +955,7 @@ def events_forward_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Kaplan-Meier time-to-conversion survival curve --------------------------
 
 
-def _survival_subjects(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def _survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared subject construction for the survival queries: one row per
     user with a first 'view' — ``(user_id, first_view, day, ev)`` where ``day`` is
     the duration from first view to first qualifying purchase (or to the
@@ -977,9 +975,7 @@ def _survival_subjects(
     plans/r19): survival_km_logrank 4.39 -> 3.67 s at sf0.1 and
     3.68 -> 2.34 s at sf1; survival_logrank_stratified 3.11 -> 2.04 s /
     2.59 -> 2.12 s; survival_time_to_purchase 1.17 -> 0.75 s at sf0.1,
-    sf1 neutral.  Bounded state: one row per user with a first view.
-    ``materialize=False`` is the plan-audit form (full lazy plan for
-    the sweep; see test_plan_sweep.AUDIT_FORMS)."""
+    sf1 neutral.  Bounded state: one row per user with a first view."""
     ev = table(spark, sf_dir, "events")
     t0 = (
         ev.filter(F.col("event_type") == "view")
@@ -994,7 +990,7 @@ def _survival_subjects(
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_purchase"))
     )
-    subj = (
+    return (
         t0.join(conv, "user_id", "left")
         .crossJoin(F.broadcast(anchor))
         .select(
@@ -1015,10 +1011,8 @@ def _survival_subjects(
             .otherwise(F.lit(0))
             .alias("ev"),
         )
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        subj = subj.localCheckpoint(eager=True)
-    return subj
 
 
 @register(
@@ -1105,12 +1099,10 @@ def _survival_subjects(
     "sort of subjects",
     tags=("event-time", "window", "survival", "funnel"),
 )
-def survival_time_to_purchase(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def survival_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    subj = _survival_subjects(spark, sf_dir, materialize).select("day", "ev")
+    subj = _survival_subjects(spark, sf_dir).select("day", "ev")
     days = subj.groupBy("day").agg(
         F.sum("ev").cast("long").alias("n_event"),
         F.sum(F.lit(1) - F.col("ev")).cast("long").alias("n_censored"),
@@ -1422,10 +1414,8 @@ def _logrank_frames(subj, strata: list[str]):
     "per-subject window, no global sort of subjects",
     tags=("event-time", "window", "survival", "funnel", "ab-test"),
 )
-def survival_km_logrank(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
-    subj = _survival_subjects(spark, sf_dir, materialize).select(
+def survival_km_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    subj = _survival_subjects(spark, sf_dir).select(
         F.when(F.col("user_id") % 2 == 0, F.lit("A"))
         .otherwise(F.lit("B"))
         .alias("cohort"),
@@ -1664,10 +1654,8 @@ def survival_km_logrank(
     "per-subject window",
     tags=("event-time", "window", "survival", "ab-test", "stratified"),
 )
-def survival_logrank_stratified(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
-    subj = _survival_subjects(spark, sf_dir, materialize).select(
+def survival_logrank_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    subj = _survival_subjects(spark, sf_dir).select(
         F.floor(
             F.datediff(
                 F.to_date("first_view"), F.lit("2024-01-01").cast("date")

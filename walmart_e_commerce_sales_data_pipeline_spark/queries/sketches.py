@@ -550,10 +550,7 @@ def _kj_hash_sql(str_type: str) -> str:
     tags=("sketch", "text", "distinct", "portable", "dedup"),
 )
 def kmv_jaccard_langs(
-    spark: SparkSession,
-    sf_dir: str,
-    sketch_only: bool = False,
-    materialize: bool = True,
+    spark: SparkSession, sf_dir: str, sketch_only: bool = False
 ) -> DataFrame:
     """``sketch_only=True`` drops the exact-Jaccard branch (the
     shingle-distinct cardinalities and the bounded-multiplicity shingle
@@ -561,12 +558,7 @@ def kmv_jaccard_langs(
     the oracle) and returns only the signature-derived columns
     ``(lang_a, lang_b, sig_union_k, sig_in_both, kmv_jaccard_est)`` —
     the production path, which moves pairs x <= 128 signature rows
-    however big the corpus.  Default off; bench.py measures both.
-
-    ``materialize=False`` skips the shingle-stream materialization and
-    returns the fully lazy plan — plan-audit use only (the plan sweep
-    reads the interior join shapes through it); never execute it, the
-    corpus would be re-shingled once per consumer."""
+    however big the corpus.  Default off; bench.py measures both."""
     from ..operators.dedup import _spread_narrow
 
     docs = table(spark, sf_dir, "documents")
@@ -595,7 +587,7 @@ def kmv_jaccard_langs(
         .select("lang", F.explode(word_shingles(F.col("_t"), 3)).alias("shingle"))
         .distinct()
     )
-    if materialize and not sketch_only:
+    if not sketch_only:
         sh = sh.localCheckpoint(eager=True)
     h = sh.select("lang", F.expr(_kj_hash_sql("STRING")).alias("hv")).distinct()
     wl = Window.partitionBy("lang").orderBy("hv")
@@ -779,17 +771,13 @@ _KD_SCALE = float(16**12)  # 2^48, the portable-hash value range
     tags=("sketch", "text", "distinct", "portable", "dedup"),
 )
 def kmv_set_difference(
-    spark: SparkSession,
-    sf_dir: str,
-    sketch_only: bool = False,
-    materialize: bool = True,
+    spark: SparkSession, sf_dir: str, sketch_only: bool = False
 ) -> DataFrame:
     """``sketch_only=True`` drops the exact branch (shingle cardinalities
     + the self-join intersection, carried for the oracle) and returns the
     signature-derived difference estimates only — the production A-vs-B
     audit path (see kmv_jaccard_langs).  Default off; bench.py measures
-    both tiers.  ``materialize=False`` is the plan-audit form (see
-    kmv_jaccard_langs) — never execute it."""
+    both tiers."""
     from ..operators.dedup import _spread_narrow
 
     docs = table(spark, sf_dir, "documents")
@@ -804,7 +792,7 @@ def kmv_set_difference(
         .select("lang", F.explode(word_shingles(F.col("_t"), 3)).alias("shingle"))
         .distinct()
     )
-    if materialize and not sketch_only:
+    if not sketch_only:
         sh = sh.localCheckpoint(eager=True)
     h = sh.select("lang", F.expr(_kj_hash_sql("STRING")).alias("hv")).distinct()
     wl = Window.partitionBy("lang").orderBy("hv")
