@@ -1,12 +1,20 @@
-"""Differential tests on the reference's bundled datasets.
+"""Differential tests on the reference's bundled datasets, plus the
+``extract`` pre-flight checks that go with them.
 
+The five golden tests read ``grocery_sales.csv`` and ``extra_data.parquet``
+under ``REFERENCE_DIR`` and are skipped where either file is absent.
 Anchors from actually running the reference (BASELINE.md / FIXTURES.md §B3):
 merged 20,000 rows · clean_data 10,971 rows · agg_data 12 rows with golden
 values; fill-means Weekly_Sales 24272.506712 / CPI 215.658167 /
 Unemployment 7.647960.
+
+The gzip, header and missing-``index`` tests write their inputs into
+``tmp_path`` and run everywhere.
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +32,14 @@ GOLDEN_AGG = {
     11: 43455.06, 12: 44893.31,
 }
 
+needs_reference_data = pytest.mark.skipif(
+    not (
+        Path(REFERENCE_DIR, "grocery_sales.csv").exists()
+        and Path(REFERENCE_DIR, "extra_data.parquet").exists()
+    ),
+    reason=f"reference datasets absent from {REFERENCE_DIR}",
+)
+
 
 @pytest.fixture(scope="module")
 def merged(spark):
@@ -34,6 +50,7 @@ def merged(spark):
     )
 
 
+@needs_reference_data
 def test_extract_cardinality_and_schema(merged):
     assert merged.count() == 20000
     # 6 left + 13 right - 1 shared key = 18 columns, key first
@@ -41,6 +58,7 @@ def test_extract_cardinality_and_schema(merged):
     assert merged.columns[0] == "index"
 
 
+@needs_reference_data
 def test_fill_means_match_reference(merged):
     row = merged.select(
         F.avg("Weekly_Sales").alias("ws"),
@@ -52,6 +70,7 @@ def test_fill_means_match_reference(merged):
     assert row["un"] == pytest.approx(7.647960, abs=1e-4)
 
 
+@needs_reference_data
 def test_clean_data_matches_reference(merged):
     clean = transform(merged)
     assert clean.count() == 10971
@@ -67,6 +86,7 @@ def test_clean_data_matches_reference(merged):
     assert stats["null_months"] == 25  # FIXTURES.md §B3
 
 
+@needs_reference_data
 def test_agg_data_matches_golden(merged):
     agg = avg_weekly_sales_per_month(transform(merged))
     rows = agg.collect()
@@ -77,6 +97,7 @@ def test_agg_data_matches_golden(merged):
     assert [r["Month"] for r in rows] == list(range(1, 13))
 
 
+@needs_reference_data
 def test_end_to_end_load_and_validation(spark, tmp_path):
     from walmart_e_commerce_sales_data_pipeline_spark.pipeline import main
 
@@ -96,18 +117,22 @@ def test_gzipped_csv_end_to_end(spark, tmp_path):
     (``pd.read_csv('...csv.gz')``, wallmart_pipeline.py:52): the header
     pre-flight must not raw-read gzip bytes — it falls back to
     ``spark.read.text``, which decodes by codec suffix — and the main CSV
-    scan likewise decompresses transparently."""
+    scan likewise decompresses transparently.
+
+    The generated CSV's keys are distinct and all of them are in the
+    parquet, so every CSV row joins exactly once."""
     import gzip
 
+    from tests.test_pipeline_units import _write_etl_inputs
     from walmart_e_commerce_sales_data_pipeline_spark.pipeline import extract
 
-    with open(f"{REFERENCE_DIR}/grocery_sales.csv", "rb") as fh:
-        raw = fh.read()
+    rows = 3000
+    csv_path, pq_path = _write_etl_inputs(tmp_path, rows=rows)
     gz = tmp_path / "grocery_sales.csv.gz"
-    with gzip.open(gz, "wb") as out:
-        out.write(raw)
-    merged = extract(spark, str(gz), f"{REFERENCE_DIR}/extra_data.parquet")
-    assert merged.count() == 20000
+    with open(csv_path, "rb") as fh, gzip.open(gz, "wb") as out:
+        out.write(fh.read())
+    merged = extract(spark, str(gz), pq_path)
+    assert merged.count() == rows
     assert merged.columns[0] == "index"
 
 
@@ -117,10 +142,14 @@ def test_csv_without_index_header_raises(spark, tmp_path):
     file would otherwise silently misbind (review finding)."""
     bad = tmp_path / "reordered.csv"
     bad.write_text('"a","b","c","d","e","f"\n1,2,3,4,5,6\n')
+    # the parquet has ``index``, so only the CSV header check can raise
+    spark.createDataFrame([(1,)], "index: long").write.mode("overwrite").parquet(
+        str(tmp_path / "ok.parquet")
+    )
     from walmart_e_commerce_sales_data_pipeline_spark.pipeline import extract
 
     with pytest.raises(KeyError):
-        extract(spark, str(bad), f"{REFERENCE_DIR}/extra_data.parquet")
+        extract(spark, str(bad), str(tmp_path / "ok.parquet"))
 
 
 def test_missing_index_column_raises(spark, tmp_path):
