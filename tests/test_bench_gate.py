@@ -3,46 +3,55 @@ item 2): BENCH_r{N}.json must never be an unmarked loaded run.
 
 ``bench.wait_for_quiet_machine`` is a pure function with an injectable
 sleep, so the retry/refusal behavior is pinned here without needing a
-loaded (or quiet) machine.  No Spark session involved.
+loaded (or quiet) machine.  ``bench.probe_verdict`` is the one verdict
+the interleaved probes and the end calibration share.  No Spark session
+involved.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import CAL_GATE_SEC, wait_for_quiet_machine  # noqa: E402
+
+# Signals inside their gates (single-thread 0.40 s, scan 0.30 s), for
+# checks that vary only the other signals.
+QUIET_ST = [0.28, 0.29, 0.30]
+QUIET_SCAN = 0.13
 
 
 def test_quiet_first_try_returns_immediately():
     calls, sleeps = [], []
-    runs, trusted, history = wait_for_quiet_machine(
-        lambda: calls.append(1) or [0.30, 0.31, 0.32],
+    (par, _), trusted, history = wait_for_quiet_machine(
+        lambda: calls.append(1) or ([0.30, 0.31, 0.32], QUIET_ST),
         gate=0.33,
         attempts=8,
         sleep_sec=45,
         sleep=sleeps.append,
     )
     assert trusted is True
-    assert runs == [0.30, 0.31, 0.32]
-    assert history == [runs]
+    assert par == [0.30, 0.31, 0.32]
+    assert history == [(par, QUIET_ST)]
     assert len(calls) == 1 and sleeps == []  # no wasted wait on a quiet box
 
 
 def test_loaded_then_quiet_retries_until_gate_met():
     waves = iter([[0.55, 0.60, 0.58], [0.48, 0.52, 0.50], [0.29, 0.31, 0.30]])
     sleeps = []
-    runs, trusted, history = wait_for_quiet_machine(
-        lambda: next(waves),
+    (par, _), trusted, history = wait_for_quiet_machine(
+        lambda: (next(waves), QUIET_ST),
         gate=0.33,
         attempts=8,
         sleep_sec=45,
         sleep=sleeps.append,
     )
     assert trusted is True
-    assert min(runs) == 0.29
+    assert min(par) == 0.29
     assert len(history) == 3  # two loaded attempts + the quiet one
     assert sleeps == [45, 45]  # slept between attempts, not after success
 
@@ -54,22 +63,25 @@ def test_never_quiet_exhausts_budget_and_reports_untrusted():
     n, sleeps = [0], []
     def loaded():
         n[0] += 1
-        return [0.55, 0.60, 0.58]
+        return [0.55, 0.60, 0.58], QUIET_ST
 
-    runs, trusted, history = wait_for_quiet_machine(
+    (par, _), trusted, history = wait_for_quiet_machine(
         loaded, gate=0.33, attempts=4, sleep_sec=10, sleep=sleeps.append
     )
     assert trusted is False
     assert n[0] == 4 and len(history) == 4
     assert sleeps == [10, 10, 10]  # no sleep after the final attempt
-    assert runs == [0.55, 0.60, 0.58]
+    assert par == [0.55, 0.60, 0.58]
 
 
 def test_gate_uses_min_of_runs_not_mean():
     """One quiet run among noisy ones is enough: min-of-3 is the repo's
     standing measurement rule and the gate must use the same statistic."""
-    runs, trusted, _ = wait_for_quiet_machine(
-        lambda: [0.90, 0.31, 0.88], gate=0.33, attempts=1, sleep=lambda s: None
+    _, trusted, _ = wait_for_quiet_machine(
+        lambda: ([0.90, 0.31, 0.88], [0.85, 0.39, 0.90]),
+        gate=0.33,
+        attempts=1,
+        sleep=lambda s: None,
     )
     assert trusted is True
 
@@ -128,16 +140,19 @@ def test_end_calibration_min_of_five_absorbs_transient_wave():
     """VERDICT r13 item 3: the end gate cannot retry (re-running later says
     nothing about the closed window), so its one shot takes five samples.
     A transient ambient blip that inflates four of five runs must not
-    untrust the sweep as long as ONE sample clears the unchanged gate."""
-    from bench import END_CAL_RUNS, end_calibration_trusted
+    untrust the sweep as long as ONE sample clears the unchanged gate.
+    bench.main judges the end samples' mins with ``probe_verdict``."""
+    from bench import END_CAL_RUNS, SCAN_GATE_SEC, probe_verdict
 
     assert END_CAL_RUNS == 5
     # the r13 failure shape: 1-3 ms over the gate on a light wave — with
     # five samples one quiet run slips through
-    assert end_calibration_trusted(
-        [0.333, 0.331, 0.329, 0.332, 0.334],
-        [0.28, 0.29, 0.30, 0.28, 0.29],
-        gate=0.33,
+    assert probe_verdict(
+        min([0.333, 0.331, 0.329, 0.332, 0.334]),
+        min([0.28, 0.29, 0.30, 0.28, 0.29]),
+        QUIET_SCAN,
+        0.33,
+        SCAN_GATE_SEC,
         st_gate=0.40,
     )
 
@@ -145,27 +160,38 @@ def test_end_calibration_min_of_five_absorbs_transient_wave():
 def test_end_calibration_refuses_sustained_load():
     """The refusal path: a sustained load fails ALL five samples on either
     signal — the gate value is unchanged, so min-of-5 cannot loosen it."""
-    from bench import end_calibration_trusted
+    from bench import SCAN_GATE_SEC, probe_verdict
 
     quiet_st = [0.28, 0.29, 0.30, 0.28, 0.29]
-    assert not end_calibration_trusted(
-        [0.55, 0.58, 0.61, 0.57, 0.56], quiet_st, gate=0.33, st_gate=0.40
+    assert not probe_verdict(
+        min([0.55, 0.58, 0.61, 0.57, 0.56]),
+        min(quiet_st),
+        QUIET_SCAN,
+        0.33,
+        SCAN_GATE_SEC,
+        st_gate=0.40,
     )
     # serial-only load is equally refused (r12 item 7 carried forward)
-    assert not end_calibration_trusted(
-        [0.30, 0.31, 0.29, 0.30, 0.31],
-        [0.85, 0.88, 0.90, 0.86, 0.87],
-        gate=0.33,
+    assert not probe_verdict(
+        min([0.30, 0.31, 0.29, 0.30, 0.31]),
+        min([0.85, 0.88, 0.90, 0.86, 0.87]),
+        QUIET_SCAN,
+        0.33,
+        SCAN_GATE_SEC,
         st_gate=0.40,
     )
 
 
 def test_end_calibration_uses_min_not_mean():
-    from bench import end_calibration_trusted
+    from bench import SCAN_GATE_SEC, probe_verdict
 
-    assert end_calibration_trusted(
-        [0.90, 0.88, 0.31, 0.89, 0.91], [0.39, 0.85, 0.90, 0.88, 0.86],
-        gate=0.33, st_gate=0.40,
+    assert probe_verdict(
+        min([0.90, 0.88, 0.31, 0.89, 0.91]),
+        min([0.39, 0.85, 0.90, 0.88, 0.86]),
+        QUIET_SCAN,
+        0.33,
+        SCAN_GATE_SEC,
+        st_gate=0.40,
     )
 
 
@@ -212,13 +238,12 @@ def test_probe_verdict_requires_both_signals():
     its 0.40 gate (0.334/0.356) — the parallel signal (gate 0.33) read
     over at that moment.  Each probe therefore takes BOTH signals, same
     gate values as the endpoints; either signal over its gate fails the
-    probe.  Mirrors the trusted_abs refusal-history verdict bench.main's
-    _probe records beside the r16 relative-band verdict (the live
-    ``trusted`` flag — see the par_band tests below)."""
-    from bench import CAL_GATE_SEC, CAL_ST_GATE_SEC
+    probe.  Checked on ``probe_verdict`` itself, with the parallel band
+    at the absolute gate and a quiet scan."""
+    from bench import CAL_GATE_SEC, SCAN_GATE_SEC, probe_verdict
 
     def verdict(par_min, st_min):
-        return par_min <= CAL_GATE_SEC and st_min <= CAL_ST_GATE_SEC
+        return probe_verdict(par_min, st_min, QUIET_SCAN, CAL_GATE_SEC, SCAN_GATE_SEC)
 
     assert verdict(0.29, 0.30) is True
     # the measured r15 wave shape: serial inside its gate, parallel over
@@ -231,11 +256,15 @@ def test_run_level_flag_requires_all_probes_quiet():
     """The r14 blind spot closed: quiet endpoints + one loaded interior
     probe must NOT stamp the run trusted.  Mirrors bench.main's
     composition: start AND end AND all interleaved probes."""
-    from bench import CAL_ST_GATE_SEC, end_calibration_trusted
+    from bench import CAL_ST_GATE_SEC, SCAN_GATE_SEC, probe_verdict
 
     start_trusted = True
-    end_trusted = end_calibration_trusted(
-        [0.30, 0.31, 0.29, 0.30, 0.31], [0.28, 0.29, 0.30, 0.28, 0.29]
+    end_trusted = probe_verdict(
+        min([0.30, 0.31, 0.29, 0.30, 0.31]),
+        min([0.28, 0.29, 0.30, 0.28, 0.29]),
+        QUIET_SCAN,
+        CAL_GATE_SEC,
+        SCAN_GATE_SEC,
     )
     probes = [
         {"min": 0.28, "trusted": 0.28 <= CAL_ST_GATE_SEC},
@@ -253,15 +282,15 @@ def test_par_band_anchored_to_trusted_start_floored_by_absolute_gate():
     start calibration — floored by the unchanged absolute gate so the
     policy is never STRICTER than the r11 rule, and falling back to the
     absolute gate when the start never went quiet (anchor unreliable)."""
-    from bench import CAL_GATE_SEC, PROBE_PAR_REL_BAND, par_band_sec
+    from bench import CAL_GATE_SEC, PROBE_PAR_REL_BAND, band_sec
 
     assert PROBE_PAR_REL_BAND == 1.3
     # r15's actual anchor: start calibration 0.288 -> band 0.3744
-    assert abs(par_band_sec(0.288, True) - 0.3744) < 1e-9
+    assert abs(band_sec(0.288, True, CAL_GATE_SEC, PROBE_PAR_REL_BAND) - 0.3744) < 1e-9
     # a fast box (anchor 0.20 -> 1.3x = 0.26) keeps the absolute floor
-    assert par_band_sec(0.20, True) == CAL_GATE_SEC
+    assert band_sec(0.20, True, CAL_GATE_SEC, PROBE_PAR_REL_BAND) == CAL_GATE_SEC
     # untrusted start: the anchor says nothing, absolute gate applies
-    assert par_band_sec(0.55, False) == CAL_GATE_SEC
+    assert band_sec(0.55, False, CAL_GATE_SEC, PROBE_PAR_REL_BAND) == CAL_GATE_SEC
 
 
 def test_relative_band_accepts_the_r15_ambient_floor():
@@ -270,9 +299,9 @@ def test_relative_band_accepts_the_r15_ambient_floor():
     0.33 gate, on a run whose walls matched the judge's idle re-timings.
     The near-anchor ambient-floor probes (e.g. 0.343 at anchor 0.288,
     1.19x) are now trusted; the single-thread signal stays absolute."""
-    from bench import CAL_ST_GATE_SEC, par_band_sec
+    from bench import CAL_ST_GATE_SEC, PROBE_PAR_REL_BAND, band_sec
 
-    band = par_band_sec(0.288, True)
+    band = band_sec(0.288, True, CAL_GATE_SEC, PROBE_PAR_REL_BAND)
 
     def verdict(par_min, st_min):
         return par_min <= band and st_min <= CAL_ST_GATE_SEC
@@ -293,9 +322,9 @@ def test_relative_band_still_refuses_r14_shape_waves():
     multiples of the anchor — far outside the 1.3x band.  r15's own
     measured mid-sweep waves (par_min 0.456/0.572 at anchor 0.288, i.e.
     1.58x/1.99x) are refused too."""
-    from bench import CAL_ST_GATE_SEC, par_band_sec
+    from bench import CAL_ST_GATE_SEC, PROBE_PAR_REL_BAND, band_sec
 
-    band = par_band_sec(0.288, True)
+    band = band_sec(0.288, True, CAL_GATE_SEC, PROBE_PAR_REL_BAND)
 
     def verdict(par_min, st_min):
         return par_min <= band and st_min <= CAL_ST_GATE_SEC
@@ -309,21 +338,25 @@ def test_end_calibration_accepts_probe_band_gate():
     """The end gate shares the probes' no-retry argument, so bench.main
     passes it the same run-anchored parallel band; the st side stays on
     the absolute gate."""
-    from bench import end_calibration_trusted, par_band_sec
+    from bench import PROBE_PAR_REL_BAND, SCAN_GATE_SEC, band_sec, probe_verdict
 
-    band = par_band_sec(0.288, True)
+    band = band_sec(0.288, True, CAL_GATE_SEC, PROBE_PAR_REL_BAND)
     # the r15 shape that over-refused: end par min 0.345 (ambient floor),
     # serial quiet — now trusted under the band
-    assert end_calibration_trusted(
-        [0.40, 0.38, 0.345, 0.39, 0.41],
-        [0.28, 0.29, 0.30, 0.28, 0.29],
-        gate=band,
+    assert probe_verdict(
+        min([0.40, 0.38, 0.345, 0.39, 0.41]),
+        min([0.28, 0.29, 0.30, 0.28, 0.29]),
+        QUIET_SCAN,
+        band,
+        SCAN_GATE_SEC,
     )
     # a sustained end-of-run wave still fails all five samples
-    assert not end_calibration_trusted(
-        [0.55, 0.58, 0.61, 0.57, 0.56],
-        [0.28, 0.29, 0.30, 0.28, 0.29],
-        gate=band,
+    assert not probe_verdict(
+        min([0.55, 0.58, 0.61, 0.57, 0.56]),
+        min([0.28, 0.29, 0.30, 0.28, 0.29]),
+        QUIET_SCAN,
+        band,
+        SCAN_GATE_SEC,
     )
 
 
@@ -387,6 +420,8 @@ def test_apply_segment_splice_replaces_refused_walls_in_place():
         walls={"q1": 2.0, "q2": 2.5},
         rruns={"q1": [2.0, 2.3], "q2": [2.5, 2.6]},
         rmetrics={"q1": {"shuffle": 10}},  # q2's metrics failed to capture
+        loadavgs={"q1": 9.5, "q2": 9.1, "q3": 0.3},
+        rloads={"q1": 0.4, "q2": 0.5},
     )
     assert sorted(spliced) == ["q1", "q2"]
     assert timings == {"q1": 2.0, "q2": 2.5, "q3": 1.0}
@@ -402,17 +437,17 @@ def test_scan_band_anchored_to_trusted_start_floored_by_absolute_gate():
     """r18 scan gate (VERDICT r17 item 4): same relative-band method as
     the parallel gate — max(absolute, band * trusted anchor), absolute
     fallback when the start scan itself never cleared the gate."""
-    from bench import SCAN_GATE_SEC, SCAN_REL_BAND, scan_band_sec
+    from bench import SCAN_GATE_SEC, SCAN_REL_BAND, band_sec
 
     assert SCAN_GATE_SEC == 0.30 and SCAN_REL_BAND == 1.5
     # quiet r17 anchors (start scan min 0.185-0.233): band floored by abs
-    assert scan_band_sec(0.185, True) == 0.30
-    assert scan_band_sec(0.211, True) == max(0.30, 1.5 * 0.211)
+    assert band_sec(0.185, True, SCAN_GATE_SEC, SCAN_REL_BAND) == 0.30
+    assert band_sec(0.211, True, SCAN_GATE_SEC, SCAN_REL_BAND) == max(0.30, 1.5 * 0.211)
     # untrusted anchor: conservative absolute fallback
-    assert scan_band_sec(0.9, False) == 0.30
+    assert band_sec(0.9, False, SCAN_GATE_SEC, SCAN_REL_BAND) == 0.30
     # never stricter than the absolute rule
     for anchor in (0.05, 0.15, 0.25, 0.40):
-        assert scan_band_sec(anchor, True) >= SCAN_GATE_SEC
+        assert band_sec(anchor, True, SCAN_GATE_SEC, SCAN_REL_BAND) >= SCAN_GATE_SEC
 
 
 def test_probe_verdict_triple_signal_catches_r17_scan_phase():
@@ -421,9 +456,17 @@ def test_probe_verdict_triple_signal_catches_r17_scan_phase():
     byte-identical queries inflated 2-3x on the scan path.  The
     dual-signal verdict accepted that probe; the r18 triple-signal
     verdict must refuse it on the scan signal alone."""
-    from bench import CAL_ST_GATE_SEC, probe_verdict, scan_band_sec
+    from bench import (
+        CAL_ST_GATE_SEC,
+        SCAN_GATE_SEC,
+        SCAN_REL_BAND,
+        band_sec,
+        probe_verdict,
+    )
 
-    par_band, scan_band = 0.398, scan_band_sec(0.211, True)  # quiet anchors
+    # quiet anchors
+    par_band = 0.398
+    scan_band = band_sec(0.211, True, SCAN_GATE_SEC, SCAN_REL_BAND)
     # quiet probe (r17 committed-sidecar floor): all three inside
     assert probe_verdict(0.306, 0.224, 0.13, par_band, scan_band) is True
     # the r17 phase: par/st quiet, scan 2-3x the 0.10-0.20 quiet floor
@@ -443,7 +486,7 @@ def test_quiet_r17_sidecar_probes_pass_the_new_scan_band():
     probe scan_min in the four committed r17 sf0.1 sidecars (0.086-0.196)
     must pass the r18 band under its own run's start anchor, so turning
     the gate on cannot have refused any wall the r17 policy trusted."""
-    from bench import probe_verdict, scan_band_sec
+    from bench import SCAN_GATE_SEC, SCAN_REL_BAND, band_sec, probe_verdict
 
     runs = {  # start scan min -> probe scan_mins (committed sidecars)
         0.211: [0.17, 0.155, 0.154, 0.147, 0.147, 0.148, 0.113, 0.185,
@@ -456,7 +499,7 @@ def test_quiet_r17_sidecar_probes_pass_the_new_scan_band():
                 0.105, 0.11, 0.126, 0.091, 0.086, 0.114, 0.09, 0.099],
     }
     for anchor, mins in runs.items():
-        band = scan_band_sec(anchor, anchor <= 0.30)
+        band = band_sec(anchor, anchor <= 0.30, SCAN_GATE_SEC, SCAN_REL_BAND)
         for m in mins:
             assert probe_verdict(0.1, 0.1, m, 0.398, band), (anchor, m)
 
@@ -502,3 +545,50 @@ def test_result_line_keeps_parallelism_in_every_tier():
     assert tiers[2]["errors"] == ["q[retry]"]
     for tier in tiers:
         assert tier["cpus"] == 8 and tier["default_parallelism"] == 8
+
+
+def _env_reads(tree: ast.AST) -> list[str]:
+    """Names of the environment variables a module reads through
+    ``os.environ.get``, ``os.environ[...]`` or ``os.getenv``."""
+
+    def is_environ(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    names = []
+    for node in ast.walk(tree):
+        key = None
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            if (f.attr == "get" and is_environ(f.value)) or (
+                f.attr == "getenv"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "os"
+            ):
+                key = node.args[0] if node.args else None
+        elif isinstance(node, ast.Subscript) and is_environ(node.value):
+            key = node.slice
+        if key is not None:
+            assert isinstance(key, ast.Constant), ast.dump(key)
+            names.append(key.value)
+    return names
+
+
+def test_bench_reads_only_deployment_env_vars():
+    """The trust gates are constants: the only settings bench.py takes
+    from the environment are the SF dir and the core count."""
+    with open(os.path.join(ROOT, "bench.py")) as fh:
+        tree = ast.parse(fh.read())
+    assert sorted(set(_env_reads(tree))) == ["SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR"]
+    # the walker sees every spelling of a read
+    probe = ast.parse(
+        "import os\n"
+        "os.environ.get('A', '1')\n"
+        "os.environ['B']\n"
+        "os.getenv('C')\n"
+    )
+    assert _env_reads(probe) == ["A", "B", "C"]

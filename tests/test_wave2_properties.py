@@ -8,7 +8,7 @@ reference on negative operands."""
 from __future__ import annotations
 
 import duckdb
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -43,6 +43,8 @@ SLOW = settings(
         max_size=60,
     )
 )
+# hi - lo one subnormal wide: w = (hi - lo) / B underflows to 0.0
+@example(rows=[("a", 0.0), ("a", 5e-324)])
 def test_histogram_cells_invariants(spark, rows):
     """Cell counts sum to the group size, bucket ids stay in [0, B-1],
     per-group cell count never exceeds B, and min/max values land in the

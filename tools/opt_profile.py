@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Per-query optimization profiler (round 18, measure-first discipline).
+"""Per-query optimization profiler (measure-first discipline).
 
 For each named query: run it ``--runs`` times cache-cold exactly the way
 bench.py does (``fn(spark, SF_DIR).collect()`` under a fresh
@@ -19,7 +19,7 @@ Usage:
     python tools/opt_profile.py --top 20            # 20 worst by sidecar
 
 Output: one JSON line per query on stdout plus a summary; plans land in
-plans/r18/ for the optimization evidence trail.
+plans/$OPT_PLANS_ROUND/ (default r19) for the optimization evidence trail.
 """
 
 from __future__ import annotations

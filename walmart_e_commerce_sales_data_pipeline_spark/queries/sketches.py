@@ -78,6 +78,13 @@ def histogram_cells(
             F.count(F.lit(1)).alias("n"),
         )
     w = (F.col("hi") - F.col("lo")) / F.lit(float(n_buckets))
+    # ``w`` underflows to 0.0 when hi - lo is only a few subnormals wide
+    # (lo 0.0, hi 5e-324): scale before dividing there, so ANSI mode does
+    # not raise DIVIDE_BY_ZERO.  Every other input has w > 0 and keeps
+    # the ``(x-lo)/w`` formula the DuckDB oracle mirrors.
+    offset = F.when(w > 0, (x - F.col("lo")) / w).otherwise(
+        (x - F.col("lo")) * F.lit(float(n_buckets)) / (F.col("hi") - F.col("lo"))
+    )
     # Clamp BOTH ends (as fixed_bucket_expr does): with caller-supplied
     # bounds — the documented sharded / footer-stats two-phase use — a shard
     # value outside [lo, hi] must land in an edge bucket, not a negative or
@@ -87,7 +94,7 @@ def histogram_cells(
         F.greatest(
             F.lit(0),
             F.least(
-                F.floor((x - F.col("lo")) / w).cast("int"),
+                F.floor(offset).cast("int"),
                 F.lit(n_buckets - 1),
             ),
         )
