@@ -19,9 +19,10 @@ runs with ``persist`` and ``localCheckpoint`` patched to the identity
 (``lazy_audit_frames``), so the complete join graph reaches this audit;
 the returned default form is audited as well (it is what downstream
 consumers see).  Queries whose materialization is control-flow-bound
-(driver count dispatch, convergence loops: the dedup_clusters family,
-dup_graph_pagerank's degree scalar, embedding_top_pc's recurrence)
-cannot be audited lazily end-to-end — their interiors are covered by
+(driver count dispatch, convergence loops, driver-side reads: the
+dedup_clusters family, dup_graph_pagerank's degree scalar,
+embedding_top_pc's bounded Gram read, a join-free aggregate) cannot be
+audited lazily end-to-end — their interiors are covered by
 the operator-level plan assertions in test_plans.py/test_dispatch.py
 and the committed plans/r*/ dumps, and the shared pair-build interior
 they all ride (jaccard_pairs_from_docs) keeps its BNLJ-free shape
@@ -219,11 +220,6 @@ BNLJ_WHITELIST = {
     # bounded 8-draw explode — the scalar-broadcast class; candidate
     # validation and history rejection are keyed joins.
     "training_negative_samples",
-    # embedding_top_pc: 1-row scale/trace/Rayleigh broadcasts crossed into
-    # the d^2=4,096-row scaled Gram and d-row iterates — every nested-loop
-    # side is dimension-sized (d fixed by the embedding schema), and the
-    # one corpus-sized stage (Gram accumulation) is a hash aggregate.
-    "embedding_top_pc",
     # bloom_semijoin_stats: the output row assembles five 1-row count
     # aggregates by cross join; the data path (bit-set build, probe,
     # semi-joins) is all hash/equi against the <= 4,096-row filter.

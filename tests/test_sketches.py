@@ -7,6 +7,7 @@ oracle comparison cannot express.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from walmart_e_commerce_sales_data_pipeline_spark import queries as q
@@ -193,6 +194,84 @@ def test_embedding_top_pc_converges_on_anisotropic_corpus(spark, tmp_path):
     assert cos >= 0.99, cos
     assert rows[0]["pc1_share"] >= 0.5, rows[0]["pc1_share"]
     assert abs(rows[0]["pc1_share"] - wv.max() / np.trace(g)) <= 0.05
+
+
+@pytest.mark.parametrize(
+    "n, d, zero_row",
+    [
+        pytest.param(0, 64, None, id="empty"),
+        pytest.param(1, 64, None, id="one_row"),
+        pytest.param(30, 64, 3, id="zero_vector"),
+        pytest.param(5, 65, None, id="d65"),
+    ],
+)
+def test_embedding_queries_on_degenerate_corpora(spark, tmp_path, n, d, zero_row):
+    """Degenerate embedding corpora give the DuckDB oracle's rows or the
+    documented bound error.  A zero vector (scale 0) is dropped by
+    quantize_int8 in both engines, and must not reach its division; a
+    Gram wider than 64 x 64 cells raises in both tiers instead of being
+    read whole."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vecs = np.random.default_rng(5).standard_normal((n, d)).astype(np.float32)
+    if zero_row is not None:
+        vecs[zero_row] = 0.0
+    schema = pa.schema(
+        [
+            ("vec_id", pa.int64()),
+            ("embedding", pa.list_(pa.float32())),
+            ("label", pa.int32()),
+        ]
+    )
+    path = f"{tmp_path}/embeddings.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": list(range(n)),
+                "embedding": [v.tolist() for v in vecs],
+                "label": [0] * n,
+            },
+            schema=schema,
+        ),
+        path,
+    )
+    top_pc = q.REGISTRY["embedding_top_pc"].fn
+    if d > 64:
+        for tier in (False, True):
+            with pytest.raises(ValueError, match="embedding_top_pc.*4,096"):
+                top_pc(spark, str(tmp_path), sketch_only=tier)
+        return
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    for name in ("embedding_top_pc", "similarity_inverted_index"):
+        got = sorted(tuple(r) for r in q.REGISTRY[name].fn(spark, str(tmp_path)).collect())
+        want = sorted(con.sql(q.REGISTRY[name].oracle).fetchall())
+        assert got == want, (name, len(got), len(want), got[:2], want[:2])
+    con.close()
+    for tier in (False, True):
+        rows = top_pc(spark, str(tmp_path), sketch_only=tier).collect()
+        assert len(rows) == (64 if n else 0), (tier, len(rows))
+
+
+def test_embedding_top_pc_runs_in_at_most_six_jobs(spark):
+    """Both tiers read the Gram once and run the power steps on the
+    driver: the Gram aggregate and the d-row readout, not a Spark job
+    per step (the per-step Spark loop ran 33 jobs, and 29 for
+    sketch_only)."""
+    sc = spark.sparkContext
+    for tier in (False, True):
+        group = f"embedding_top_pc-sketch_only={tier}"
+        sc.setJobGroup(group, group)
+        try:
+            q.REGISTRY["embedding_top_pc"].fn(spark, SF001, sketch_only=tier).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 6, (tier, len(jobs))
 
 
 def test_cms_selfjoin_size_estimator_theory(spark):

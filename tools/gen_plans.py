@@ -113,14 +113,14 @@ COMMENT = {
     "regardless of user/event cardinality (the streaming twin's state-size claim, "
     "batch-visible); the top-user rank window is hour-partitioned; the probe join is "
     "a (hour, r, b) equi-join",
-    "embedding_top_pc": "the Gram accumulation is the only corpus-sized stage — "
-    "posexplode^2 streams through a partial HashAggregate that caps every partition's "
-    "output at d^2=4,096 cells; the scaled Gram localCheckpoints once (4,096 rows of "
-    "state), so the visible plan is the final readout over materialized iterates; all "
-    "power iterations touch only d^2- and d-row frames with 1-row scale broadcasts "
-    "(whitelisted BNLJ class).  sketch_only=True runs the same plan shape in plain "
-    "double arithmetic (no int8 quantization / sign-split rescaling — the integer "
-    "regime exists for oracle replayability); bench.py times both tiers",
+    "embedding_top_pc": "the Gram accumulation is the only Spark stage — posexplode^2 "
+    "streams through a partial HashAggregate that caps every partition's output at "
+    "d^2=4,096 cells; the Gram is read once under that bound (limit 4,097, a wider "
+    "corpus raises), the power steps, trace and Rayleigh terms run on the driver in "
+    "exact Python integers, so the visible plan is the sort of the d-row readout.  "
+    "sketch_only=True runs the same read and loop in plain double arithmetic (no int8 "
+    "quantization / sign-split rescaling — the integer regime exists for oracle "
+    "replayability); bench.py times both tiers",
     "events_time_weighted_value": "one shuffle on user_id shared by the lead window "
     "and the aggregation; weights are exact integer microseconds x integer cents, so "
     "the only float is the final ratio projection",

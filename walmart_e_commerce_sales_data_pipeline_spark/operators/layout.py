@@ -79,16 +79,25 @@ def _rank01(df: DataFrame, col: str, bits: int = _BITS) -> Column:
     Sketch error only shifts bin *boundaries* slightly — files still own
     compact curve segments, which is all min/max pruning needs."""
     n_bins = 1 << bits
-    probs = [i / n_bins for i in range(1, n_bins)]
-    rel_err = max(1e-6, 0.25 / n_bins)
+    return _bucket_expr(
+        F.col(col).cast("double"), _sketch_edges(df, col, n_bins, 0.25)
+    )
+
+
+def _sketch_edges(df: DataFrame, col: str, n: int, err: float) -> list[float]:
+    """The n-quantile boundaries of ``col`` from the Greenwald-Khanna
+    sketch (``approxQuantile``, relative error ``err / n``), a
+    deterministic aggregate of the input.  Heavy ties collapse bins, so
+    the returned boundaries are strictly increasing and may be fewer than
+    n - 1."""
     edges = df.select(F.col(col).cast("double").alias("_q")).approxQuantile(
-        "_q", probs, rel_err
+        "_q", [i / n for i in range(1, n)], max(1e-6, err / n)
     )
     uniq: list[float] = []
-    for e in edges:  # heavy ties collapse bins; keep boundaries strictly increasing
+    for e in edges:
         if not uniq or e > uniq[-1]:
             uniq.append(e)
-    return _bucket_expr(F.col(col).cast("double"), uniq)
+    return uniq
 
 
 def morton_key(x: Column, y: Column, bits: int = _BITS) -> Column:
@@ -114,9 +123,12 @@ def zorder_write(
     writer_options: dict | None = None,
 ) -> None:
     """Write ``df`` as parquet clustered on the Morton curve of
-    (col_x, col_y): range-partition on the key so each file owns a
-    compact curve segment, sort within partitions so row-group stats
-    are tight too.
+    (col_x, col_y): route each row to the file that owns its compact
+    curve segment, sort within partitions so row-group stats are tight
+    too.  The segment boundaries are the key's sketch quantiles and
+    ``repartitionById`` sends segment i to task i, so the layout is the
+    same on every run (``repartitionByRange`` draws its boundary sample
+    with a seed that moves with the session's RDD count).
 
     Regime note: with F files over 2 dimensions, each file's per-
     dimension min/max envelope spans roughly sqrt(1/F) of that
@@ -129,8 +141,10 @@ def zorder_write(
         "_zkey",
         morton_key(_rank01(df, col_x, bits), _rank01(df, col_y, bits), bits),
     )
+    edges = _sketch_edges(keyed, "_zkey", n_files, 0.1)
+    file_id = _bucket_expr(F.col("_zkey").cast("double"), edges).cast("int")
     (
-        keyed.repartitionByRange(n_files, "_zkey")
+        keyed.repartitionById(n_files, file_id)
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
         .write.mode("overwrite")
@@ -272,14 +286,7 @@ def hilbert_write(
         ),
         bits,
     )
-    probs = [i / n_files for i in range(1, n_files)]
-    edges = keyed.select(
-        F.col("_hd").cast("double").alias("_q")
-    ).approxQuantile("_q", probs, max(1e-6, 0.1 / n_files))
-    uniq: list[float] = []
-    for e in edges:
-        if not uniq or e > uniq[-1]:
-            uniq.append(e)
+    uniq = _sketch_edges(keyed, "_hd", n_files, 0.1)
     (
         keyed.withColumn(
             "_hb", _bucket_expr(F.col("_hd").cast("double"), uniq)

@@ -57,7 +57,10 @@ def quantize_int8(
     ``floor`` (not ``round``) is deliberate: Spark and DuckDB ROUND
     diverge on exact decimal ties, floor on identical doubles cannot
     (queries/stable.py analysis).  Zero vectors (scale = 0) are excluded
-    rather than special-cased — callers decide their fate.
+    rather than special-cased — callers decide their fate.  The divisor
+    is NULL on them, not 0: an optimizer-inferred filter (a consumer's
+    posexplode adds ``size(q) > 0``) may evaluate ``q`` beside the
+    ``scale > 0`` filter, before it drops the row.
 
     Returns (id, scale, q, q_sum, recon_err_max) where q_sum is the exact
     integer checksum of the quantized vector and recon_err_max the max
@@ -69,17 +72,13 @@ def quantize_int8(
     out = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_v"), scale.alias("scale")
     ).filter(F.col("scale") > 0)
-    q = F.transform(
-        "_v", lambda v: F.floor(xd(v) * 127.0 / F.col("scale")).cast("long")
-    )
+    den = F.when(F.col("scale") > 0, F.col("scale"))
+    q = F.transform("_v", lambda v: F.floor(xd(v) * 127.0 / den).cast("long"))
     err = F.array_max(
         F.transform(
             "_v",
             lambda v: F.abs(
-                xd(v)
-                - F.floor(xd(v) * 127.0 / F.col("scale"))
-                * F.col("scale")
-                / 127.0
+                xd(v) - F.floor(xd(v) * 127.0 / den) * F.col("scale") / 127.0
             ),
         )
     )

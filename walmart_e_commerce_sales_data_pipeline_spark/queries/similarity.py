@@ -390,78 +390,17 @@ def retrieve_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # normalization and the Rayleigh-quotient ratio, both exact-integer
 # inputs through deterministic IEEE division.
 #
-# Rescaling bounds every intermediate independent of corpus size: the
-# Gram is capped at 2^30 per entry (so a billion-row corpus cannot
-# overflow the mat-vec), iterates at 2^20; u = G_s . v then satisfies
+# Only the Gram accumulation grows with the corpus, so only it runs as a
+# Spark stage; its result (d^2 = 4,096 cells, d fixed by the embedding
+# schema) is read once, and the power steps run on the driver in Python
+# integers.  The rescale caps bound the oracle's BIGINTs: the Gram is
+# capped at 2^30 per entry (so a billion-row corpus cannot overflow the
+# mat-vec), iterates at 2^20; u = G_s . v then satisfies
 # |u| <= 64 * 2^30 * 2^20 = 2^56 < 2^63.
 _PC_DIMS = 64
 _PC_ITERS = 4
 _PC_G_CAP = 1 << 30
 _PC_V_CAP = 1 << 20
-
-
-def _embedding_top_pc_float(emb: DataFrame) -> DataFrame:
-    """Double-precision twin of the integer power iteration — the
-    production tier behind ``embedding_top_pc(sketch_only=True)``.  Plan
-    shape is IDENTICAL to the exact path (one corpus-sized Gram partial
-    aggregate capped at d^2 cells per partition, dimension-sized frames
-    everywhere after, localCheckpoint fencing per iterate); only the
-    arithmetic regime differs: raw floats, plain max-abs normalization,
-    no sign-split rescaling and no replayable recurrence."""
-    cells = emb.select(
-        F.posexplode("embedding").alias("i", "xi"),
-        F.col("embedding").alias("xv"),
-    ).select(
-        "i",
-        F.col("xi").cast("double").alias("xi"),
-        F.posexplode("xv").alias("j", "xj"),
-    )
-    gs = cells.groupBy("i", "j").agg(
-        F.sum(F.col("xi") * F.col("xj").cast("double")).alias("g")
-    )
-    # lazy checkpoints, same barrier-halving discipline and full-scan
-    # first-action invariant as the exact path below (r19)
-    gs = gs.localCheckpoint(eager=False)
-    v = gs.select("j").distinct().withColumn("v", F.lit(1.0))
-    u = prev_v = None
-    for _ in range(_PC_ITERS):
-        u = (
-            gs.join(v, "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("g") * F.col("v")).alias("u"))
-        )
-        u = u.localCheckpoint(eager=False)
-        mk = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-        prev_v = v
-        v = u.crossJoin(F.broadcast(mk)).select(
-            F.col("i").alias("j"), (F.col("u") / F.col("m")).alias("v")
-        )
-    tr = gs.filter(F.col("i") == F.col("j")).agg(
-        F.sum("g").alias("trace")
-    )
-    vp = prev_v.select("j", F.col("v").alias("vp"))
-    un = u.select(F.col("i").alias("j"), F.col("u").alias("un"))
-    ray = (
-        vp.join(un, "j")
-        .agg(
-            (
-                F.sum(F.col("vp") * F.col("un"))
-                / F.sum(F.col("vp") * F.col("vp"))
-            ).alias("lam")
-        )
-    )
-    mm = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
-    return (
-        u.crossJoin(F.broadcast(mm))
-        .crossJoin(F.broadcast(ray))
-        .crossJoin(F.broadcast(tr))
-        .select(
-            F.col("i").cast("int").alias("dim"),
-            F.round(F.col("u") / F.col("m"), 6).alias("loading"),
-            F.round(F.col("lam") / F.col("trace"), 6).alias("pc1_share"),
-        )
-        .orderBy("dim")
-    )
 
 
 def _pc_sign_div(x: str, s: str, intdiv: str) -> str:
@@ -566,12 +505,16 @@ def _pc_oracle() -> str:
     "one the share correctly reports ~1/d and the direction is the "
     "declared k-step iterate — both regimes pinned against numpy in "
     "tests/test_sketches.py.  Scale "
-    "shape: the Gram accumulation is the only corpus-sized stage — "
+    "shape: the Gram accumulation is the only Spark stage — "
     "posexplode^2 streams through a partial aggregate that caps every "
     "partition's output at d^2=4,096 cells (the CMS-style mergeable-"
-    "state shape), all iterations touch only the 4,096-row scaled Gram "
-    "and 64-row iterates, and the 2^30/2^20 rescale caps bound every "
-    "intermediate below 2^56 at ANY corpus size",
+    "state shape); the Gram is read once under that bound (a wider "
+    "corpus raises instead of flooding the driver), the power steps, "
+    "trace and Rayleigh terms run on the driver in exact Python "
+    "integers, and a d-row frame returns to Spark for the final "
+    "division and rounding.  The 2^30/2^20 rescale caps bound every "
+    "intermediate below 2^56 at ANY corpus size, so the oracle's "
+    "BIGINT replay cannot overflow",
     tags=("similarity", "pca", "iterative", "quantization"),
 )
 def embedding_top_pc(
@@ -579,107 +522,63 @@ def embedding_top_pc(
 ) -> DataFrame:
     """``sketch_only=True`` runs the SAME power iteration in plain double
     arithmetic on the raw float embeddings — no int8 quantization, no
-    sign-split integer rescaling, no per-step scale aggregates (the exact-
-    INTEGER regime exists so the oracle can replay the recurrence
+    sign-split integer rescaling: each scale is the plain max-abs (the
+    exact-INTEGER regime exists so the oracle can replay the recurrence
     bit-for-bit; a production run doesn't need replayability, VERDICT r13
     item 6).  Same output columns (dim, loading, pc1_share), float
     convergence instead of the exact recurrence.  Default off; bench.py
-    measures both tiers."""
+    measures both tiers.  Both tiers share the one bounded Gram read and
+    the driver-side loop; a Gram over d^2 = 4,096 cells (embeddings wider
+    than 64 dims) raises ``ValueError``."""
     emb = table(spark, sf_dir, "embeddings")
     if sketch_only:
-        return _embedding_top_pc_float(emb)
-    q = quantize_int8(emb).select("id", "q")
-    cells = q.select(
-        F.posexplode("q").alias("i", "qi"), F.col("q").alias("qv")
-    ).select("i", "qi", F.posexplode("qv").alias("j", "qj"))
-    graw = cells.groupBy("i", "j").agg(
-        F.sum(F.col("qi") * F.col("qj")).cast("long").alias("g")
+        vecs = emb.select(F.transform("embedding", lambda x: x.cast("double")))
+        scale = lambda mx, cap: mx  # noqa: E731
+        div = lambda x, s: x / s  # noqa: E731
+    else:
+        vecs = quantize_int8(emb).select("q")
+        scale = lambda mx, cap: max(1, mx // cap)  # noqa: E731
+        div = lambda x, s: -(-x // s) if x < 0 else x // s  # noqa: E731
+    cells = vecs.toDF("x").select(
+        F.posexplode("x").alias("i", "xi"), "x"
+    ).select("i", "xi", F.posexplode("x").alias("j", "xj"))
+    bound = _PC_DIMS**2
+    gram = (
+        cells.groupBy("i", "j")
+        .agg(F.sum(F.col("xi") * F.col("xj")).alias("g"))
+        .limit(bound + 1)
+        .collect()
     )
-    gm = graw.agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.expr(f"CAST(MAX(ABS(g)) AS BIGINT) div {_PC_G_CAP}"),
-        ).alias("s")
-    )
-    gs = graw.crossJoin(F.broadcast(gm)).select(
-        "i", "j", F.expr(_pc_sign_div("g", "s", "div")).alias("gs")
-    )
-    # Materialize the d^2-row scaled Gram ONCE: every iteration, the
-    # trace, and the readout all branch from it, and each branch's
-    # max-scale aggregate re-references its own input — without the
-    # checkpoint the corpus-sized Gram accumulation re-executes
-    # exponentially in the iteration depth (measured 126 s -> ~15 s at
-    # sf0.01).  4,096 rows of state, same bounded-materialization
-    # posture as operators.components' loop checkpoints.
-    #
-    # LAZY checkpoints throughout (r19, the components-loop trick,
-    # VERDICT r18 item 2): marking a frame still runs the shuffle and
-    # broadcast stages under it at the call (AQE builds its query
-    # stages then); only the final, block-storing stage is deferred
-    # into the next job that consumes the frame — gs's into iteration
-    # 1's broadcast-scale build, u_k's into iteration k+1's — instead
-    # of a separate eager materialization job per step.  INVARIANT: the first action
-    # on each lazily-checkpointed frame is a full-scan aggregate (the
-    # mk/gm scale max or the mat-vec groupBy), never a
-    # partition-partial limit/first, so materialization stays
-    # one-job-whole, and the readout (mm/ray/tr) then reads stored
-    # blocks.
-    gs = gs.localCheckpoint(eager=False)
-    v = gs.select("j").distinct().withColumn("v", F.lit(1).cast("long"))
-    u = None
-    for k in range(1, _PC_ITERS + 1):
-        u = (
-            gs.join(v, "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("gs") * F.col("v")).cast("long").alias("u"))
+    if len(gram) > bound:
+        raise ValueError(
+            f"embedding_top_pc: the Gram read is bounded at {bound:,} cells "
+            f"({_PC_DIMS} dims); read {len(gram):,} before stopping"
         )
-        # 64-row iterate: checkpoint BEFORE the scale aggregate so both
-        # consumers (mk and the next v) read the materialized rows and
-        # lineage stays linear in the iteration depth.
-        u = u.localCheckpoint(eager=False)
-        mk = u.agg(
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.expr(f"CAST(MAX(ABS(u)) AS BIGINT) div {_PC_V_CAP}"),
-            ).alias("s")
+    rows = []
+    if gram:
+        g = {(r["i"], r["j"]): r["g"] for r in gram}
+        s = scale(max(abs(x) for x in g.values()), _PC_G_CAP)
+        gs = {k: div(x, s) for k, x in g.items()}
+        v = {j: 1 for _, j in gs}
+        for _ in range(_PC_ITERS):
+            u = {}
+            for (i, j), x in gs.items():
+                u[i] = u.get(i, 0) + x * v[j]
+            s = scale(max(abs(x) for x in u.values()), _PC_V_CAP)
+            prev_v, v = v, {i: div(x, s) for i, x in u.items()}
+        lam = (
+            float(s)
+            * float(sum(prev_v[j] * v[j] for j in v))
+            / float(sum(x * x for x in prev_v.values()))
         )
-        prev_v = v
-        v = (
-            u.crossJoin(F.broadcast(mk))
-            .select(
-                F.col("i").alias("j"),
-                F.expr(_pc_sign_div("u", "s", "div")).alias("v"),
-            )
-        )
-    tr = gs.filter(F.col("i") == F.col("j")).agg(
-        F.sum("gs").cast("long").alias("trace")
-    )
-    vp = prev_v.select(F.col("j"), F.col("v").alias("vp"))
-    vn = v.select(F.col("j"), F.col("v").alias("vn"))
-    mn = u.agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.expr(f"CAST(MAX(ABS(u)) AS BIGINT) div {_PC_V_CAP}"),
-        ).alias("s")
-    )
-    ray = (
-        vp.join(vn, "j")
-        .crossJoin(F.broadcast(mn))
-        .agg(
-            (
-                F.first("s").cast("double")
-                * F.sum(F.col("vp") * F.col("vn")).cast("double")
-                / F.sum(F.col("vp") * F.col("vp")).cast("double")
-            ).alias("lam")
-        )
-    )
-    mm = u.agg(F.expr("CAST(MAX(ABS(u)) AS BIGINT)").alias("m"))
+        trace = sum(x for (i, j), x in gs.items() if i == j)
+        m = max(abs(x) for x in u.values())
+        rows = [(i, u[i], m, lam, trace) for i in sorted(u)]
+    t = "double" if sketch_only else "long"
     return (
-        u.crossJoin(F.broadcast(mm))
-        .crossJoin(F.broadcast(ray))
-        .crossJoin(F.broadcast(tr))
+        spark.createDataFrame(rows, f"dim int, u {t}, m {t}, lam double, trace {t}")
         .select(
-            F.col("i").cast("int").alias("dim"),
+            "dim",
             F.round(F.col("u").cast("double") / F.col("m").cast("double"), 6)
             .alias("loading"),
             F.round(F.col("lam") / F.col("trace").cast("double"), 6)
