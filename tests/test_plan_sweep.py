@@ -21,13 +21,15 @@ the returned default form is audited as well (it is what downstream
 consumers see).  Queries whose materialization is control-flow-bound
 (driver count dispatch, convergence loops, driver-side reads: the
 dedup_clusters family, dup_graph_pagerank's degree scalar,
-embedding_top_pc's bounded Gram read, a join-free aggregate) cannot be
-audited lazily end-to-end — their interiors are covered by
-the operator-level plan assertions in test_plans.py/test_dispatch.py
-and the committed plans/r*/ dumps, and the shared pair-build interior
-they all ride (jaccard_pairs_from_docs) keeps its BNLJ-free shape
-pinned by the jaccard_prefix_filter interior audit below plus the
-brute-force whitelist entries.
+embedding_top_pc's bounded Gram read, the survival queries' bounded
+cell read, a join-free aggregate) cannot be audited lazily end-to-end —
+their interiors are covered by the operator-level plan assertions in
+test_plans.py/test_dispatch.py and the committed plans/r*/ dumps, and
+the shared pair-build interior they all ride (jaccard_pairs_from_docs)
+keeps its BNLJ-free shape pinned by the jaccard_prefix_filter interior
+audit below plus the brute-force whitelist entries.  The survival
+queries' subject build is audited on the lazy cell aggregate they read
+(``test_survival_cell_aggregate_is_keyed``).
 """
 
 from __future__ import annotations
@@ -141,10 +143,6 @@ BNLJ_WHITELIST = {
     # BROADCAST 10-row build side — every nested-loop side is a scalar
     # or the fixed decile grid, never customers.
     "revenue_gini_lorenz",
-    # survival_time_to_purchase (round 15): two crosses broadcast the
-    # 1-row anchor timestamp and the 1-row subject total onto keyed
-    # frames — the scalar-broadcast class.
-    "survival_time_to_purchase",
     # revenue_seasonal_decomposition (round 16): one cross broadcasts
     # the 1-row gap flag (the global calendar-gap guard) onto the
     # <= ~84-row monthly output — the scalar-broadcast class.
@@ -187,17 +185,6 @@ BNLJ_WHITELIST = {
     # factor); the two crosses broadcast the 1-row S and tie frames —
     # the scalar-broadcast class.
     "revenue_mann_kendall",
-    # survival_logrank_stratified (round 16): crosses broadcast the
-    # 1-row anchor timestamp and the 1-row combined (O, E, V) totals —
-    # the scalar-broadcast class; the per-stratum grid is an equi-join
-    # on stratum between two bounded distinct frames.
-    "survival_logrank_stratified",
-    # survival_km_logrank (round 16): crosses broadcast the 1-row anchor
-    # timestamp, the 1-row (O1, E1, V) log-rank totals, and join the
-    # <= 31-row distinct-day frame onto the 2-row cohort dimension (the
-    # grid the risk sets are evaluated on) — every nested-loop side is a
-    # scalar or a calendar/config-bounded dimension, never subjects.
-    "survival_km_logrank",
     # basket_association_rules (round 15): one cross broadcasts the
     # 1-row basket-count total onto the 10-row result — the
     # scalar-broadcast class; the pair generator itself is a keyed
@@ -267,20 +254,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     #   scale-invariant); the corpus-sized intra-bucket running sums are
     #   bucket-PARTITIONED.
     "revenue_gini_lorenz",
-    # - survival_time_to_purchase (round 15): the risk-set and
-    #   product-limit windows run over the per-day aggregate —
-    #   calendar-bounded (<= 31 rows at any SF).
-    "survival_time_to_purchase",
-    # - survival_logrank_stratified (round 16): the cross-stratum
-    #   combination window runs over the per-stratum totals table —
-    #   bounded by the enrollment-week count (feed span / 7, a handful
-    #   at any SF); per-stratum accumulation is stratum-PARTITIONED.
-    "survival_logrank_stratified",
-    # - survival_km_logrank (round 16): the log-rank accumulation
-    #   windows (O1/E1/V ordered sums + the last-row row_number) run
-    #   over the per-day cell table — calendar-bounded (<= 31 rows at
-    #   any SF); the per-cohort KM windows are cohort-PARTITIONED.
-    "survival_km_logrank",
     # - revenue_cusum_changepoint (round 15): index/prefix/peak windows
     #   over the monthly aggregate — calendar-bounded (<= ~84 rows).
     "revenue_cusum_changepoint",
@@ -306,8 +279,8 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     "zipf_slope_fit",
     # - event_dow_independence (round 17): the ordered chi-squared fold
     #   and last-row rank run over the (event_type x weekday) cell table
-    #   — bounded by the type-domain x 7, never corpus size (the
-    #   survival_km_logrank day-ordered IEEE accumulation class); its
+    #   — bounded by the type-domain x 7, never corpus size (an
+    #   ordered IEEE accumulation over a domain-bounded table); its
     #   crosses also broadcast the 1-row corpus total and the 1-row
     #   (n_types, n_dows) dims frame (the scalar-broadcast class).
     "event_dow_independence",
@@ -396,8 +369,8 @@ SINGLE_PARTITION_WHITELIST = {
     "source_length_levene",
     # - event_dow_independence (round 17): the exchange feeds the
     #   ordered chi-squared fold over the (event_type x weekday) cell
-    #   aggregate — bounded by the type-domain x 7 at any SF (the
-    #   survival day-ordered accumulation class).
+    #   aggregate — bounded by the type-domain x 7 at any SF (see the
+    #   unpartitioned-window entry above).
     "event_dow_independence",
     # - pareto_frontier_parts: the single-partition exchange feeds the
     #   bucket-summary prefix-max window — a FINAL aggregate over the $1
@@ -411,20 +384,6 @@ SINGLE_PARTITION_WHITELIST = {
     #   the bucket count — does not grow with SF); the corpus-sized rank
     #   work runs in the bucket-PARTITIONED window beside it.
     "revenue_gini_lorenz",
-    # - survival_time_to_purchase (round 15): the exchange feeds the
-    #   day-ordered risk/product windows over the per-day aggregate —
-    #   calendar-bounded (<= 31 rows at any SF), the monthly-rollup
-    #   window class.
-    "survival_time_to_purchase",
-    # - survival_logrank_stratified (round 16): the exchange feeds the
-    #   cross-stratum combination window over the per-stratum totals —
-    #   bounded by the enrollment-week count at any SF.
-    "survival_logrank_stratified",
-    # - survival_km_logrank (round 16): the exchanges feed the
-    #   day-ordered log-rank accumulation windows and the per-cohort
-    #   grid windows — both calendar/config-bounded (<= 31 days x 2
-    #   cohorts at any SF), the monthly-rollup window class.
-    "survival_km_logrank",
     # - revenue_cusum_changepoint (round 15): the exchange feeds the
     #   index/prefix/peak windows over the monthly aggregate —
     #   calendar-bounded (<= ~84 rows at any SF).
@@ -465,9 +424,6 @@ AUDIT_FORMS = (
     "jaccard_prefix_filter",
     "kmv_jaccard_langs",
     "kmv_set_difference",
-    "survival_time_to_purchase",
-    "survival_km_logrank",
-    "survival_logrank_stratified",
     "events_hourly_bloom_returns",
 )
 
@@ -560,6 +516,29 @@ def test_no_unbounded_nested_loop_joins_or_window_funnels_anywhere(spark):
         "stale single-partition-whitelist entries (no unbounded "
         f"SinglePartition exchange in plan anymore): {unused_sp_whitelist}"
     )
+
+
+def test_survival_cell_aggregate_is_keyed(spark):
+    """The survival queries return a sort over a driver-built readout;
+    the subject build sits behind their one bounded read.  Audit the lazy
+    cell aggregate that read collects, for each query's keys: keyed
+    aggregates and keyed joins, the only nested loop the broadcast of the
+    1-row anchor timestamp, no unpartitioned window and no
+    single-partition funnel."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.events import (
+        _survival_cells,
+    )
+
+    for keys in ((), ("cohort",), ("stratum", "cohort")):
+        df = _survival_cells(spark, SF001, keys)
+        plan = formatted_plan(df)
+        tree = plan.split("\n\n")[0]
+        nlj = [ln for ln in tree.splitlines() if "NestedLoopJoin" in ln]
+        assert len(nlj) == 1 and "Cross BuildRight" in nlj[0], (keys, tree)
+        assert "CartesianProduct" not in plan, keys
+        assert "Functions [1]: [max(ts" in plan, keys  # the anchor aggregate
+        assert not unpartitioned_windows(df), keys
+        assert not single_partition_funnels(df), keys
 
 
 def test_window_detector_flags_injected_funnel(spark):

@@ -350,20 +350,23 @@ def test_gini_tied_rank_equals_mean_absolute_difference(xs):
 def test_kaplan_meier_equals_empirical_survival_without_censoring(durations):
     """For ANY duration multiset with NO censoring, the product-limit
     estimator collapses to the empirical survival function:
-    S(t) = #(d > t) / n — the identity that pins
-    survival_time_to_purchase's windowed exp/ln construction to the
-    definitional curve (and exercises the everyone-dies S=0 tail)."""
+    S(t) = #(d > t) / n — the identity that pins the engine's KM fold
+    (survival_time_to_purchase's exp(sum ln) construction) to the
+    definitional curve, and exercises the everyone-dies S=0 tail."""
+    import math
+
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.events import (
+        _km_fold,
+    )
+
     n = len(durations)
-    at_risk = n
-    s = 1.0
     counts = Counter(durations)
-    for day in sorted(counts):
-        e = counts[day]
-        s *= 1.0 - e / at_risk  # no censoring: the KM factor
-        at_risk -= e
-        empirical = sum(1 for d in durations if d > day) / n
+    rows = _km_fold({d: (e, 0) for d, e in counts.items()}, sorted(counts))
+    for day, _n, _d, _c, died_out, log_s in rows:
+        s = 0.0 if died_out else math.exp(log_s)
+        empirical = sum(1 for x in durations if x > day) / n
         assert abs(s - empirical) < 1e-9, (day, s, empirical)
-    assert at_risk == 0 and abs(s) < 1e-9
+    assert rows[-1][1] == rows[-1][2] and rows[-1][4] == 1  # all die last
 
 
 # --- rank-sum AUC and CUSUM laws ----------------------------------------------

@@ -168,42 +168,24 @@ def _logrank_definition(subjects):
     return o1, e1, v, chi2
 
 
-def _logrank_query_construction(subjects):
-    """Pure-python mirror of the registered query's construction: the
-    (day x cohort) grid, prefix-sum risk sets, and day-ORDERED double
-    accumulation of O1/E1/V — exactly the window arithmetic both the
-    Spark plan and the DuckDB oracle run."""
-    days = sorted({d for _, d, _ in subjects})
-    o1, e1, v = 0, 0.0, 0.0
-    n_tot = {g: sum(1 for gg, _, _ in subjects if gg == g) for g in ("A", "B")}
-    rem = {"A": 0, "B": 0}
-    for t in days:
-        n1 = n_tot["A"] - rem["A"]
-        n2 = n_tot["B"] - rem["B"]
-        d1 = sum(1 for g, d, e in subjects if g == "A" and d == t and e)
-        dt = d1 + sum(1 for g, d, e in subjects if g == "B" and d == t and e)
-        nt = n1 + n2
-        o1 += d1
-        if nt > 0:
-            e1 += float(dt) * n1 / nt
-        if nt > 1:
-            v += (
-                float(dt) * n1 * n2 * (nt - dt) / (float(nt) * nt * (nt - 1))
-            )
-        for g in ("A", "B"):
-            rem[g] += sum(1 for gg, d, _ in subjects if gg == g and d == t)
-    chi2 = (o1 - e1) ** 2 / v if v > 0 else None
-    return o1, e1, v, chi2
-
-
 @FAST
 @given(subjects_strategy)
 def test_logrank_query_construction_matches_definition(subjects):
-    """The query's grid/prefix-sum/ordered-double form equals the exact
-    Fraction definition for ANY censored two-cohort duration multiset
-    (to IEEE accumulation tolerance — the readout rounds at 4dp)."""
+    """The engine's log-rank fold (grid, prefix-sum risk sets, day-ordered
+    double accumulation) equals the exact Fraction definition for ANY
+    censored two-cohort duration multiset (to IEEE accumulation
+    tolerance — the readout rounds at 4dp)."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.events import (
+        _logrank_fold,
+    )
+
+    cells: dict = {}
+    for g, d, e in subjects:
+        dc = cells.setdefault(g, {}).get(d, (0, 0))
+        cells[g][d] = (dc[0] + e, dc[1] + 1 - e)
     o1_d, e1_d, v_d, chi2_d = _logrank_definition(subjects)
-    o1_q, e1_q, v_q, chi2_q = _logrank_query_construction(subjects)
+    _km, (o1_q, _dsum, e1_q, v_q) = _logrank_fold(cells)
+    chi2_q = (o1_q - e1_q) ** 2 / v_q if v_q > 0 else None
     assert o1_q == o1_d  # observed events are exact integers
     assert abs(e1_q - float(e1_d)) < 1e-9
     assert abs(v_q - float(v_d)) < 1e-9

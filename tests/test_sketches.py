@@ -17,6 +17,7 @@ from walmart_e_commerce_sales_data_pipeline_spark.queries.sketches import (
 )
 
 from tests.conftest import SF001
+from tests.test_queries_vs_duckdb import _normalize
 
 
 def test_histogram_cells_merge_by_addition(spark):
@@ -208,9 +209,9 @@ def test_embedding_top_pc_converges_on_anisotropic_corpus(spark, tmp_path):
 def test_embedding_queries_on_degenerate_corpora(spark, tmp_path, n, d, zero_row):
     """Degenerate embedding corpora give the DuckDB oracle's rows or the
     documented bound error.  A zero vector (scale 0) is dropped by
-    quantize_int8 in both engines, and must not reach its division; a
-    Gram wider than 64 x 64 cells raises in both tiers instead of being
-    read whole."""
+    quantize_int8 in both engines, and must not reach its division; its
+    cosine is NULL, never a division by zero; a Gram wider than 64 x 64
+    cells raises in both tiers instead of being read whole."""
     import duckdb
     import numpy as np
     import pyarrow as pa
@@ -246,9 +247,17 @@ def test_embedding_queries_on_degenerate_corpora(spark, tmp_path, n, d, zero_row
         return
     con = duckdb.connect()
     con.sql(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
-    for name in ("embedding_top_pc", "similarity_inverted_index"):
-        got = sorted(tuple(r) for r in q.REGISTRY[name].fn(spark, str(tmp_path)).collect())
-        want = sorted(con.sql(q.REGISTRY[name].oracle).fetchall())
+    for name in (
+        "embedding_top_pc",
+        "similarity_inverted_index",
+        "similarity_pairs",
+        "similarity_topk",
+        "similarity_topk_ivf",
+    ):
+        sdf = q.REGISTRY[name].fn(spark, str(tmp_path))
+        _, got = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+        ddf = con.sql(q.REGISTRY[name].oracle)
+        _, want = _normalize([tuple(r) for r in ddf.fetchall()], list(ddf.columns))
         assert got == want, (name, len(got), len(want), got[:2], want[:2])
     con.close()
     for tier in (False, True):

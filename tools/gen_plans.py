@@ -312,8 +312,10 @@ COMMENT = {
     "broadcast decile range-join; no per-customer global sort anywhere",
     "survival_time_to_purchase": "round 15 wave 3: Kaplan-Meier — three "
     "keyed aggregates (first-view, first-qualifying-purchase, per-day "
-    "counts) + one keyed left join; risk-set and product-limit windows "
-    "run on the <= 31-row day table",
+    "counts) + one keyed left join build the day-cell table, read once "
+    "under a 65,536-cell bound (limit 65,537, more raises); the risk-set "
+    "and product-limit fold runs on the driver, so the visible plan is "
+    "the sort of the per-day readout",
     "basket_association_rules": "round 15 wave 4: baskets collect with "
     "ONE keyed aggregate, p1<p2 combinations explode MAP-SIDE from the "
     "sorted array (codegen transform/slice/flatten), the (p1,p2) count "

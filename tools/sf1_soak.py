@@ -251,7 +251,8 @@ HEAVY = [
     # unpartitioned prefix sum touches only the ~14.7k-bucket summary,
     # which must NOT grow — TPC-H max customer revenue is SF-invariant)
     # and the Kaplan-Meier curve (10x users through three keyed
-    # aggregates; all window work on the <= 31-row day table).
+    # aggregates; the driver reads the <= 366-row day-cell table once
+    # and folds it, so that read must NOT grow).
     "revenue_gini_lorenz",
     "survival_time_to_purchase",
     # round 15 wave 4: the basket self-join (10x orders with the SAME
@@ -283,8 +284,9 @@ HEAVY = [
     # never with customers x parts).
     "training_negative_samples",
     # round 16: per-cohort KM + log-rank (10x users through the same
-    # three keyed aggregates as survival_time_to_purchase; ALL window
-    # work on the <= 31-day x 2-cohort grid, which must NOT grow), the
+    # three keyed aggregates as survival_time_to_purchase; the driver
+    # reads and folds the day x 2-cohort cell table, which must NOT
+    # grow), the
     # Zipf slope (10x tokens through two stacked map-side-combining
     # aggregates; the replica token suffix grows vocab ~10x but the
     # counts-of-counts table obeys its sqrt(2N) bound), and the per-hour
@@ -302,7 +304,8 @@ HEAVY = [
     "revenue_mann_kendall",
     "source_token_diversity",
     # round 16 wave 3: the stratified log-rank (same subject aggregates
-    # as the KM queries; ALL window work on the (weeks x 31 x 2) grid).
+    # as the KM queries; the driver folds the (weeks x days x 2) cell
+    # table, read once under its 65,536-cell bound).
     "survival_logrank_stratified",
     # round 18: the cluster-composition pair (ride the measured
     # jaccard-pairs + components shape), the bigram LM scorer (corpus

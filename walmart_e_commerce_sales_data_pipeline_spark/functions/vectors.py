@@ -24,4 +24,9 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    # NULL where either vector is all zeros: the cosine is undefined
+    # there, and ANSI mode raises on the division.  DuckDB 1.0's
+    # list_cosine_similarity clamps its NaN to -1.0 instead, which a
+    # threshold filter drops and a descending rank puts last, as NULL.
+    nn = norm(a) * norm(b)
+    return dot(a, b) / F.when(nn > 0, nn)

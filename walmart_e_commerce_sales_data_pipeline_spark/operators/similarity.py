@@ -613,6 +613,8 @@ def train_ivf_centroids(
 
     big = max(sample, refine_sample)
     rows = embeddings.select(id_col, vec_col).orderBy(id_col).limit(big).collect()
+    if not rows:
+        return []  # an empty corpus has no cells: every assignment is empty
     x_big = np.array([r[1] for r in rows], dtype=np.float64)
     x_big /= np.maximum(np.linalg.norm(x_big, axis=1, keepdims=True), 1e-12)
     x = x_big[:sample]
@@ -694,6 +696,7 @@ def _with_cells(
         ]
     )
     c_list = [[float(v) for v in c] for c in centroids]
+    take = min(take, len(c_list))  # a corpus smaller than n_cells trains fewer
     src = df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec))
 
     def gen(it):

@@ -8,12 +8,14 @@ watermark variants of the windowed aggregations (same logical plans).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import math
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import register
 from .stable import cent_avg, cent_avg_sql, cent_sum, cent_sum_sql
-from .tables import events, table
+from .tables import events, local_frame, read_bounded, table
 
 SESSION_GAP_NS = 30 * 60 * 1_000_000_000  # 30 minutes
 
@@ -955,27 +957,24 @@ def events_forward_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Kaplan-Meier time-to-conversion survival curve --------------------------
 
 
+# Bound on the survival queries' one driver read: the stratified grid
+# over a one-year feed is at most 53 weeks x 2 cohorts x 366 days, about
+# 38.8k cells; the other two read at most 2 x 366.
+_SURVIVAL_CELLS = 65_536
+
+
 def _survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared subject construction for the survival queries: one row per
-    user with a first 'view' — ``(user_id, first_view, day, ev)`` where ``day`` is
-    the duration from first view to first qualifying purchase (or to the
-    feed anchor for right-censored never-purchasers) and ``ev`` flags
-    conversion.  All three survival queries derive from this frame —
-    survival_time_to_purchase, survival_km_logrank, and
-    survival_logrank_stratified (which alone consumes ``first_view``,
-    for its enrollment-week stratum) — so the censoring rule and the
-    conversion predicate live in exactly one place.
+    user with a first 'view' — ``(stratum, cohort, day, ev)`` where
+    ``day`` is the duration from first view to first qualifying purchase
+    (or to the feed anchor for right-censored never-purchasers), ``ev``
+    flags conversion, ``cohort`` is the user_id parity and ``stratum``
+    the first-view week.  The censoring rule, the conversion predicate
+    and both keys live here once, for survival_time_to_purchase,
+    survival_km_logrank and survival_logrank_stratified.
 
-    The subject frame is MATERIALIZED here (eager localCheckpoint, r19):
-    the log-rank queries fan it into four differently-keyed consumers
-    (per-day cells, the day and cohort grid dimensions, per-cohort
-    totals), and while AQE reuses the t0/conv exchanges inside one plan,
-    the post-exchange join + censoring projection re-ran once per
-    consumer — user-scale work at production size.  A/B (min of 2,
-    plans/r19): survival_km_logrank 4.39 -> 3.67 s at sf0.1 and
-    3.68 -> 2.34 s at sf1; survival_logrank_stratified 3.11 -> 2.04 s /
-    2.59 -> 2.12 s; survival_time_to_purchase 1.17 -> 0.75 s at sf0.1,
-    sf1 neutral.  Bounded state: one row per user with a first view."""
+    The frame is lazy: its one consumer is ``_read_cells``'s keyed
+    aggregate, read once under ``_SURVIVAL_CELLS``."""
     ev = table(spark, sf_dir, "events")
     t0 = (
         ev.filter(F.col("event_type") == "view")
@@ -994,8 +993,17 @@ def _survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
         t0.join(conv, "user_id", "left")
         .crossJoin(F.broadcast(anchor))
         .select(
-            "user_id",
-            "first_view",
+            F.floor(
+                F.datediff(
+                    F.to_date("first_view"), F.lit("2024-01-01").cast("date")
+                )
+                / F.lit(7.0)
+            )
+            .cast("int")
+            .alias("stratum"),
+            F.when(F.col("user_id") % 2 == 0, F.lit("A"))
+            .otherwise(F.lit("B"))
+            .alias("cohort"),
             F.when(
                 F.col("first_purchase").isNotNull(),
                 F.datediff(
@@ -1011,7 +1019,69 @@ def _survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0))
             .alias("ev"),
         )
-        .localCheckpoint(eager=True)
+    )
+
+
+def _survival_cells(spark: SparkSession, sf_dir: str, keys: tuple) -> DataFrame:
+    """The lazy ``(*keys, day, d, c)`` aggregate the survival queries
+    read: integer event and censoring counts per key and day."""
+    return _survival_subjects(spark, sf_dir).groupBy(*keys, "day").agg(
+        F.sum("ev").cast("long").alias("d"),
+        F.sum(F.lit(1) - F.col("ev")).cast("long").alias("c"),
+    )
+
+
+def _read_cells(spark: SparkSession, sf_dir: str, query: str, *keys: str) -> dict:
+    """Read the cell table once and nest it by key, ``{k1: {k2: {day:
+    (d, c)}}}``; more than ``_SURVIVAL_CELLS`` cells raises."""
+    out: dict = {}
+    cells = _survival_cells(spark, sf_dir, keys)
+    for *ks, day, d, c in read_bounded(
+        cells, _SURVIVAL_CELLS, f"{query}: the survival cell read"
+    ):
+        node = out
+        for k in ks:
+            node = node.setdefault(k, {})
+        node[day] = (d, c)
+    return out
+
+
+_KM_SCHEMA = (
+    "day int, n_risk long, n_event long, n_censored long, "
+    "died_out int, log_s double"
+)
+
+
+def _km_fold(cells: dict, days: list) -> list:
+    """Kaplan-Meier over one group's ``{day: (d, c)}`` cells, evaluated
+    on every day of the ascending ``days`` (a day without a cell counts
+    no events).  Rows follow ``_KM_SCHEMA``: the risk set is the group
+    total minus the prefix of d + c, ``died_out`` a running max, and
+    ``log_s`` sums ln(1 - d/n) in day order — the same IEEE sequence as
+    the oracle's windows.  The readout takes exp and rounds in Spark."""
+    n = sum(d + c for d, c in cells.values())
+    died, log_s, rows = 0, 0.0, []
+    for day in days:
+        d, c = cells.get(day, (0, 0))
+        died = max(died, 1 if d == n and d > 0 else 0)
+        log_s += math.log(1.0 - float(d) / n) if d < n else 0.0
+        rows.append((day, n, d, c, died, log_s))
+        n -= d + c
+    return rows
+
+
+def _km_survival() -> Column:
+    return (
+        F.when(F.col("died_out") == 1, F.lit(0.0))
+        .otherwise(F.round(F.exp("log_s"), 6))
+        .alias("km_survival")
+    )
+
+
+def _chi2(o: str, e: str, v: str) -> Column:
+    return F.when(
+        F.col(v) > 0,
+        F.round((F.col(o) - F.col(e)) * (F.col(o) - F.col(e)) / F.col(v), 4),
     )
 
 
@@ -1085,190 +1155,60 @@ def _survival_subjects(spark: SparkSession, sf_dir: str) -> DataFrame:
     "biases any plain average.  Per event day t: n_risk (subjects with "
     "duration >= t), n_event, n_censored, and S(t) = prod over s <= t "
     "of (1 - d_s/n_s).  Both engines build the product as "
-    "exp(sum(ln(term))) over the SAME day-ordered window with the same "
-    "guard branch (a day where everyone at risk converts sends S to "
-    "exactly 0.0 via a flag, never through ln(0), whose result differs "
-    "across engines), so the rounded curve compares exactly; counts are "
-    "exact BIGINT.  KM == the empirical survival function when nothing "
-    "is censored — hypothesis-pinned for ANY duration multiset in "
+    "exp(sum(ln(term))) in the SAME day order with the same guard "
+    "branch (a day where everyone at risk converts sends S to exactly "
+    "0.0 via a flag, never through ln(0), whose result differs across "
+    "engines), so the rounded curve compares exactly; counts are exact "
+    "BIGINT.  KM == the empirical survival function when nothing is "
+    "censored — hypothesis-pinned for ANY duration multiset in "
     "tests/test_round15_properties.py.  Scale shape: two keyed "
     "aggregates (first-view, first-qualifying-purchase) + one keyed "
-    "left join, then ALL window work runs on the per-day table — "
-    "calendar-bounded (<= 31 rows at any SF), the whitelisted "
-    "monthly-rollup window class; no per-subject window, no global "
-    "sort of subjects",
+    "left join build subjects, and one keyed aggregate folds them to "
+    "per-day (d, c) cells; the driver reads those cells once, bounded "
+    "at 65,536 (the calendar bounds them, <= 366 a year; more raises), "
+    "runs the risk-set and product-limit fold in day order, and a "
+    "per-day frame returns to Spark for exp and rounding; no "
+    "per-subject window, no global sort of subjects",
     tags=("event-time", "window", "survival", "funnel"),
 )
 def survival_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    subj = _survival_subjects(spark, sf_dir).select("day", "ev")
-    days = subj.groupBy("day").agg(
-        F.sum("ev").cast("long").alias("n_event"),
-        F.sum(F.lit(1) - F.col("ev")).cast("long").alias("n_censored"),
+    cells = _read_cells(spark, sf_dir, "survival_time_to_purchase")
+    return (
+        local_frame(spark, _km_fold(cells, sorted(cells)), _KM_SCHEMA)
+        .select("day", "n_risk", "n_event", "n_censored", _km_survival())
+        .orderBy("day")
     )
-    tot = subj.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    before = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, -1)
-    upto = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    risk = days.crossJoin(F.broadcast(tot)).select(
-        "day",
-        "n_event",
-        "n_censored",
-        (
-            F.col("n_total")
-            - F.coalesce(
-                F.sum(F.col("n_event") + F.col("n_censored")).over(before),
-                F.lit(0),
-            )
-        )
-        .cast("long")
-        .alias("n_risk"),
-    )
-    km = risk.select(
-        "day",
-        "n_risk",
-        "n_event",
-        "n_censored",
-        F.max(
-            F.when(F.col("n_event") == F.col("n_risk"), F.lit(1)).otherwise(
-                F.lit(0)
-            )
-        )
-        .over(upto)
-        .alias("died_out"),
-        F.sum(
-            F.when(
-                F.col("n_event") < F.col("n_risk"),
-                F.log(
-                    F.lit(1.0)
-                    - F.col("n_event").cast("double") / F.col("n_risk")
-                ),
-            ).otherwise(F.lit(0.0))
-        )
-        .over(upto)
-        .alias("log_s"),
-    )
-    return km.select(
-        "day",
-        "n_risk",
-        "n_event",
-        "n_censored",
-        F.when(F.col("died_out") == 1, F.lit(0.0))
-        .otherwise(F.round(F.exp("log_s"), 6))
-        .alias("km_survival"),
-    ).orderBy("day")
 
 
 # --- per-cohort Kaplan-Meier curves + the log-rank test -----------------------
 
 
-def _logrank_frames(subj, strata: list[str]):
-    """Shared hypergeometric machinery for the log-rank queries: from a
-    subject frame with (``*strata``, cohort, day, ev) columns, build
-
-    - ``risk``: the per-(strata, cohort, day) grid with n_event,
-      n_censored, and the prefix-sum risk set (grid rows exist for every
-      day any cohort in the group has activity — the risk set of one
-      cohort must be evaluable at the OTHER cohort's event days);
-    - ``totg``: per-(strata, cohort) subject totals;
-    - ``cum``: the day-ORDERED cumulative (o1, e1, v) accumulation per
-      strata group with ``rn`` = 1 marking the last day — identical IEEE
-      sequence in both engines.
-
-    ``strata=[]`` is the plain two-sample test (survival_km_logrank);
-    ``strata=["stratum"]`` the stratified form — ONE copy of the cell
-    arithmetic serves both, so a future fix to the variance term cannot
-    drift the two queries apart."""
-    gd = subj.groupBy(*strata, "cohort", "day").agg(
-        F.sum("ev").cast("long").alias("d"),
-        F.sum(F.lit(1) - F.col("ev")).cast("long").alias("c"),
-    )
-    grid_days = subj.select(*strata, "day").distinct()
-    grid_coh = subj.select(*strata, "cohort").distinct()
-    grid = (
-        grid_days.join(grid_coh, strata)
-        if strata
-        else grid_days.crossJoin(grid_coh)
-    )
-    grid = grid.join(gd, [*strata, "cohort", "day"], "left").select(
-        *strata,
-        "cohort",
-        "day",
-        F.coalesce(F.col("d"), F.lit(0)).alias("d"),
-        F.coalesce(F.col("c"), F.lit(0)).alias("c"),
-    )
-    totg = subj.groupBy(*strata, "cohort").agg(
-        F.count(F.lit(1)).cast("long").alias("n_total")
-    )
-    before = (
-        Window.partitionBy(*strata, "cohort")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    risk = grid.join(F.broadcast(totg), [*strata, "cohort"]).select(
-        *strata,
-        "cohort",
-        "day",
-        F.col("d").alias("n_event"),
-        F.col("c").alias("n_censored"),
-        (
-            F.col("n_total")
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("c")).over(before), F.lit(0)
-            )
+def _logrank_fold(cohorts: dict) -> tuple[dict, tuple]:
+    """Per-cohort KM and the log-rank accumulation for one group's
+    ``{cohort: {day: (d, c)}}`` cells (a stratum, or the whole feed).
+    Every cohort's KM runs on the group's day grid — the risk set of one
+    cohort must be evaluable at the OTHER cohort's event days.  Returns
+    ``({cohort: km rows}, (o1, dsum, e1, v))``, with cohort A's observed
+    events, all events, and E1 and V accumulated in day order: the
+    oracle's window sums, term for term.  One copy serves both log-rank
+    queries, so a fix to the variance term cannot drift them apart."""
+    days = sorted({day for cells in cohorts.values() for day in cells})
+    km = {g: _km_fold(cells, days) for g, cells in cohorts.items()}
+    o1 = dsum = 0
+    e1 = v = 0.0
+    for i in range(len(days)):
+        n1, d1 = km["A"][i][1:3] if "A" in km else (0, 0)
+        nt = sum(rows[i][1] for rows in km.values())
+        dt = sum(rows[i][2] for rows in km.values())
+        o1 += d1
+        dsum += dt
+        e1 += float(dt) * n1 / nt if nt > 0 else 0.0
+        v += (
+            float(dt) * n1 * (nt - n1) * (nt - dt) / (float(nt) * nt * (nt - 1))
+            if nt > 1
+            else 0.0
         )
-        .cast("long")
-        .alias("n_risk"),
-    )
-    cells = risk.groupBy(*strata, "day").agg(
-        F.sum(F.when(F.col("cohort") == "A", F.col("n_event")).otherwise(0))
-        .cast("long")
-        .alias("d1"),
-        F.sum("n_event").cast("long").alias("dt"),
-        F.sum(F.when(F.col("cohort") == "A", F.col("n_risk")).otherwise(0))
-        .cast("long")
-        .alias("n1"),
-        F.sum("n_risk").cast("long").alias("nt"),
-    )
-    wday = (
-        Window.partitionBy(*strata)
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = cells.select(
-        *strata,
-        "day",
-        F.sum("d1").over(wday).alias("o1"),
-        F.sum("dt").over(wday).alias("dsum"),
-        F.sum(
-            F.when(
-                F.col("nt") > 0,
-                F.col("dt").cast("double") * F.col("n1") / F.col("nt"),
-            ).otherwise(F.lit(0.0))
-        )
-        .over(wday)
-        .alias("e1"),
-        F.sum(
-            F.when(
-                F.col("nt") > 1,
-                F.col("dt").cast("double")
-                * F.col("n1")
-                * (F.col("nt") - F.col("n1"))
-                * (F.col("nt") - F.col("dt"))
-                / (
-                    F.col("nt").cast("double")
-                    * F.col("nt")
-                    * (F.col("nt") - 1)
-                ),
-            ).otherwise(F.lit(0.0))
-        )
-        .over(wday)
-        .alias("v"),
-        F.row_number()
-        .over(Window.partitionBy(*strata).orderBy(F.col("day").desc()))
-        .alias("rn"),
-    )
-    return risk, totg, cum
+    return km, (o1, dsum, e1, v)
 
 
 @register(
@@ -1396,105 +1336,48 @@ def _logrank_frames(subj, strata: list[str]):
     "an experiment's bucketing hash.  Same subject construction as "
     "survival_time_to_purchase (origin = first view, event = first "
     "purchase at/after it, censoring at the feed anchor); each cohort's "
-    "product-limit curve runs on the cohort-PARTITIONED per-day grid.  "
+    "product-limit curve runs on the per-day grid of both cohorts.  "
     "The log-rank statistic rides exact integer per-day cells (d_gt, "
-    "n_gt as BIGINT on the <= 31-row day table): expected events "
-    "E1 = sum_t d_t*n_1t/n_t and the hypergeometric variance "
-    "V = sum_t d_t*n_1t*n_2t*(n_t-d_t)/(n_t^2*(n_t-1)) accumulate as "
-    "day-ORDERED window sums (deterministic IEEE order in both "
-    "engines, the exp(sum(ln)) discipline), chi2 = (O1-E1)^2/V emitted "
-    "once, rounded.  Hypothesis-pinned against an independent "
+    "n_gt): expected events E1 = sum_t d_t*n_1t/n_t and the "
+    "hypergeometric variance "
+    "V = sum_t d_t*n_1t*n_2t*(n_t-d_t)/(n_t^2*(n_t-1)) accumulate in "
+    "day order (the oracle's ordered window sums, term for term: "
+    "deterministic IEEE order in both engines, the exp(sum(ln)) "
+    "discipline), chi2 = (O1-E1)^2/V emitted once, rounded.  "
+    "Hypothesis-pinned against an independent "
     "first-principles implementation for ANY censored two-cohort "
     "duration multiset, plus the label-swap invariance and "
     "identical-cohorts => chi2 ~ 0 laws "
     "(tests/test_round16_properties.py).  Scale shape: two keyed "
-    "aggregates + one keyed left join build subjects; ALL window work "
-    "runs on the calendar-bounded per-day grid (<= 31 days x 2 "
-    "cohorts), the whitelisted monthly-rollup window class; no "
-    "per-subject window, no global sort of subjects",
+    "aggregates + one keyed left join build subjects, one keyed "
+    "aggregate folds them to per-(cohort, day) cells, read once by the "
+    "driver under a 65,536-cell bound (the calendar bounds them, "
+    "<= 2 x 366 a year; more raises); the KM and log-rank folds run "
+    "there, and exp, rounding and chi2 run in Spark over the returned "
+    "rows; no per-subject window, no global sort of subjects",
     tags=("event-time", "window", "survival", "funnel", "ab-test"),
 )
 def survival_km_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    subj = _survival_subjects(spark, sf_dir).select(
-        F.when(F.col("user_id") % 2 == 0, F.lit("A"))
-        .otherwise(F.lit("B"))
-        .alias("cohort"),
-        "day",
-        "ev",
-    )
-    risk, _totg, cum = _logrank_frames(subj, [])
-    upto = (
-        Window.partitionBy("cohort")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    km = risk.select(
-        "cohort",
-        "day",
-        "n_risk",
-        "n_event",
-        "n_censored",
-        F.max(
-            F.when(
-                (F.col("n_event") == F.col("n_risk"))
-                & (F.col("n_event") > 0),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-        )
-        .over(upto)
-        .alias("died_out"),
-        F.sum(
-            F.when(
-                F.col("n_event") < F.col("n_risk"),
-                F.log(
-                    F.lit(1.0)
-                    - F.col("n_event").cast("double") / F.col("n_risk")
-                ),
-            ).otherwise(F.lit(0.0))
-        )
-        .over(upto)
-        .alias("log_s"),
-    )
-    tot = cum.filter(F.col("rn") == 1).select(
-        F.col("o1").cast("long").alias("o1"),
-        F.col("dsum").cast("long").alias("dsum"),
-        "e1",
-        "v",
-    )
-    coh = tot.select(
-        F.lit("A").alias("cohort"),
-        F.col("o1").alias("observed"),
-        F.col("e1").alias("e_raw"),
-    ).unionAll(
-        tot.select(
-            F.lit("B"),
-            F.col("dsum") - F.col("o1"),
-            F.col("dsum").cast("double") - F.col("e1"),
-        )
+    cells = _read_cells(spark, sf_dir, "survival_km_logrank", "cohort")
+    km, (o1, dsum, e1, v) = _logrank_fold(cells)
+    coh = {"A": (o1, e1), "B": (dsum - o1, float(dsum) - e1)}
+    rows = [(g, *r, *coh[g], o1, e1, v) for g in km for r in km[g]]
+    schema = (
+        f"cohort string, {_KM_SCHEMA}, observed long, e_raw double, "
+        "o1 long, e1 double, v double"
     )
     return (
-        km.join(F.broadcast(coh), "cohort")
-        .crossJoin(F.broadcast(tot.select("o1", "e1", "v")))
+        local_frame(spark, rows, schema)
         .select(
             "cohort",
             "day",
             "n_risk",
             "n_event",
             "n_censored",
-            F.when(F.col("died_out") == 1, F.lit(0.0))
-            .otherwise(F.round(F.exp("log_s"), 6))
-            .alias("km_survival"),
+            _km_survival(),
             "observed",
             F.round("e_raw", 4).alias("expected"),
-            F.when(
-                F.col("v") > 0,
-                F.round(
-                    (F.col("o1") - F.col("e1"))
-                    * (F.col("o1") - F.col("e1"))
-                    / F.col("v"),
-                    4,
-                ),
-            ).alias("logrank_chi2"),
+            _chi2("o1", "e1", "v").alias("logrank_chi2"),
         )
         .orderBy("cohort", "day")
     )
@@ -1642,79 +1525,48 @@ def survival_km_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "— the standard guard against Simpson-style reversals a pooled "
     "test hides.  Same subject construction as the other survival "
     "queries (shared helper, one censoring rule); integer per-day "
-    "cells; per-stratum accumulation as day-ORDERED window sums "
-    "PARTITIONED by stratum, the cross-stratum combination as a "
-    "stratum-ORDERED window over the <= handful-of-weeks per-stratum "
-    "table — every double accumulates in the same order in both "
-    "engines.  Stratified == unstratified for a single stratum and == "
+    "cells; per-stratum accumulation in day order and the "
+    "cross-stratum combination in stratum order — every double "
+    "accumulates in the same order as the oracle's ordered windows.  "
+    "Stratified == unstratified for a single stratum and == "
     "the Fraction first-principles form for ANY input "
     "(tests/test_round16_properties.py).  Scale shape: keyed "
-    "aggregates to per-(stratum, cohort, day) cells; ALL window work "
-    "on the (weeks x 31 days x 2 cohorts)-bounded grid; no "
-    "per-subject window",
+    "aggregates to per-(stratum, cohort, day) cells, read once by the "
+    "driver under a 65,536-cell bound (a one-year feed's grid is at "
+    "most 53 weeks x 2 cohorts x 366 days, about 38.8k cells; more "
+    "raises); the per-stratum log-rank fold runs there and the "
+    "rounding and chi2 in Spark; no per-subject window",
     tags=("event-time", "window", "survival", "ab-test", "stratified"),
 )
 def survival_logrank_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    subj = _survival_subjects(spark, sf_dir).select(
-        F.floor(
-            F.datediff(
-                F.to_date("first_view"), F.lit("2024-01-01").cast("date")
-            )
-            / F.lit(7.0)
-        )
-        .cast("int")
-        .alias("stratum"),
-        F.when(F.col("user_id") % 2 == 0, F.lit("A"))
-        .otherwise(F.lit("B"))
-        .alias("cohort"),
-        "day",
-        "ev",
+    strata = _read_cells(
+        spark, sf_dir, "survival_logrank_stratified", "stratum", "cohort"
     )
-    _risk, totg, cum = _logrank_frames(subj, ["stratum"])
-    per_s = cum.filter(F.col("rn") == 1).select(
-        "stratum", F.col("o1").cast("long").alias("o1"), "e1", "v"
-    )
-    ws = Window.orderBy("stratum").rowsBetween(Window.unboundedPreceding, 0)
-    comb = per_s.select(
-        F.sum(F.col("o1").cast("double")).over(ws).alias("o_all"),
-        F.sum("e1").over(ws).alias("e_all"),
-        F.sum("v").over(ws).alias("v_all"),
-        F.sum(F.lit(1)).over(ws).alias("k"),
-        F.row_number()
-        .over(Window.orderBy(F.col("stratum").desc()))
-        .alias("rn"),
-    )
-    tot = comb.filter(F.col("rn") == 1).select(
-        "o_all", "e_all", "v_all", F.col("k").cast("long").alias("n_strata")
-    )
-    cnt = totg.groupBy("stratum").agg(
-        F.sum(F.when(F.col("cohort") == "A", F.col("n_total")).otherwise(0))
-        .cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("cohort") == "B", F.col("n_total")).otherwise(0))
-        .cast("long")
-        .alias("n_b"),
+    per_s = []
+    o_all = e_all = v_all = 0.0
+    for s in sorted(strata):
+        _km, (o1, _dsum, e1, v) = _logrank_fold(strata[s])
+        n = {g: sum(d + c for d, c in cells.values()) for g, cells in strata[s].items()}
+        per_s.append((s, n.get("A", 0), n.get("B", 0), o1, e1, v))
+        o_all += float(o1)
+        e_all += e1
+        v_all += v
+    rows = [(*r, len(per_s), o_all, e_all, v_all) for r in per_s]
+    schema = (
+        "stratum int, n_a long, n_b long, observed_a long, e1 double, "
+        "v double, n_strata long, o_all double, e_all double, v_all double"
     )
     return (
-        per_s.join(F.broadcast(cnt), "stratum")
-        .crossJoin(F.broadcast(tot))
+        local_frame(spark, rows, schema)
         .select(
             "stratum",
             "n_a",
             "n_b",
-            F.col("o1").alias("observed_a"),
+            "observed_a",
             F.round("e1", 4).alias("expected_a"),
             F.round("v", 4).alias("variance_a"),
             "n_strata",
-            F.when(
-                F.col("v_all") > 0,
-                F.round(
-                    (F.col("o_all") - F.col("e_all"))
-                    * (F.col("o_all") - F.col("e_all"))
-                    / F.col("v_all"),
-                    4,
-                ),
-            ).alias("stratified_chi2"),
+            _chi2("o_all", "e_all", "v_all").alias("stratified_chi2"),
         )
         .orderBy("stratum")
     )

@@ -19,7 +19,7 @@ from ..operators.similarity import (
     topk_neighbors,
 )
 from .registry import register
-from .tables import table
+from .tables import local_frame, read_bounded, table
 
 COSINE_THRESHOLD = 0.45
 TOPK_QUERY_LIMIT = 20
@@ -542,18 +542,11 @@ def embedding_top_pc(
     cells = vecs.toDF("x").select(
         F.posexplode("x").alias("i", "xi"), "x"
     ).select("i", "xi", F.posexplode("x").alias("j", "xj"))
-    bound = _PC_DIMS**2
-    gram = (
-        cells.groupBy("i", "j")
-        .agg(F.sum(F.col("xi") * F.col("xj")).alias("g"))
-        .limit(bound + 1)
-        .collect()
+    gram = read_bounded(
+        cells.groupBy("i", "j").agg(F.sum(F.col("xi") * F.col("xj")).alias("g")),
+        _PC_DIMS**2,
+        f"embedding_top_pc: the Gram read ({_PC_DIMS} dims)",
     )
-    if len(gram) > bound:
-        raise ValueError(
-            f"embedding_top_pc: the Gram read is bounded at {bound:,} cells "
-            f"({_PC_DIMS} dims); read {len(gram):,} before stopping"
-        )
     rows = []
     if gram:
         g = {(r["i"], r["j"]): r["g"] for r in gram}
@@ -576,7 +569,7 @@ def embedding_top_pc(
         rows = [(i, u[i], m, lam, trace) for i in sorted(u)]
     t = "double" if sketch_only else "long"
     return (
-        spark.createDataFrame(rows, f"dim int, u {t}, m {t}, lam double, trace {t}")
+        local_frame(spark, rows, f"dim int, u {t}, m {t}, lam double, trace {t}")
         .select(
             "dim",
             F.round(F.col("u").cast("double") / F.col("m").cast("double"), 6)

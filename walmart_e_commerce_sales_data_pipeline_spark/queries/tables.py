@@ -94,6 +94,31 @@ def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def read_bounded(df: DataFrame, bound: int, what: str) -> list:
+    """Collect a table whose size the calendar or the schema bounds, not
+    the data: at most ``bound`` rows reach the driver.  One more row than
+    the bound raises ``ValueError`` naming ``what``, the bound and the
+    count read, instead of flooding the driver."""
+    rows = df.limit(bound + 1).collect()
+    if len(rows) > bound:
+        raise ValueError(
+            f"{what} is bounded at {bound:,} cells; read {len(rows):,} "
+            "before stopping"
+        )
+    return rows
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A driver-built result as a Spark frame for its readout expressions.
+    The rows go through a pandas frame, so Arrow hands them over as a
+    LocalRelation: no RDD and no Python-worker job, which a list-form
+    ``createDataFrame`` costs per call."""
+    import pandas as pd
+
+    st = StructType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=st.names), st)
+
+
 def _stat_entry(path: str, rel: str) -> tuple:
     import os
 
