@@ -592,3 +592,27 @@ def test_bench_reads_only_deployment_env_vars():
         "os.getenv('C')\n"
     )
     assert _env_reads(probe) == ["A", "B", "C"]
+
+
+def test_etl_inputs_use_the_reference_files_or_a_generated_stand_in(
+    tmp_path, monkeypatch
+):
+    """The ETL timing reads the reference's files where both exist, and
+    otherwise the reference-shaped inputs generated into the run's work
+    directory; the returned label says which."""
+    import bench
+
+    ref = tmp_path / "ref"
+    ref.mkdir()
+    monkeypatch.setattr(bench, "REFERENCE_DIR", str(ref))
+    (ref / "grocery_sales.csv").write_text("x\n")
+    (ref / "extra_data.parquet").write_bytes(b"")
+    work = tmp_path / "work"
+    csv, parquet, used = bench.etl_inputs(str(work))
+    assert used == "reference" and csv == str(ref / "grocery_sales.csv")
+    (ref / "extra_data.parquet").unlink()
+    csv, parquet, used = bench.etl_inputs(str(work))
+    assert used.startswith("generated") and csv.startswith(str(work))
+    with open(csv) as fh:
+        assert sum(1 for _ in fh) == bench.ETL_STAND_IN_ROWS + 1  # header
+    assert os.path.getsize(parquet) > 0

@@ -21,15 +21,17 @@ the returned default form is audited as well (it is what downstream
 consumers see).  Queries whose materialization is control-flow-bound
 (driver count dispatch, convergence loops, driver-side reads: the
 dedup_clusters family, dup_graph_pagerank's degree scalar,
-embedding_top_pc's bounded Gram read, the survival queries' bounded
-cell read, a join-free aggregate) cannot be audited lazily end-to-end —
+embedding_top_pc's bounded Gram read, the survival queries' and the
+length statistics' bounded cell reads, a join-free aggregate) cannot
+be audited lazily end-to-end —
 their interiors are covered by the operator-level plan assertions in
 test_plans.py/test_dispatch.py and the committed plans/r*/ dumps, and
 the shared pair-build interior they all ride (jaccard_pairs_from_docs)
 keeps its BNLJ-free shape pinned by the jaccard_prefix_filter interior
 audit below plus the brute-force whitelist entries.  The survival
 queries' subject build is audited on the lazy cell aggregate they read
-(``test_survival_cell_aggregate_is_keyed``).
+(``test_survival_cell_aggregate_is_keyed``), and so is the length
+statistics' (``test_length_cell_aggregate_is_keyed``).
 """
 
 from __future__ import annotations
@@ -60,10 +62,6 @@ BNLJ_WHITELIST = {
     "dormant_customer_balance",
     "important_supplier_share",
     "key_skew_profile",
-    # event_dow_independence (round 17): crosses broadcast the 1-row
-    # corpus total and the 1-row (n_types, n_dows) dims frame onto the
-    # single folded output row — the scalar-broadcast class.
-    "event_dow_independence",
     "kmv_sketch_union",
     "ngram_distribution_profile",
     "orders_rfm_segments",
@@ -151,11 +149,6 @@ BNLJ_WHITELIST = {
     # pooled (n1, x1, n2, x2, z) pivot onto the two cohort rows — the
     # scalar-broadcast class.
     "conversion_ab_ztest",
-    # source_length_kruskal (round 18): crosses broadcast the 1-row
-    # (n, tie_term) corpus total and the 1-row source count onto the
-    # single folded output row — the scalar-broadcast class (the
-    # event_dow_independence justification applies verbatim).
-    "source_length_kruskal",
     # score_lift_deciles (round 18): one cross broadcasts the 1-row
     # (n_tot, n_pos_tot) total onto the domain-bounded distinct-score
     # cumulative table and again onto the 10-row bin table
@@ -163,22 +156,6 @@ BNLJ_WHITELIST = {
     # with a BROADCAST 10-row k-grid build side — the revenue_gini_lorenz
     # fixed-decile-grid class.
     "score_lift_deciles",
-    # source_length_levene (round 18): one cross broadcasts the 1-row
-    # (n, k, s, q) total onto the single folded output row — the
-    # scalar-broadcast class (the source_length_kruskal justification
-    # applies verbatim).
-    "source_length_levene",
-    # source_psi_drift (round 17): crosses broadcast the nine decile
-    # edge values onto the doc scan, the 1-row corpus total, and the
-    # fixed 10-bin dimension — the scalar-broadcast / fixed-grid
-    # classes (the source_ks_drift justification applies verbatim).
-    "source_psi_drift",
-    # source_ks_drift (round 17): the grid cross broadcasts the
-    # DISTINCT doc-length dimension (bounded by the curation
-    # max-doc-length cap, not corpus size — the join_cross fixed-grid
-    # class) onto the per-source totals, and a second cross broadcasts
-    # the 1-row corpus total — the scalar-broadcast class.
-    "source_ks_drift",
     # revenue_mann_kendall (round 16): the pair sign-join is an
     # inequality join (ym_a < ym_b) over the MONTHLY aggregate —
     # calendar-bounded (<= ~84 rows, <= ~3.5k pairs at ANY scale
@@ -277,18 +254,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     #   by construction (ngram_distribution_profile's bound); the
     #   corpus-sized work is the two stacked hash aggregates below it.
     "zipf_slope_fit",
-    # - event_dow_independence (round 17): the ordered chi-squared fold
-    #   and last-row rank run over the (event_type x weekday) cell table
-    #   — bounded by the type-domain x 7, never corpus size (an
-    #   ordered IEEE accumulation over a domain-bounded table); its
-    #   crosses also broadcast the 1-row corpus total and the 1-row
-    #   (n_types, n_dows) dims frame (the scalar-broadcast class).
-    "event_dow_independence",
-    # - source_psi_drift (round 17): the decile-edge cumulative window
-    #   runs over the distinct-length histogram — bounded by the length
-    #   DOMAIN (the source_ks_drift class); the PSI fold itself is
-    #   source-PARTITIONED over a 10-row grid.
-    "source_psi_drift",
     # - spearman_rank_corr (round 18): the two midrank prefix windows
     #   run over per-column distinct-VALUE count tables — quantity's
     #   domain is 50 values and discount's 11 by the TPC-H pricing spec
@@ -296,14 +261,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     #   pass is the single map-side-combined sufficient-statistics
     #   aggregate below them.
     "spearman_rank_corr",
-    # - source_length_kruskal (round 18): the midrank prefix window runs
-    #   over the distinct-length count table — bounded by the length
-    #   DOMAIN (the source_ks_drift / source_psi_drift class) — and the
-    #   ordered H fold + last-row rank over the per-source rank-sum
-    #   table — one row per corpus source, a config-sized set; the
-    #   corpus-sized work is the two map-side-combined hash aggregates
-    #   below them.
-    "source_length_kruskal",
     # - score_lift_deciles (round 18): the score-DESC cumulative window
     #   runs over the distinct-score count table — DOMAIN-bounded at
     #   <= ~56k cent values at any SF (the quality_score_auc bound) —
@@ -311,12 +268,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     #   table; the corpus-sized pass is the single per-score hash
     #   aggregate below them.
     "score_lift_deciles",
-    # - source_length_levene (round 18): the ordered F fold + last-row
-    #   rank run over the per-source deviation-sum table — one row per
-    #   corpus source, a config-sized set (the source_length_kruskal
-    #   class); the median scan windows are source-PARTITIONED and the
-    #   corpus-sized work is the single (source, length) hash aggregate.
-    "source_length_levene",
     "kmv_sketch_union",
     "ngram_distribution_profile",
     "bm25_doc_retrieval",
@@ -343,35 +294,16 @@ UNPARTITIONED_WINDOW_WHITELIST = {
 # - ngram_distribution_profile: the counts-of-counts table — ≤ √(2N) rows
 #   by construction (d distinct count values satisfy d(d+1)/2 ≤ N).
 SINGLE_PARTITION_WHITELIST = {
-    # - source_psi_drift (round 17): the exchange feeds the decile-edge
-    #   cumulative window over the distinct-length histogram — bounded
-    #   by the length domain at any SF (the KS-grid class).
-    "source_psi_drift",
     # - spearman_rank_corr (round 18): the exchanges feed the two
     #   midrank prefix windows over per-column distinct-value count
     #   tables — 50- and 11-row domains by spec at any SF (see the
     #   unpartitioned-window entry above).
     "spearman_rank_corr",
-    # - source_length_kruskal (round 18): the exchanges feed the midrank
-    #   prefix window over the distinct-length count table (length-DOMAIN
-    #   bounded) and the ordered H fold over the per-source rank-sum
-    #   aggregate (one row per source) — see the unpartitioned-window
-    #   entry above.
-    "source_length_kruskal",
     # - score_lift_deciles (round 18): the exchanges feed the score-DESC
     #   cumulative window over the distinct-score aggregate
     #   (domain-bounded) and the gains window over the 10-row bin
     #   aggregate — see the unpartitioned-window entry above.
     "score_lift_deciles",
-    # - source_length_levene (round 18): the exchange feeds the ordered
-    #   F fold over the per-source deviation-sum aggregate (one row per
-    #   source) — see the unpartitioned-window entry above.
-    "source_length_levene",
-    # - event_dow_independence (round 17): the exchange feeds the
-    #   ordered chi-squared fold over the (event_type x weekday) cell
-    #   aggregate — bounded by the type-domain x 7 at any SF (see the
-    #   unpartitioned-window entry above).
-    "event_dow_independence",
     # - pareto_frontier_parts: the single-partition exchange feeds the
     #   bucket-summary prefix-max window — a FINAL aggregate over the $1
     #   price buckets, domain-bounded at <= ~1,201 rows (see the
@@ -539,6 +471,25 @@ def test_survival_cell_aggregate_is_keyed(spark):
         assert "Functions [1]: [max(ts" in plan, keys  # the anchor aggregate
         assert not unpartitioned_windows(df), keys
         assert not single_partition_funnels(df), keys
+
+
+def test_length_cell_aggregate_is_keyed(spark):
+    """The four document-length statistics return a driver-built
+    readout; their one bounded read collects the lazy (source, n_chars)
+    aggregate.  Audit it: one keyed hash aggregate over the documents
+    scan, no nested loop, no unpartitioned window and no
+    single-partition funnel."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.diagnostics import (
+        _length_agg,
+    )
+
+    df = _length_agg(spark, SF001)
+    plan = formatted_plan(df)
+    assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan
+    assert "Keys [2]: [source" in plan and "n_chars" in plan, plan
+    assert "hashpartitioning(source" in plan, plan
+    assert not unpartitioned_windows(df)
+    assert not single_partition_funnels(df)
 
 
 def test_window_detector_flags_injected_funnel(spark):

@@ -253,6 +253,9 @@ def test_embedding_queries_on_degenerate_corpora(spark, tmp_path, n, d, zero_row
         "similarity_pairs",
         "similarity_topk",
         "similarity_topk_ivf",
+        "similarity_pairs_blocked",
+        "dedup_embedding",
+        "dup_graph_triangles",
     ):
         sdf = q.REGISTRY[name].fn(spark, str(tmp_path))
         _, got = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)

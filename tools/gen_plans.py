@@ -359,10 +359,9 @@ COMMENT = {
     "the shingle for the min-doc aggregate and once for the instance "
     "join back (the standard dedup shingle shape), then one map-side-"
     "combined per-doc rollup; no window, no collect",
-    "source_length_kruskal": "round 18: midrank prefix window over the "
-    "length-DOMAIN count table broadcasts onto the (source x length) "
-    "cell table; the H fold is an ordered window over the per-source "
-    "rank sums (one row per source); 1-row output",
+    "source_length_kruskal": "one (source, length) hash aggregate, read "
+    "once by the driver under a 262,144-cell bound; the midranks and the "
+    "H fold run there, so the plan is a 1-row local readout",
     "events_hourly_countsketch": "round 18: the signed (hour, r, b) "
     "cell aggregate is bounded at depth*width per hour; the top-user "
     "rank window is hour-PARTITIONED; the probe join is a "
@@ -372,11 +371,9 @@ COMMENT = {
     "then every window (score-DESC cumulative, decile gains) and the "
     "10-row k-grid range join run on the DOMAIN-bounded distinct-score "
     "table; 10-row output",
-    "source_length_levene": "round 18: one (source, length) hash "
-    "aggregate; the median scan windows are source-PARTITIONED over "
-    "the domain-bounded cell table; the per-source median frame "
-    "broadcasts back; the F fold is an ordered window over one row "
-    "per source; 1-row output",
+    "source_length_levene": "the source_length_kruskal cell read; the "
+    "median scan and the F fold run on the driver, so the plan is a "
+    "1-row local readout",
 }
 
 

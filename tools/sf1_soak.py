@@ -69,11 +69,12 @@ HEAVY = [
     # vocab-bounded, not corpus-bounded)
     "kmv_sketch_union",
     "winsorized_price_stats",
-    # round 17: the KS one-vs-rest drift screen (grid = sources x
-    # distinct lengths — the length DOMAIN must stay bounded while docs
-    # grow 10x), the A/B z-test (one user-keyed shuffle), the per-hour
-    # A-ES sample (top-k window state per hour), and the chi-squared
-    # fold (cells bounded by type-domain x 7 at any SF)
+    # round 17: the KS and PSI drift screens (one driver read of the
+    # (source, length) cells — sources x distinct lengths, which must
+    # stay flat while docs grow 10x), the A/B z-test (one user-keyed
+    # shuffle), the per-hour A-ES sample (top-k window state per hour),
+    # and the chi-squared screen (one driver read of cells bounded by
+    # the type domain x 7 at any SF)
     "source_ks_drift",
     "source_psi_drift",
     "conversion_ab_ztest",
@@ -319,8 +320,9 @@ HEAVY = [
     # round 18: the trigram first-doc attribution (shingle-keyed
     # min-doc aggregate + instance join — the standard dedup shape).
     "ngram_novelty_rate",
-    # round 18: the k-sample rank test (domain-bounded midrank window +
-    # per-source fold — state must stay flat as the corpus grows).
+    # round 18: the k-sample rank test (the same bounded (source,
+    # length) cell read — the driver's rows must stay flat as the
+    # corpus grows).
     "source_length_kruskal",
     # round 18: the Count-Sketch hourly readout — the signed cell table
     # is bounded at depth*width per hour, so shuffle must stay flat per
@@ -330,9 +332,9 @@ HEAVY = [
     # the domain-bounded distinct-score table, so shuffle must stay
     # flat as event volume grows.
     "score_lift_deciles",
-    # round 18: the Brown-Forsythe dispersion test — the (source x
-    # length) cell table bounds everything, so shuffle must stay flat
-    # as the corpus grows.
+    # round 18: the Brown-Forsythe dispersion test — the same bounded
+    # (source, length) cell read, so shuffle and the driver's rows must
+    # stay flat as the corpus grows.
     "source_length_levene",
 ]
 

@@ -442,6 +442,29 @@ def _verify_pairs_join(
     )
 
 
+_PAIR_SCHEMA = "x long, y long, sim double"
+
+
+def _broadcast_corpus(embeddings: DataFrame, id_col: str, vec_col: str):
+    """Collect the corpus once and broadcast ``(ids, mat)``: int64 ids
+    ascending and their L2-normalized float64 rows, the lookup both GEMM
+    kernels read.  An empty corpus broadcasts a 0 x 0 matrix (numpy's
+    axis-1 norm rejects the 1-d array an empty stack gives), so both
+    kernels run their empty batches unchanged."""
+    import numpy as np
+
+    rows = embeddings.select(id_col, vec_col).collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = (
+        np.array([r[1] for r in rows], dtype=np.float64)
+        if rows
+        else np.zeros((0, 0))
+    )
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    order = np.argsort(ids)
+    return embeddings.sparkSession.sparkContext.broadcast((ids[order], mat[order]))
+
+
 def _verify_pairs_gemm(
     cands: DataFrame,
     embeddings: DataFrame,
@@ -451,32 +474,8 @@ def _verify_pairs_gemm(
 ) -> DataFrame:
     """Broadcast-GEMM verification kernel — only reached below
     ``broadcast_limit`` (see ``verify_pairs``)."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    import numpy as np
-
-    rows = embeddings.select(id_col, vec_col).collect()
-    if not rows:  # np axis-1 ops reject a 0×0 matrix; nothing to verify
-        return cands.select(
-            F.col("x").cast("long"),
-            F.col("y").cast("long"),
-            F.lit(0.0).alias("sim"),
-        ).limit(0)
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    order = np.argsort(ids)
-    ids_sorted, mat_sorted = ids[order], mat[order]
-    corpus = embeddings.sparkSession.sparkContext.broadcast((ids_sorted, mat_sorted))
+    corpus = _broadcast_corpus(embeddings, id_col, vec_col)
     thr = float(threshold)
-
-    out_schema = StructType(
-        [
-            StructField("x", LongType()),
-            StructField("y", LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
 
     def verify(it):
         import numpy as np  # noqa: F811
@@ -494,7 +493,7 @@ def _verify_pairs_gemm(
             keep = sims >= thr
             yield pd.DataFrame({"x": xs[keep], "y": ys[keep], "sim": sims[keep]})
 
-    return cands.mapInPandas(verify, schema=out_schema)
+    return cands.mapInPandas(verify, schema=_PAIR_SCHEMA)
 
 
 def block_cosine_pairs(
@@ -521,29 +520,12 @@ def block_cosine_pairs(
     the inner loop is one BLAS GEMM per Arrow batch instead of a per-pair
     lambda fold — measured ~50× faster at sf0.1.
     """
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    import numpy as np
-
     n = embeddings.count() if corpus_rows is None else corpus_rows
     if n > broadcast_limit:
         return cosine_pairs(embeddings, id_col, vec_col, threshold)
 
-    rows = embeddings.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = embeddings.sparkSession.sparkContext
-    corpus = sc.broadcast((ids, mat))
+    corpus = _broadcast_corpus(embeddings, id_col, vec_col)
     thr = float(threshold)
-
-    out_schema = StructType(
-        [
-            StructField("x", LongType()),
-            StructField("y", LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
 
     # Self-contained closure (workers may not have this package importable).
     def block(it):
@@ -563,7 +545,7 @@ def block_cosine_pairs(
             keep = xs < ys  # dedupe unordered pairs, drop self-matches
             yield pd.DataFrame({"x": xs[keep], "y": ys[keep], "sim": sims[bi, cj][keep]})
 
-    return embeddings.select(id_col, vec_col).mapInPandas(block, schema=out_schema)
+    return embeddings.select(id_col, vec_col).mapInPandas(block, schema=_PAIR_SCHEMA)
 
 
 def train_ivf_centroids(

@@ -23,11 +23,14 @@ relational plans:
 
 from __future__ import annotations
 
+from bisect import bisect_left
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import register
-from .tables import table
+from .tables import local_frame, read_bounded, table
 
 
 @register(
@@ -2367,6 +2370,54 @@ def revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- document-length statistics: one bounded (source, length) cell read ------
+
+# The statistics below and event_dow_independence fold their bounded
+# cell tables on the driver.  Integers stay exact Python ints, and each
+# double sum adds its terms in the oracle's window order with Spark's
+# expression order, so the float bits match the window plans they
+# replace.  Rounding, exp and ln stay Spark readout expressions over a
+# local frame: Spark's HALF_UP round and StrictMath are not Python's.
+
+# Bound on the length statistics' one driver read.  The (source, length)
+# cell table has at most sources x distinct lengths cells: the corpus
+# has 20 sources and lengths of 44-577 characters at every scale factor
+# (3,933 cells at sf0.1 and at sf1), and the bound admits 64 sources
+# over a 4,096-character length domain, a few MB of driver rows.
+_LENGTH_CELLS = 262_144
+
+
+def _length_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy ``(source, n_chars, c)`` document-count aggregate the
+    length statistics read."""
+    return (
+        table(spark, sf_dir, "documents")
+        .groupBy("source", "n_chars")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+
+
+def _length_cells(spark: SparkSession, sf_dir: str, query: str) -> dict:
+    """Read the cell table once, ``{source: {length: count}}`` with
+    sources and lengths ascending (Python's ``str`` order is Spark's
+    binary string order); more than ``_LENGTH_CELLS`` cells raises."""
+    out: dict = {}
+    rows = read_bounded(
+        _length_agg(spark, sf_dir), _LENGTH_CELLS, f"{query}: the length cell read"
+    )
+    for source, v, c in sorted(rows):
+        out.setdefault(source, {})[v] = c
+    return out
+
+
+def _pooled(cells: dict) -> dict:
+    """The corpus length histogram ``{length: count}``, lengths ascending."""
+    pooled: Counter = Counter()
+    for by_len in cells.values():
+        pooled.update(by_len)
+    return dict(sorted(pooled.items()))
+
+
 @register(
     "source_ks_drift",
     oracle="""
@@ -2435,10 +2486,11 @@ def revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "asymptotic Kolmogorov p-value — completes the drift family beside "
     "source_unigram_divergence (distributional JS), revenue_mann_kendall "
     "(temporal), and events_hourly_anomaly (pointwise z). Exactness: "
-    "the ECDF cells are BIGINT cumulative counts at the merged distinct "
-    "lengths; D's numerator max|cum_s*n_rest - cum_rest*n_s| stays in "
-    "DECIMAL(38,0) (the HHI ssq precedent — n^2 outruns BIGINT at "
-    "petabyte corpus counts), so D itself is an exact integer ratio and "
+    "the ECDF cells are exact integer cumulative counts at the merged "
+    "distinct lengths; D's numerator max|cum_s*n_rest - cum_rest*n_s| "
+    "stays an exact integer (DECIMAL(38,0) in the oracle, the HHI ssq "
+    "precedent — n^2 outruns BIGINT at petabyte corpus counts), so D "
+    "itself is an exact integer ratio and "
     "bit-identical cross-engine, with d_num PUBLISHED as a digit string "
     "(decimal-typed output columns are the one thing the external value "
     "hash has never accepted — 0-for-5 across rounds 1-18, including "
@@ -2453,53 +2505,32 @@ def revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(~1e-15), six orders of magnitude inside the data's 5e-7-boundary "
     "guard distance (asserted by "
     "tests/test_diagnostics.py::test_ks_drift_pvalue_boundary_guard). Scale shape: one shuffle on "
-    "(source, length) for counts; the grid is |sources| x |distinct "
-    "lengths| (length domain is bounded by the curation max-doc-length "
-    "cap, not corpus size), cumulated under a source-PARTITIONED window; "
-    "the pooled ECDF folds out of the same grid by a length-keyed "
-    "aggregate instead of a second unpartitioned window; the 1-row "
-    "corpus total broadcasts",
+    "(source, length) for counts; the driver reads that cell table once, "
+    "bounded at 262,144 cells (sources x distinct lengths: the length "
+    "domain is bounded by the curation max-doc-length cap, not corpus "
+    "size; more raises), walks each source's ECDF against the pooled "
+    "one in length order with exact Python integers, and the "
+    "per-source rows return to Spark for the p-value readout",
     tags=("text", "drift", "curation", "exact-cells"),
 )
 def source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents").select("source", "n_chars")
-    sv = (
-        docs.groupBy("source", F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    vals = sv.select("v").distinct()
-    st = sv.groupBy("source").agg(F.sum("c").cast("long").alias("n_s"))
-    tot = st.agg(F.sum("n_s").cast("long").alias("n_tot"))
-    grid = (
-        st.crossJoin(F.broadcast(vals))
-        .join(sv, ["source", "v"], "left")
-        .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    gc = grid.withColumn("cum_s", F.sum("c").over(w).cast("long"))
-    ca = gc.groupBy("v").agg(F.sum("cum_s").cast("long").alias("cum_all"))
-    dec = "decimal(38,0)"
-    diffs = (
-        gc.join(ca, "v")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "dn",
-            F.abs(
-                F.col("cum_s").cast(dec) * (F.col("n_tot") - F.col("n_s"))
-                - (F.col("cum_all") - F.col("cum_s")).cast(dec) * F.col("n_s")
-            ),
-        )
-    )
-    per = diffs.groupBy("source").agg(
-        F.max("n_s").alias("n_docs"),
-        (F.max("n_tot") - F.max("n_s")).cast("long").alias("n_rest"),
-        F.max("dn").cast(dec).alias("d_num"),
+    cells = _length_cells(spark, sf_dir, "source_ks_drift")
+    pooled = _pooled(cells)
+    cum_all, n_tot = [], 0
+    for c in pooled.values():
+        n_tot += c
+        cum_all.append(n_tot)
+    rows = []
+    for source, by_len in cells.items():
+        n_s = sum(by_len.values())
+        n_rest = n_tot - n_s
+        cum = d_num = 0
+        for v, ca in zip(pooled, cum_all):
+            cum += by_len.get(v, 0)
+            d_num = max(d_num, abs(cum * n_rest - (ca - cum) * n_s))
+        rows.append((source, n_s, n_rest, str(d_num)))
+    per = local_frame(
+        spark, rows, "source string, n_docs long, n_rest long, d_num string"
     )
     nd = F.col("n_docs").cast("double")
     nr = F.col("n_rest").cast("double")
@@ -2524,7 +2555,7 @@ def source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n_rest",
-        F.col("d_num").cast("string").alias("d_num"),
+        "d_num",
         "ks_d",
         F.when(
             F.col("n_rest") > 0,
@@ -2533,6 +2564,12 @@ def source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.least(F.lit(1.0), F.greatest(F.lit(0.0), p_raw)), 6),
         ).alias("p_value"),
     ).orderBy("source")
+
+
+# Bound on event_dow_independence's one driver read: event types x 7
+# weekdays.  The feed has 5 event types (35 cells); the bound admits
+# 585 types before it raises.
+_DOW_CELLS = 4_096
 
 
 @register(
@@ -2589,81 +2626,65 @@ def source_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contingency cells and both marginals are pure BIGINT; chi2 uses "
     "the algebraic form N*(sum o^2/(r*c)) - N so empty cells contribute "
     "nothing and no (o-e) subtraction is needed; the 35-term double sum "
-    "is accumulated under an ORDERED unpartitioned window over the "
-    "(event_type, dow) cell table (the survival_km_logrank day-ordered "
-    "IEEE pattern) so both engines add in the identical sequence — a "
+    "is accumulated in (event_type, dow) order, the oracle's ORDERED "
+    "window over the cell table term for term, so both engines add in "
+    "the identical sequence — a "
     "groupBy SUM would be partition-order-dependent and hash-diverge; "
     "clamped at 0 before the single rounding (FP can dip epsilon "
     "negative under perfect independence).  Scale shape: one shuffle on "
-    "(event_type, dow) — the cell table is bounded by the type-domain x "
-    "7, NOT by corpus size, so the unpartitioned fold window moves <= "
-    "~dozens of rows at any SF; marginals and the 1-row total broadcast",
+    "(event_type, dow); the driver reads that cell table once, bounded "
+    "at 4,096 cells (the type domain x 7, NOT corpus size; more "
+    "raises), folds the marginals and the 35-term sum in (event_type, "
+    "dow) order, and one row returns to Spark for the rounding",
     tags=("events", "statistics", "independence", "exact-cells"),
 )
 def event_dow_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_type", F.weekday("ts").cast("int").alias("dow")
+    agg = (
+        table(spark, sf_dir, "events")
+        .groupBy("event_type", F.weekday("ts").cast("int").alias("dow"))
+        .agg(F.count(F.lit(1)).cast("long").alias("o"))
     )
-    cells = ev.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).cast("long").alias("o")
+    cells = sorted(
+        read_bounded(agg, _DOW_CELLS, "event_dow_independence: the weekday cell read")
     )
-    rt = cells.groupBy("event_type").agg(F.sum("o").cast("long").alias("r"))
-    ct = cells.groupBy("dow").agg(F.sum("o").cast("long").alias("c"))
-    tot = cells.agg(F.sum("o").cast("long").alias("n"))
-    dims = rt.agg(F.count(F.lit(1)).cast("long").alias("n_types")).crossJoin(
-        F.broadcast(ct.agg(F.count(F.lit(1)).cast("long").alias("n_dows")))
+    r: Counter = Counter()
+    c: Counter = Counter()
+    for event_type, dow, o in cells:
+        r[event_type] += o
+        c[dow] += o
+    s = 0.0
+    for event_type, dow, o in cells:
+        s += float(o) * o / (float(r[event_type]) * c[dow])
+    n = sum(r.values())
+    dof = (len(r) - 1) * (len(c) - 1)
+    rows = []
+    if cells:
+        rows.append((n, len(r), len(c), dof, max(0.0, float(n) * s - float(n))))
+    out = local_frame(
+        spark,
+        rows,
+        "n_events long, n_types long, n_dows long, dof long, chi2_raw double",
     )
-    terms = (
-        cells.join(F.broadcast(rt), "event_type")
-        .join(F.broadcast(ct), "dow")
-        .select(
-            "event_type",
-            "dow",
-            (
-                (F.col("o").cast("double") * F.col("o"))
-                / (F.col("r").cast("double") * F.col("c"))
-            ).alias("term"),
-        )
-    )
-    wfold = Window.orderBy("event_type", "dow").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    folded = terms.select(
-        F.sum("term").over(wfold).alias("s"),
-        F.row_number()
-        .over(Window.orderBy(F.col("event_type").desc(), F.col("dow").desc()))
-        .alias("rn"),
-    ).filter(F.col("rn") == 1)
-    nd = F.col("n").cast("double")
-    chi2_raw = F.greatest(F.lit(0.0), nd * F.col("s") - nd)
-    dof = (F.col("n_types") - 1) * (F.col("n_dows") - 1)
-    return (
-        folded.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(dims))
-        .select(
-            F.col("n").alias("n_events"),
-            "n_types",
-            "n_dows",
-            dof.cast("long").alias("dof"),
-            F.round(chi2_raw, 4).alias("chi2"),
-            F.when(
-                dof > 0,
-                F.round(
-                    F.sqrt(
-                        chi2_raw
-                        / (
-                            nd
-                            * F.least(
-                                F.col("n_types") - 1, F.col("n_dows") - 1
-                            )
-                        )
-                    ),
-                    4,
+    chi2_raw = F.col("chi2_raw")
+    return out.select(
+        "n_events",
+        "n_types",
+        "n_dows",
+        "dof",
+        F.round(chi2_raw, 4).alias("chi2"),
+        F.when(
+            F.col("dof") > 0,
+            F.round(
+                F.sqrt(
+                    chi2_raw
+                    / (
+                        F.col("n_events").cast("double")
+                        * F.least(F.col("n_types") - 1, F.col("n_dows") - 1)
+                    )
                 ),
-            ).alias("cramers_v"),
-        )
+                4,
+            ),
+        ).alias("cramers_v"),
     )
 
 
@@ -2744,102 +2765,64 @@ def event_dow_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "diverge cross-engine), shares are Laplace-smoothed "
     "(c+0.5)/(n+5) so empty cells contribute finitely instead of "
     "ln(0) (documented convention, mirrored exactly), and the 10-term "
-    "sum folds under a source-PARTITIONED bin-ordered window so both "
-    "engines accumulate in the identical IEEE sequence.  Scale shape: "
-    "the length histogram and its decile scan are length-DOMAIN-bounded "
-    "(the source_ks_drift class); bin assignment is a broadcast of nine "
-    "edge values against the doc scan; one shuffle on (source, bin) to "
-    "a 10-row-per-source grid; every downstream frame is sources x 10",
+    "sum folds in bin order per source (a Spark aggregate over the "
+    "driver's p and q arrays, so ln stays the JVM's) — the oracle's "
+    "bin-ordered window, term for term.  Scale shape: one shuffle on "
+    "(source, length) for counts; the driver reads that cell table "
+    "once, bounded at 262,144 cells (the source_ks_drift bound; more "
+    "raises), and derives the decile edges, the bins and the shares "
+    "from it with exact Python integers; sources x 10 shares return "
+    "to Spark",
     tags=("text", "drift", "curation"),
 )
 def source_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents").select("source", "n_chars")
-    vt = docs.groupBy(F.col("n_chars").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
+    cells = _length_cells(spark, sf_dir, "source_psi_drift")
+    pooled = _pooled(cells)
+    n = sum(pooled.values())
+    # edge_k is the smallest length whose cumulative count reaches k/10
+    # of the corpus, k = 1..9; a length's bin counts the edges below it
+    edges, cf = [], 0
+    for v, c in pooled.items():
+        cf += c
+        while len(edges) < 9 and cf * 10 >= (len(edges) + 1) * n:
+            edges.append(v)
+    binned = {}
+    for source, by_len in cells.items():
+        c_s = [0] * 10
+        for v, c in by_len.items():
+            c_s[bisect_left(edges, v)] += c
+        binned[source] = c_s
+    c_all = [sum(col) for col in zip(*binned.values())]
+    rows = []
+    for source, c_s in binned.items():
+        n_s = sum(c_s)
+        if n > n_s:
+            p = [(float(c) + 0.5) / (float(n_s) + 5.0) for c in c_s]
+            q = [
+                (float(a - c) + 0.5) / (float(n - n_s) + 5.0)
+                for a, c in zip(c_all, c_s)
+            ]
+            rows.append((source, n_s, p, q))
+    terms = local_frame(
+        spark, rows, "source string, n_docs long, p array<double>, q array<double>"
     )
-    tot = vt.agg(F.sum("c").cast("long").alias("n"))
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = vt.select("v", F.sum("c").over(wcum).cast("long").alias("cf"))
-    ks = spark.range(1, 10).select(F.col("id").cast("int").alias("k"))
-    edges = (
-        cum.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(ks), F.col("cf") * 10 >= F.col("k") * F.col("n"))
-        .groupBy("k")
-        .agg(F.min("v").alias("edge"))
-    )
-    binned = (
-        docs.crossJoin(F.broadcast(edges.select("edge")))
-        .groupBy("source", "n_chars")
-        .agg(
-            F.sum(F.when(F.col("n_chars") > F.col("edge"), 1).otherwise(0))
-            .cast("int")
-            .alias("bin_sum"),
-            (F.count(F.lit(1)) / F.lit(9)).cast("long").alias("n_dup"),
-        )
-    )
-    # each (source, n_chars) group held its docs x 9 edge rows: bin =
-    # edges-below per doc (bin_sum / n_docs_in_group), count = group/9
-    sb = (
-        binned.select(
-            "source",
-            (F.col("bin_sum") / F.col("n_dup")).cast("int").alias("bin"),
-            F.col("n_dup").alias("c"),
-        )
-        .groupBy("source", "bin")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-    st = sb.groupBy("source").agg(F.sum("c").cast("long").alias("n_s"))
-    bins = spark.range(0, 10).select(F.col("id").cast("int").alias("bin"))
-    grid = (
-        st.crossJoin(F.broadcast(bins))
-        .join(sb, ["source", "bin"], "left")
-        .withColumn("c_s", F.coalesce(F.col("c"), F.lit(0)))
-        .drop("c")
-    )
-    bt = grid.groupBy("bin").agg(F.sum("c_s").cast("long").alias("c_all"))
-    terms = (
-        grid.join(F.broadcast(bt), "bin")
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("n") > F.col("n_s"))
-        .select(
-            "source",
-            "n_s",
-            "bin",
-            (
-                (F.col("c_s").cast("double") + F.lit(0.5))
-                / (F.col("n_s").cast("double") + F.lit(5.0))
-            ).alias("p"),
-            (
-                ((F.col("c_all") - F.col("c_s")).cast("double") + F.lit(0.5))
-                / ((F.col("n") - F.col("n_s")).cast("double") + F.lit(5.0))
-            ).alias("q"),
-        )
-    )
-    wfold = (
-        Window.partitionBy("source")
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    # the 10-term sum folds in bin order, with the JVM's ln
     folded = terms.select(
         "source",
-        "n_s",
-        F.sum((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")))
-        .over(wfold)
-        .alias("s"),
-        F.row_number()
-        .over(Window.partitionBy("source").orderBy(F.col("bin").desc()))
-        .alias("rn"),
-    ).filter(F.col("rn") == 1)
+        "n_docs",
+        F.aggregate(
+            F.arrays_zip("p", "q"),
+            F.lit(0.0),
+            lambda acc, t: acc + (t["p"] - t["q"]) * F.log(t["p"] / t["q"]),
+        ).alias("s"),
+    )
+    s = F.col("s")
     return folded.select(
         "source",
-        F.col("n_s").alias("n_docs"),
-        F.round(F.col("s"), 6).alias("psi"),
-        F.when(F.col("s") < 0.1, F.lit("stable"))
-        .when(F.col("s") < 0.25, F.lit("moderate"))
+        "n_docs",
+        F.round(s, 6).alias("psi"),
+        F.when(s < 0.1, F.lit("stable"))
+        .when(s < 0.25, F.lit("moderate"))
         .otherwise(F.lit("shifted"))
         .alias("verdict"),
     ).orderBy("source")
@@ -2915,108 +2898,64 @@ def source_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distribution the same across ALL sources at once?), rank-based so "
     "it is robust to the heavy right tail document lengths always "
     "have.  Exactness: ties make ranks half-integers, so rank sums run "
-    "on DOUBLED midranks mr2 = 2*cum_before + cnt + 1 — pure BIGINT "
-    "(s2_g = 2*R_g fits BIGINT to N ~ 2e9: s2_g <= 2N^2 < 9.2e18); the "
-    "tie term sum(t^3 - t) and N^3 - N are DECIMAL(38,0) internally, "
+    "on DOUBLED midranks mr2 = 2*cum_before + cnt + 1 — exact integers "
+    "(the oracle's BIGINT s2_g = 2*R_g holds to N ~ 2e9: s2_g <= 2N^2 < "
+    "9.2e18); the tie term sum(t^3 - t) and N^3 - N are exact integers "
+    "(DECIMAL(38,0) in the oracle), "
     "with tie_term PUBLISHED as a digit string (decimal-typed output "
     "columns are the one thing the external value hash has never "
     "accepted — 0-for-5 across rounds 1-18 — where an integer's digit "
     "string renders identically in every engine build); H folds the "
-    "per-source (S_g/2)^2/n_g terms under an ORDERED unpartitioned "
-    "window over the source table (the event_dow_independence IEEE "
-    "pattern — a groupBy SUM would be partition-order-dependent and "
-    "hash-diverge), clamps the epsilon-negative all-equal case at 0, "
+    "per-source (S_g/2)^2/n_g terms in source order (the oracle's "
+    "ORDERED window, term for term — a groupBy SUM would be "
+    "partition-order-dependent and hash-diverge), clamps the "
+    "epsilon-negative all-equal case at 0, "
     "and rounds once; the tie-corrected H divides by 1 - T/(N^3-N), "
     "NULL-guarded on the all-values-tied degeneracy by an EXACT "
-    "decimal comparison.  Scale shape: midranks live on the distinct-"
-    "length table (domain-bounded — the zipf counts-of-counts class) "
-    "and broadcast onto the (source, length) cell table, itself "
-    "bounded by sources x length-domain, NOT corpus size; the "
-    "unpartitioned fold window moves one row per source; two map-side-"
-    "combined shuffles total, 1-row output, no driver collect",
+    "integer comparison.  Scale shape: one map-side-combined shuffle to "
+    "the (source, length) cell table, bounded by sources x "
+    "length-domain, NOT corpus size; the driver reads it once under "
+    "the source_ks_drift bound (262,144 cells; more raises), derives "
+    "the midranks, rank sums and tie term with exact Python integers, "
+    "and one row returns to Spark for the rounding",
     tags=("statistics", "drift", "exact-cells", "text"),
 )
 def source_length_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents").select(
-        "source", F.col("n_chars").alias("v")
-    )
-    vt = docs.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    mr = vt.select(
-        "v",
-        (
-            F.lit(2) * (F.sum("c").over(wcum).cast("long") - F.col("c"))
-            + F.col("c")
-            + F.lit(1)
-        ).alias("mr2"),
-    )
-    cells = docs.groupBy("source", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    grp = (
-        cells.join(F.broadcast(mr), "v")
-        .groupBy("source")
-        .agg(
-            F.sum("c").cast("long").alias("n_g"),
-            F.sum(F.col("c") * F.col("mr2")).cast("long").alias("s2_g"),
+    cells = _length_cells(spark, sf_dir, "source_length_kruskal")
+    # doubled midranks 2*cum_before + c + 1 over the pooled histogram
+    mr2, n, tie_term = {}, 0, 0
+    for v, c in _pooled(cells).items():
+        mr2[v] = 2 * n + c + 1
+        n += c
+        tie_term += c * c * c - c
+    s = 0.0
+    for by_len in cells.values():
+        s2_g = float(sum(c * mr2[v] for v, c in by_len.items()))
+        s += (s2_g / 2) * (s2_g / 2) / sum(by_len.values())
+    rows = []
+    if cells:
+        h_raw = max(0.0, 12.0 / (float(n) * (n + 1)) * s - 3.0 * (n + 1))
+        n3_minus_n = n * n * n - n
+        h_tied = (
+            h_raw / (1.0 - float(tie_term) / float(n3_minus_n))
+            if tie_term < n3_minus_n
+            else None
         )
+        k = len(cells)
+        rows.append((n, k, k - 1, str(tie_term), h_raw, h_tied))
+    out = local_frame(
+        spark,
+        rows,
+        "n_docs long, n_sources long, dof long, tie_term string, "
+        "h_raw double, h_tied double",
     )
-    dec = "decimal(38,0)"
-    tot = vt.agg(
-        F.sum("c").cast("long").alias("n"),
-        F.sum(F.col("c").cast(dec) * F.col("c") * F.col("c") - F.col("c"))
-        .cast(dec)
-        .alias("tie_term"),
-    )
-    dims = grp.agg(F.count(F.lit(1)).cast("long").alias("k"))
-    s2d = F.col("s2_g").cast("double")
-    wfold = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    folded = (
-        grp.select(
-            F.sum((s2d / 2) * (s2d / 2) / F.col("n_g")).over(wfold).alias("s"),
-            F.row_number()
-            .over(Window.orderBy(F.col("source").desc()))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    nd = F.col("n").cast("double")
-    h_raw = F.greatest(
-        F.lit(0.0),
-        F.lit(12.0) / (nd * (F.col("n") + 1)) * F.col("s")
-        - F.lit(3.0) * (F.col("n") + 1),
-    )
-    n3_minus_n = (
-        F.col("n").cast(dec) * F.col("n") * F.col("n") - F.col("n")
-    ).cast(dec)
-    return (
-        folded.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(dims))
-        .select(
-            F.col("n").alias("n_docs"),
-            F.col("k").alias("n_sources"),
-            (F.col("k") - 1).cast("long").alias("dof"),
-            F.col("tie_term").cast("string").alias("tie_term"),
-            F.round(h_raw, 6).alias("h"),
-            F.when(
-                F.col("tie_term") < n3_minus_n,
-                F.round(
-                    h_raw
-                    / (
-                        F.lit(1.0)
-                        - F.col("tie_term").cast("double")
-                        / n3_minus_n.cast("double")
-                    ),
-                    6,
-                ),
-            ).alias("h_tied"),
-        )
+    return out.select(
+        "n_docs",
+        "n_sources",
+        "dof",
+        "tie_term",
+        F.round("h_raw", 6).alias("h"),
+        F.round("h_tied", 6).alias("h_tied"),
     )
 
 
@@ -3268,108 +3207,68 @@ def score_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributions do not inflate the test).  F is scale-invariant, so "
     "everything runs on DOUBLED deviations d2 = |2x - m2| where m2 = "
     "v_lo + v_hi is the DOUBLED exact per-source median read from the "
-    "source-partitioned cumulative count table by integer position "
+    "per-source cumulative counts by integer position "
     "comparison (cf >= (n_g+1)//2 and cf >= (n_g+2)//2 — no float "
     "percentile anywhere): d2, the per-source deviation sums S_g, and "
-    "the corpus S are pure BIGINT; the squared-deviation sums are "
-    "DECIMAL(38,0) internally, with sum_dev2_sq PUBLISHED as a digit "
+    "the corpus S are exact integers; the squared-deviation sums are "
+    "too (DECIMAL(38,0) in the oracle), with sum_dev2_sq PUBLISHED as a digit "
     "string (decimal-typed output columns are the one thing the "
     "external value hash has never accepted — 0-for-5 across rounds "
     "1-18 — where an integer's digit string renders identically in "
     "every engine build); the one-way ANOVA F on the deviations folds the "
-    "per-source (S_g)^2/n_g terms under an ORDERED unpartitioned "
-    "window over the source table (the source_length_kruskal IEEE "
-    "pattern), clamps the epsilon-negative between-SS, NULL-guards "
+    "per-source (S_g)^2/n_g terms in source order (the "
+    "source_length_kruskal IEEE pattern), clamps the epsilon-negative "
+    "between-SS, NULL-guards "
     "within_ss <= 0 (every group's deviations constant), k < 2, and "
     "n = k, and rounds once.  Scale shape: one map-side-combined "
     "shuffle to the (source, length) cell table — bounded by sources x "
-    "length-domain, never corpus size; the median scan, deviation "
-    "rollup, and F fold all run on that bounded table; the per-source "
-    "median frame broadcasts; 1-row output, no driver collect",
+    "length-domain, never corpus size; the driver reads it once under "
+    "the source_ks_drift bound (262,144 cells; more raises) and runs "
+    "the median scan, deviation rollup and F fold there; one row "
+    "returns to Spark for the rounding",
     tags=("statistics", "drift", "exact-cells", "text"),
 )
 def source_length_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents").select(
-        "source", F.col("n_chars").alias("v")
-    )
-    cells = docs.groupBy("source", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    wcum = (
-        Window.partitionBy("source")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wall = Window.partitionBy("source")
-    cum = cells.select(
-        "source",
-        "v",
-        "c",
-        F.sum("c").over(wcum).cast("long").alias("cf"),
-        F.sum("c").over(wall).cast("long").alias("n_g"),
-    )
-    med = cum.groupBy("source").agg(
-        (
-            F.min(F.when(F.expr("cf >= (n_g + 1) div 2"), F.col("v")))
-            + F.min(F.when(F.expr("cf >= (n_g + 2) div 2"), F.col("v")))
+    cells = _length_cells(spark, sf_dir, "source_length_levene")
+    n = k = s = q = 0
+    fs = 0.0
+    for by_len in cells.values():
+        n_g = sum(by_len.values())
+        # the doubled median: the lengths at positions (n_g+1)//2 and
+        # (n_g+2)//2 of the ascending lengths
+        m2, cf = 0, 0
+        pos = [(n_g + 1) // 2, (n_g + 2) // 2]
+        for v, c in by_len.items():
+            cf += c
+            while pos and cf >= pos[0]:
+                m2 += v
+                pos.pop(0)
+        s_g = sum(c * abs(2 * v - m2) for v, c in by_len.items())
+        q += sum(c * abs(2 * v - m2) ** 2 for v, c in by_len.items())
+        fs += float(s_g) * s_g / n_g
+        n, k, s = n + n_g, k + 1, s + s_g
+    rows = []
+    if cells:
+        between_ss = fs - float(s) * s / n
+        within_ss = float(q) - fs
+        f_bf = (
+            float(n - k) * max(0.0, between_ss) / (float(k - 1) * within_ss)
+            if k > 1 and n > k and within_ss > 0
+            else None
         )
-        .cast("long")
-        .alias("m2")
+        rows.append((n, k, k - 1, n - k, s, str(q), f_bf))
+    out = local_frame(
+        spark,
+        rows,
+        "n_docs long, n_sources long, df1 long, df2 long, sum_dev2 long, "
+        "sum_dev2_sq string, f_bf double",
     )
-    dec = "decimal(38,0)"
-    d2 = F.abs(F.lit(2) * F.col("v") - F.col("m2"))
-    dev = (
-        cells.join(F.broadcast(med), "source")
-        .groupBy("source")
-        .agg(
-            F.sum("c").cast("long").alias("n_g"),
-            F.sum(F.col("c") * d2).cast("long").alias("s_g"),
-            F.sum(F.col("c").cast(dec) * d2 * d2).cast(dec).alias("q_g"),
-        )
-    )
-    tot = dev.agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("s_g").cast("long").alias("s"),
-        F.sum("q_g").cast(dec).alias("q"),
-    )
-    wfold = Window.orderBy("source").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    sgd = F.col("s_g").cast("double")
-    folded = (
-        dev.select(
-            F.sum((sgd * F.col("s_g")) / F.col("n_g")).over(wfold).alias("fs"),
-            F.row_number()
-            .over(Window.orderBy(F.col("source").desc()))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    sd = F.col("s").cast("double")
-    between_ss = F.col("fs") - (sd * F.col("s")) / F.col("n")
-    within_ss = F.col("q").cast("double") - F.col("fs")
-    return (
-        folded.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("n").alias("n_docs"),
-            F.col("k").alias("n_sources"),
-            (F.col("k") - 1).cast("long").alias("df1"),
-            (F.col("n") - F.col("k")).cast("long").alias("df2"),
-            F.col("s").alias("sum_dev2"),
-            F.col("q").cast("string").alias("sum_dev2_sq"),
-            F.when(
-                (F.col("k") > 1) & (F.col("n") > F.col("k")) & (within_ss > 0),
-                F.round(
-                    (
-                        (F.col("n") - F.col("k")).cast("double")
-                        * F.greatest(F.lit(0.0), between_ss)
-                    )
-                    / ((F.col("k") - 1).cast("double") * within_ss),
-                    6,
-                ),
-            ).alias("f_bf"),
-        )
+    return out.select(
+        "n_docs",
+        "n_sources",
+        "df1",
+        "df2",
+        "sum_dev2",
+        "sum_dev2_sq",
+        F.round("f_bf", 6).alias("f_bf"),
     )

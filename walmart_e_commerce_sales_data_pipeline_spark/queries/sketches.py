@@ -464,6 +464,107 @@ def _kj_hash_sql(str_type: str) -> str:
     return portable_hex_value_sql("shingle", 12, str_type)
 
 
+def _kmv_pair_union(spark: SparkSession, sf_dir: str, sketch_only: bool):
+    """The KMV set-algebra core of kmv_jaccard_langs and
+    kmv_set_difference.  Returns ``(sh, pairs, kmin)``: the distinct
+    (lang, shingle) stream, the ``lang_a < lang_b`` pair list, and per
+    pair the k smallest hashes of sig(A) UNION sig(B) with ``in_a`` and
+    ``in_b`` membership flags.
+
+    The shingle stream feeds FOUR consumers in the exact tier (the
+    signature ranking, the per-lang cardinalities, both sides of the
+    exact intersection self-join) behind differently-keyed exchanges, so
+    without materialization the corpus is shingled and deduplicated once
+    PER CONSUMER (AQE's ReusedExchange only dedupes identically-keyed
+    exchanges).  Eagerly checkpointed (r18 form, re-confirmed r19): the
+    VERDICT r18 item-4 persist+count variant — recomputable lineage,
+    stats-bearing cache — was A/B-measured at 16 -> 37 jobs, 6.7 ->
+    15.2 MB shuffle, 1.49 -> 4.44 s at sf0.1: the InMemoryRelation's
+    accurate stats break the exact self-join's exchange reuse and the
+    count pays one extra full pass, so the stats-less RDD scan is the
+    FASTER form here (the prefix filter's trade runs the other way — see
+    prefix_filter_jaccard_pairs).  The accepted cost is the guide §5
+    checkpoint caveat: executor-local blocks without lineage; a lost
+    executor fails the query and it re-runs.  The sketch_only tier has
+    exactly ONE stream consumer (the hash ranking), so it skips the
+    materialization outright (r19) — one lazy pass, no checkpoint
+    round-trip."""
+    from ..operators.dedup import _spread_narrow
+
+    sh = (
+        _spread_narrow(table(spark, sf_dir, "documents"))
+        .select("lang", tokenize("text").alias("_t"))
+        .select("lang", F.explode(word_shingles(F.col("_t"), 3)).alias("shingle"))
+        .distinct()
+    )
+    if not sketch_only:
+        sh = sh.localCheckpoint(eager=True)
+    h = sh.select("lang", F.expr(_kj_hash_sql("STRING")).alias("hv")).distinct()
+    wl = Window.partitionBy("lang").orderBy("hv")
+    sig = (
+        h.withColumn("rk", F.row_number().over(wl))
+        .filter(F.col("rk") <= _KJ_K)
+        .select("lang", "hv")
+    )
+    langs = sig.select("lang").distinct()
+    pairs = langs.select(F.col("lang").alias("lang_a")).join(
+        langs.select(F.col("lang").alias("lang_b")),
+        F.col("lang_a") < F.col("lang_b"),
+    )
+    # Signature union with membership flags: two equi-joins (sig keyed by
+    # lang on each side of the pair list), unioned, collapsed per hash.
+    ua = pairs.join(sig, sig.lang == pairs.lang_a).select(
+        "lang_a", "lang_b", "hv",
+        F.lit(1).alias("in_a"), F.lit(0).alias("in_b"),
+    )
+    ub = pairs.join(sig, sig.lang == pairs.lang_b).select(
+        "lang_a", "lang_b", "hv",
+        F.lit(0).alias("in_a"), F.lit(1).alias("in_b"),
+    )
+    u = (
+        ua.union(ub)
+        .groupBy("lang_a", "lang_b", "hv")
+        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
+    )
+    wp = Window.partitionBy("lang_a", "lang_b").orderBy("hv")
+    kmin = u.withColumn("rk", F.row_number().over(wp)).filter(F.col("rk") <= _KJ_K)
+    return sh, pairs, kmin
+
+
+def _kmv_exact(sh: DataFrame, pairs: DataFrame, estagg: DataFrame) -> DataFrame:
+    """The exact tier's truth for each pair beside its estimates: the
+    shingle-distinct cardinalities ``n_a``, ``n_b`` and ``n_inter`` from
+    the bounded-multiplicity shingle self-join, carried for the oracle."""
+    nl = sh.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    sha = sh.select(F.col("lang").alias("ia"), "shingle")
+    shb = sh.select(F.col("lang").alias("ib"), F.col("shingle").alias("shingle_b"))
+    inter = (
+        sha.join(
+            shb,
+            (F.col("shingle") == F.col("shingle_b")) & (F.col("ia") < F.col("ib")),
+        )
+        .groupBy(F.col("ia").alias("lang_a"), F.col("ib").alias("lang_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
+    )
+    return (
+        pairs.join(
+            F.broadcast(
+                nl.select(F.col("lang").alias("lang_a"), F.col("n").alias("n_a"))
+            ),
+            "lang_a",
+        )
+        .join(
+            F.broadcast(
+                nl.select(F.col("lang").alias("lang_b"), F.col("n").alias("n_b"))
+            ),
+            "lang_b",
+        )
+        .join(F.broadcast(inter), ["lang_a", "lang_b"], "left")
+        .join(F.broadcast(estagg), ["lang_a", "lang_b"])
+        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0).cast("long")))
+    )
+
+
 @register(
     "kmv_jaccard_langs",
     oracle=f"""
@@ -566,72 +667,10 @@ def kmv_jaccard_langs(
     ``(lang_a, lang_b, sig_union_k, sig_in_both, kmv_jaccard_est)`` —
     the production path, which moves pairs x <= 128 signature rows
     however big the corpus.  Default off; bench.py measures both."""
-    from ..operators.dedup import _spread_narrow
-
-    docs = table(spark, sf_dir, "documents")
-    # The distinct (lang, shingle) stream feeds FOUR consumers (the
-    # signature ranking, the per-lang cardinalities, both sides of the
-    # exact intersection self-join) behind differently-keyed exchanges,
-    # so without materialization the corpus is shingled and
-    # deduplicated once PER CONSUMER (AQE's ReusedExchange only dedupes
-    # identically-keyed exchanges).  Eagerly checkpointed (r18 form,
-    # re-confirmed r19): the VERDICT r18 item-4 persist+count variant —
-    # recomputable lineage, stats-bearing cache — was A/B-measured this
-    # round at 16 -> 37 jobs, 6.7 -> 15.2 MB shuffle, 1.49 -> 4.44 s at
-    # sf0.1: the InMemoryRelation's accurate stats break the exact
-    # self-join's exchange reuse and the count pays one extra full
-    # pass, so the stats-less RDD scan is the FASTER form here (the
-    # prefix filter's trade runs the other way — see
-    # prefix_filter_jaccard_pairs).  The accepted cost is the guide §5
-    # checkpoint caveat: executor-local blocks without lineage; a lost
-    # executor fails the query and it re-runs.
-    # The sketch_only tier has exactly ONE stream consumer (the hash
-    # ranking), so it skips the materialization outright (r19) — one
-    # lazy pass, no checkpoint round-trip.
-    sh = (
-        _spread_narrow(docs)
-        .select("lang", tokenize("text").alias("_t"))
-        .select("lang", F.explode(word_shingles(F.col("_t"), 3)).alias("shingle"))
-        .distinct()
-    )
-    if not sketch_only:
-        sh = sh.localCheckpoint(eager=True)
-    h = sh.select("lang", F.expr(_kj_hash_sql("STRING")).alias("hv")).distinct()
-    wl = Window.partitionBy("lang").orderBy("hv")
-    sig = (
-        h.withColumn("rk", F.row_number().over(wl))
-        .filter(F.col("rk") <= _KJ_K)
-        .select("lang", "hv")
-    )
-    langs = sig.select("lang").distinct()
-    pairs = langs.select(F.col("lang").alias("lang_a")).join(
-        langs.select(F.col("lang").alias("lang_b")),
-        F.col("lang_a") < F.col("lang_b"),
-    )
-    # Signature union with membership flags: two equi-joins (sig keyed by
-    # lang on each side of the pair list), unioned, collapsed per hash.
-    ua = pairs.join(sig, sig.lang == pairs.lang_a).select(
-        "lang_a", "lang_b", "hv",
-        F.lit(1).alias("in_a"), F.lit(0).alias("in_b"),
-    )
-    ub = pairs.join(sig, sig.lang == pairs.lang_b).select(
-        "lang_a", "lang_b", "hv",
-        F.lit(0).alias("in_a"), F.lit(1).alias("in_b"),
-    )
-    u = (
-        ua.union(ub)
-        .groupBy("lang_a", "lang_b", "hv")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    wp = Window.partitionBy("lang_a", "lang_b").orderBy("hv")
-    estagg = (
-        u.withColumn("rk", F.row_number().over(wp))
-        .filter(F.col("rk") <= _KJ_K)
-        .groupBy("lang_a", "lang_b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("sig_union_k"),
-            F.sum(F.col("in_a") * F.col("in_b")).cast("long").alias("sig_in_both"),
-        )
+    sh, pairs, kmin = _kmv_pair_union(spark, sf_dir, sketch_only)
+    estagg = kmin.groupBy("lang_a", "lang_b").agg(
+        F.count(F.lit(1)).cast("long").alias("sig_union_k"),
+        F.sum(F.col("in_a") * F.col("in_b")).cast("long").alias("sig_in_both"),
     )
     if sketch_only:
         return estagg.select(
@@ -640,26 +679,11 @@ def kmv_jaccard_langs(
                 "kmv_jaccard_est"
             ),
         ).orderBy("lang_a", "lang_b")
-    nl = sh.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    sha = sh.select(F.col("lang").alias("ia"), "shingle")
-    shb = sh.select(F.col("lang").alias("ib"), F.col("shingle").alias("shingle_b"))
-    inter = (
-        sha.join(
-            shb,
-            (F.col("shingle") == F.col("shingle_b")) & (F.col("ia") < F.col("ib")),
-        )
-        .groupBy(F.col("ia").alias("lang_a"), F.col("ib").alias("lang_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
     ex_union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     ex_raw = F.col("n_inter") / ex_union
     est_raw = F.col("sig_in_both") / F.col("sig_union_k")
     return (
-        pairs.join(F.broadcast(nl.select(F.col("lang").alias("lang_a"), F.col("n").alias("n_a"))), "lang_a")
-        .join(F.broadcast(nl.select(F.col("lang").alias("lang_b"), F.col("n").alias("n_b"))), "lang_b")
-        .join(F.broadcast(inter), ["lang_a", "lang_b"], "left")
-        .join(F.broadcast(estagg), ["lang_a", "lang_b"])
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0).cast("long")))
+        _kmv_exact(sh, pairs, estagg)
         .select(
             "lang_a", "lang_b", "n_a", "n_b", "n_inter",
             F.round(ex_raw, 6).alias("jaccard_exact"),
@@ -785,111 +809,29 @@ def kmv_set_difference(
     signature-derived difference estimates only — the production A-vs-B
     audit path (see kmv_jaccard_langs).  Default off; bench.py measures
     both tiers."""
-    from ..operators.dedup import _spread_narrow
-
-    docs = table(spark, sf_dir, "documents")
-    # Same materialization discipline as kmv_jaccard_langs (eager
-    # checkpoint; the r19 persist+count A/B regressed 3x there — see
-    # that docstring): the distinct shingle stream feeds four
-    # differently-keyed consumers in the exact branch, but only ONE in
-    # the sketch_only tier, which therefore skips the materialization.
-    sh = (
-        _spread_narrow(docs)
-        .select("lang", tokenize("text").alias("_t"))
-        .select("lang", F.explode(word_shingles(F.col("_t"), 3)).alias("shingle"))
-        .distinct()
-    )
-    if not sketch_only:
-        sh = sh.localCheckpoint(eager=True)
-    h = sh.select("lang", F.expr(_kj_hash_sql("STRING")).alias("hv")).distinct()
-    wl = Window.partitionBy("lang").orderBy("hv")
-    sig = (
-        h.withColumn("rk", F.row_number().over(wl))
-        .filter(F.col("rk") <= _KJ_K)
-        .select("lang", "hv")
-    )
-    langs = sig.select("lang").distinct()
-    pairs = langs.select(F.col("lang").alias("lang_a")).join(
-        langs.select(F.col("lang").alias("lang_b")),
-        F.col("lang_a") < F.col("lang_b"),
-    )
-    ua = pairs.join(sig, sig.lang == pairs.lang_a).select(
-        "lang_a", "lang_b", "hv",
-        F.lit(1).alias("in_a"), F.lit(0).alias("in_b"),
-    )
-    ub = pairs.join(sig, sig.lang == pairs.lang_b).select(
-        "lang_a", "lang_b", "hv",
-        F.lit(0).alias("in_a"), F.lit(1).alias("in_b"),
-    )
-    u = (
-        ua.union(ub)
-        .groupBy("lang_a", "lang_b", "hv")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    wp = Window.partitionBy("lang_a", "lang_b").orderBy("hv")
-    estagg = (
-        u.withColumn("rk", F.row_number().over(wp))
-        .filter(F.col("rk") <= _KJ_K)
-        .groupBy("lang_a", "lang_b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("sig_union_k"),
-            F.max("hv").alias("kth_u"),
-            F.sum(F.col("in_a") * (1 - F.col("in_b")))
-            .cast("long")
-            .alias("sig_a_only"),
-            F.sum(F.col("in_b") * (1 - F.col("in_a")))
-            .cast("long")
-            .alias("sig_b_only"),
-        )
-    )
-    est_union_s = F.when(
-        F.col("sig_union_k") < _KJ_K, F.col("sig_union_k").cast("double")
-    ).otherwise(F.lit(float(_KJ_K - 1)) * F.lit(_KD_SCALE) / F.col("kth_u"))
-    if sketch_only:
-        return estagg.select(
-            "lang_a", "lang_b", "sig_union_k", "sig_a_only", "sig_b_only",
-            F.round(est_union_s, 4).alias("est_union"),
-            F.round(
-                F.col("sig_a_only") * est_union_s / F.col("sig_union_k"), 4
-            ).alias("est_a_only"),
-            F.round(
-                F.col("sig_b_only") * est_union_s / F.col("sig_union_k"), 4
-            ).alias("est_b_only"),
-        ).orderBy("lang_a", "lang_b")
-    nl = sh.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    sha = sh.select(F.col("lang").alias("ia"), "shingle")
-    shb = sh.select(F.col("lang").alias("ib"), F.col("shingle").alias("shingle_b"))
-    inter = (
-        sha.join(
-            shb,
-            (F.col("shingle") == F.col("shingle_b")) & (F.col("ia") < F.col("ib")),
-        )
-        .groupBy(F.col("ia").alias("lang_a"), F.col("ib").alias("lang_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
+    sh, pairs, kmin = _kmv_pair_union(spark, sf_dir, sketch_only)
+    estagg = kmin.groupBy("lang_a", "lang_b").agg(
+        F.count(F.lit(1)).cast("long").alias("sig_union_k"),
+        F.max("hv").alias("kth_u"),
+        F.sum(F.col("in_a") * (1 - F.col("in_b"))).cast("long").alias("sig_a_only"),
+        F.sum(F.col("in_b") * (1 - F.col("in_a"))).cast("long").alias("sig_b_only"),
     )
     est_union = F.when(
         F.col("sig_union_k") < _KJ_K, F.col("sig_union_k").cast("double")
     ).otherwise(F.lit(float(_KJ_K - 1)) * F.lit(_KD_SCALE) / F.col("kth_u"))
     est_a = F.col("sig_a_only") * est_union / F.col("sig_union_k")
     est_b = F.col("sig_b_only") * est_union / F.col("sig_union_k")
+    if sketch_only:
+        return estagg.select(
+            "lang_a", "lang_b", "sig_union_k", "sig_a_only", "sig_b_only",
+            F.round(est_union, 4).alias("est_union"),
+            F.round(est_a, 4).alias("est_a_only"),
+            F.round(est_b, 4).alias("est_b_only"),
+        ).orderBy("lang_a", "lang_b")
     exact_a = F.col("n_a") - F.col("n_inter")
     exact_b = F.col("n_b") - F.col("n_inter")
     return (
-        pairs.join(
-            F.broadcast(
-                nl.select(F.col("lang").alias("lang_a"), F.col("n").alias("n_a"))
-            ),
-            "lang_a",
-        )
-        .join(
-            F.broadcast(
-                nl.select(F.col("lang").alias("lang_b"), F.col("n").alias("n_b"))
-            ),
-            "lang_b",
-        )
-        .join(F.broadcast(inter), ["lang_a", "lang_b"], "left")
-        .join(F.broadcast(estagg), ["lang_a", "lang_b"])
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0).cast("long")))
+        _kmv_exact(sh, pairs, estagg)
         .select(
             "lang_a", "lang_b",
             exact_a.alias("n_a_only"),
