@@ -10,7 +10,8 @@ posture).  Also times the reference-parity Walmart ETL end-to-end on the
 reference's own bundled data for a like-for-like comparison with the
 measured pandas baseline (0.623 s end-to-end); where those files are
 absent, on generated inputs of the same shape (``etl_inputs`` in the
-sidecar says which).  Full per-query detail
+sidecar says which); the reference's pandas steps then run on the same
+inputs for the same-host Spark/pandas ratio.  Full per-query detail
 goes to the ``bench_details.json`` sidecar next to this script, which
 each run overwrites.
 
@@ -238,6 +239,16 @@ def etl_inputs(work_dir: str) -> tuple[str, str, str]:
     generate = runpy.run_path(os.path.join(here, "perfbench", "datagen.py"))["etl_inputs"]
     csv, parquet = generate(work_dir, seed=1, rows=ETL_STAND_IN_ROWS)
     return csv, parquet, f"generated: perfbench/datagen.py seed=1 rows={ETL_STAND_IN_ROWS}"
+
+
+def etl_comparison(spark_runs: list[float], pandas_runs: list[float]) -> dict:
+    """The sidecar's same-host ETL comparison: the reference's pandas
+    steps' runs and min wall, and the Spark/pandas ratio of the mins."""
+    return {
+        "walmart_etl_pandas_sec": min(pandas_runs),
+        "walmart_etl_pandas_runs": pandas_runs,
+        "walmart_etl_spark_over_pandas": round(min(spark_runs) / min(pandas_runs), 2),
+    }
 
 
 def _error(exc: Exception) -> str:
@@ -865,9 +876,13 @@ def main() -> None:
 
     # Reference-parity ETL on the reference's own bundled data (matches the
     # BASELINE.md measurement boundary: extract→transform→agg→load→validate).
+    # The reference's pandas steps and CSV sinks then run on the same
+    # inputs in this process, for the same-host Spark/pandas ratio.
     from walmart_e_commerce_sales_data_pipeline_spark.pipeline import main as etl_main
+    from walmart_e_commerce_sales_data_pipeline_spark.reference import reference_steps
 
     etl_used = None
+    etl_cmp: dict = {}
     try:
         with tempfile.TemporaryDirectory() as work:
             csv, parquet, etl_used = etl_inputs(work)
@@ -878,8 +893,18 @@ def main() -> None:
                     t0 = time.perf_counter()
                     etl_main(spark, csv, parquet, output_dir=out)
                     runs.append(round(time.perf_counter() - t0, 3))
-        timings["walmart_etl_e2e"] = min(runs)
-        all_runs["walmart_etl_e2e"] = runs
+            timings["walmart_etl_e2e"] = min(runs)
+            all_runs["walmart_etl_e2e"] = runs
+            # its own error key: a pandas failure leaves the Spark wall
+            # measured
+            try:
+                with tempfile.TemporaryDirectory() as out:
+                    pandas_runs = _sample(
+                        lambda: reference_steps(csv, parquet, out), N_RUNS
+                    )
+                etl_cmp = etl_comparison(runs, pandas_runs)
+            except Exception as exc:  # noqa: BLE001
+                errors["walmart_etl_pandas"] = _error(exc)
     except Exception as exc:  # noqa: BLE001
         errors["walmart_etl_e2e"] = _error(exc)
 
@@ -1031,6 +1056,7 @@ def main() -> None:
                 "runtime_metrics": runtime,
                 "ivf_pruned": ivf_pruned,
                 "etl_inputs": etl_used,
+                **etl_cmp,
                 "sf": sf_val,
                 "cpus": int(CPUS),
                 "default_parallelism": spark.sparkContext.defaultParallelism,

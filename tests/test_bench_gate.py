@@ -616,3 +616,15 @@ def test_etl_inputs_use_the_reference_files_or_a_generated_stand_in(
     with open(csv) as fh:
         assert sum(1 for _ in fh) == bench.ETL_STAND_IN_ROWS + 1  # header
     assert os.path.getsize(parquet) > 0
+
+
+def test_etl_comparison_adds_the_pandas_wall_and_the_ratio():
+    """The sidecar's ETL comparison: the pandas steps' runs, their min,
+    and the Spark/pandas ratio of the two mins."""
+    import bench
+
+    assert bench.etl_comparison([1.4, 1.2, 1.3], [0.21, 0.2, 0.25]) == {
+        "walmart_etl_pandas_sec": 0.2,
+        "walmart_etl_pandas_runs": [0.21, 0.2, 0.25],
+        "walmart_etl_spark_over_pandas": 6.0,
+    }

@@ -12,15 +12,11 @@ bound raises instead of reaching the driver whole.
 
 from __future__ import annotations
 
-import duckdb
-import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
 from tests.conftest import SF0001, SF001
-from tests.test_queries_vs_duckdb import _normalize
-from walmart_e_commerce_sales_data_pipeline_spark import queries as q
+from tests.degenerate_feeds import check_feed, cut, job_counts
 from walmart_e_commerce_sales_data_pipeline_spark.queries import diagnostics as dg
 from walmart_e_commerce_sales_data_pipeline_spark.queries.tables import table
 
@@ -33,28 +29,6 @@ LENGTH = (
 DOW = "event_dow_independence"
 
 
-def _slice(t, case, key):
-    if case == "empty":
-        return t.slice(0, 0)
-    if case == "one_row":
-        return t.slice(0, 1)
-    if case == "one_key":
-        return t.filter(pc.equal(t[key], t[key][0]))
-    if case == "one_length":
-        same = pa.array([t["n_chars"][0].as_py()] * len(t), t["n_chars"].type)
-        return t.set_column(t.schema.get_field_index("n_chars"), "n_chars", same)
-    return t
-
-
-def _check(spark, con, root, names, case):
-    for name in names:
-        sdf = q.REGISTRY[name].fn(spark, root)
-        got = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-        ddf = con.sql(q.REGISTRY[name].oracle)
-        want = _normalize([tuple(r) for r in ddf.fetchall()], list(ddf.columns))
-        assert got == want, (name, case, got, want)
-
-
 @pytest.mark.parametrize(
     "case", ["empty", "one_row", "one_key", "one_length", "bound"]
 )
@@ -62,40 +36,25 @@ def test_length_statistics_on_degenerate_documents(spark, tmp_path, monkeypatch,
     """Each degenerate sf0.001 documents slice gives the oracle's rows;
     with the cell bound lowered below the table's cell count, each query
     raises the named bound error."""
-    feed = _slice(pq.read_table(f"{SF0001}/documents.parquet"), case, "source")
-    path = f"{tmp_path}/documents.parquet"
-    pq.write_table(feed, path)
-    if case == "bound":
-        monkeypatch.setattr(dg, "_LENGTH_CELLS", 2)
-        for name in LENGTH:
-            with pytest.raises(
-                ValueError, match=f"{name}: the length cell read is bounded at 2 cells"
-            ):
-                q.REGISTRY[name].fn(spark, str(tmp_path))
-        return
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
-    _check(spark, con, str(tmp_path), LENGTH, case)
-    con.close()
+    t = pq.read_table(f"{SF0001}/documents.parquet")
+    if case == "one_length":
+        feed = cut(t, "same_key", "n_chars")
+    else:
+        feed = cut(t, case, "source")
+    check_feed(
+        spark, monkeypatch, str(tmp_path), "documents", feed, LENGTH, case,
+        (dg, "_LENGTH_CELLS"), "length",
+    )
 
 
 @pytest.mark.parametrize("case", ["empty", "one_row", "one_key", "bound"])
 def test_dow_independence_on_degenerate_events(spark, tmp_path, monkeypatch, case):
     """The same for event_dow_independence over sliced events."""
-    feed = _slice(pq.read_table(f"{SF0001}/events.parquet"), case, "event_type")
-    path = f"{tmp_path}/events.parquet"
-    pq.write_table(feed, path)
-    if case == "bound":
-        monkeypatch.setattr(dg, "_DOW_CELLS", 2)
-        with pytest.raises(
-            ValueError, match=f"{DOW}: the weekday cell read is bounded at 2 cells"
-        ):
-            q.REGISTRY[DOW].fn(spark, str(tmp_path))
-        return
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
-    _check(spark, con, str(tmp_path), (DOW,), case)
-    con.close()
+    feed = cut(pq.read_table(f"{SF0001}/events.parquet"), case, "event_type")
+    check_feed(
+        spark, monkeypatch, str(tmp_path), "events", feed, (DOW,), case,
+        (dg, "_DOW_CELLS"), "weekday",
+    )
 
 
 def test_length_statistics_run_in_at_most_twenty_jobs(spark):
@@ -104,14 +63,5 @@ def test_length_statistics_run_in_at_most_twenty_jobs(spark):
     between them (16, 20, 15, 9 and 18)."""
     table(spark, SF001, "documents")  # the one-off footer reads of new tables
     table(spark, SF001, "events")
-    sc = spark.sparkContext
-    jobs = {}
-    for name in (*LENGTH, DOW):
-        sc.setJobGroup(name, name)
-        try:
-            q.REGISTRY[name].fn(spark, SF001).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+    jobs = job_counts(spark, SF001, (*LENGTH, DOW))
     assert sum(jobs.values()) <= 20, jobs

@@ -178,24 +178,6 @@ def _write_etl_inputs(tmp_path, rows=3000, seed=7):
     return csv_path, pq_path
 
 
-def _reference_steps(csv_path, pq_path):
-    """The reference ETL's pandas steps (wallmart_pipeline.py:52-119)."""
-    import pandas as pd
-
-    merged = pd.read_csv(csv_path).merge(pd.read_parquet(pq_path), on="index")
-    for col in ("Weekly_Sales", "CPI", "Unemployment"):
-        merged[col] = merged[col].fillna(merged[col].mean())
-    merged["Date"] = pd.to_datetime(
-        merged["Date"], format="%Y-%m-%dT%H:%M:%S.%f", errors="coerce"
-    )
-    merged["Month"] = merged["Date"].dt.month
-    clean = merged[merged["Weekly_Sales"] > 10000][
-        ["Store_ID", "Weekly_Sales", "IsHoliday", "CPI", "Unemployment", "Month"]
-    ]
-    agg = clean.groupby("Month")["Weekly_Sales"].mean().reset_index().round(2)
-    return clean, agg
-
-
 def _read_sink(path):
     from pathlib import Path
 
@@ -217,6 +199,7 @@ def test_main_end_to_end_on_generated_inputs(spark, tmp_path, monkeypatch):
     import pandas as pd
 
     from walmart_e_commerce_sales_data_pipeline_spark.pipeline import main
+    from walmart_e_commerce_sales_data_pipeline_spark.reference import reference_steps
     from walmart_e_commerce_sales_data_pipeline_spark.schemas import (
         TRANSFORM_INPUT_COLUMNS,
     )
@@ -244,7 +227,9 @@ def test_main_end_to_end_on_generated_inputs(spark, tmp_path, monkeypatch):
         "index", "IsHoliday", "CPI", "Unemployment",
     ]
 
-    want_clean, want_agg = _reference_steps(csv_path, pq_path)
+    ref = tmp_path / "ref"
+    ref.mkdir()
+    want_clean, want_agg = reference_steps(csv_path, pq_path, str(ref))
     got_agg = _read_sink(out / "agg_data.csv")
     assert got_agg["Month"].tolist() == want_agg["Month"].astype(int).tolist()
     np.testing.assert_allclose(

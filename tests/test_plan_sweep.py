@@ -21,17 +21,19 @@ the returned default form is audited as well (it is what downstream
 consumers see).  Queries whose materialization is control-flow-bound
 (driver count dispatch, convergence loops, driver-side reads: the
 dedup_clusters family, dup_graph_pagerank's degree scalar,
-embedding_top_pc's bounded Gram read, the survival queries' and the
-length statistics' bounded cell reads, a join-free aggregate) cannot
-be audited lazily end-to-end —
+embedding_top_pc's bounded Gram read, the bounded cell reads of the
+survival queries, the length, monthly-revenue and score statistics and
+spearman_rank_corr, a join-free aggregate) cannot be audited lazily
+end-to-end —
 their interiors are covered by the operator-level plan assertions in
 test_plans.py/test_dispatch.py and the committed plans/r*/ dumps, and
 the shared pair-build interior they all ride (jaccard_pairs_from_docs)
 keeps its BNLJ-free shape pinned by the jaccard_prefix_filter interior
 audit below plus the brute-force whitelist entries.  The survival
 queries' subject build is audited on the lazy cell aggregate they read
-(``test_survival_cell_aggregate_is_keyed``), and so is the length
-statistics' (``test_length_cell_aggregate_is_keyed``).
+(``test_survival_cell_aggregate_is_keyed``), and so are the other cell
+aggregates (``test_length_cell_aggregate_is_keyed``,
+``test_month_score_and_rank_cell_aggregates_are_keyed``).
 """
 
 from __future__ import annotations
@@ -141,44 +143,15 @@ BNLJ_WHITELIST = {
     # BROADCAST 10-row build side — every nested-loop side is a scalar
     # or the fixed decile grid, never customers.
     "revenue_gini_lorenz",
-    # revenue_seasonal_decomposition (round 16): one cross broadcasts
-    # the 1-row gap flag (the global calendar-gap guard) onto the
-    # <= ~84-row monthly output — the scalar-broadcast class.
-    "revenue_seasonal_decomposition",
     # conversion_ab_ztest (round 17): one cross broadcasts the 1-row
     # pooled (n1, x1, n2, x2, z) pivot onto the two cohort rows — the
     # scalar-broadcast class.
     "conversion_ab_ztest",
-    # score_lift_deciles (round 18): one cross broadcasts the 1-row
-    # (n_tot, n_pos_tot) total onto the domain-bounded distinct-score
-    # cumulative table and again onto the 10-row bin table
-    # (scalar-broadcast), and the decile-assignment range join probes
-    # with a BROADCAST 10-row k-grid build side — the revenue_gini_lorenz
-    # fixed-decile-grid class.
-    "score_lift_deciles",
-    # revenue_mann_kendall (round 16): the pair sign-join is an
-    # inequality join (ym_a < ym_b) over the MONTHLY aggregate —
-    # calendar-bounded (<= ~84 rows, <= ~3.5k pairs at ANY scale
-    # factor); the two crosses broadcast the 1-row S and tie frames —
-    # the scalar-broadcast class.
-    "revenue_mann_kendall",
     # basket_association_rules (round 15): one cross broadcasts the
     # 1-row basket-count total onto the 10-row result — the
     # scalar-broadcast class; the pair generator itself is a keyed
     # basket self-join with SF-invariant fan-out.
     "basket_association_rules",
-    # revenue_cusum_changepoint (round 15): one cross broadcasts the
-    # 1-row (n, total) aggregate onto the <= ~84-row monthly table —
-    # the scalar-broadcast class.
-    "revenue_cusum_changepoint",
-    # quality_score_auc (round 15): one cross broadcasts the 1-row
-    # (n_pos, n_neg) aggregate onto the 1-row rank-sum frame — the
-    # scalar-broadcast class.
-    "quality_score_auc",
-    # revenue_autocorrelation (round 15): two crosses broadcast the
-    # 1-row (n, total) centering frame and the 1-row denominator onto
-    # the <= ~84-row monthly table — the scalar-broadcast class.
-    "revenue_autocorrelation",
     # training_negative_samples (round 15): one cross broadcasts the
     # 1-row part-keyspace size onto the customer dimension before the
     # bounded 8-draw explode — the scalar-broadcast class; candidate
@@ -231,20 +204,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     #   scale-invariant); the corpus-sized intra-bucket running sums are
     #   bucket-PARTITIONED.
     "revenue_gini_lorenz",
-    # - revenue_cusum_changepoint (round 15): index/prefix/peak windows
-    #   over the monthly aggregate — calendar-bounded (<= ~84 rows).
-    "revenue_cusum_changepoint",
-    # - quality_score_auc (round 15): the midrank prefix sum runs over
-    #   the distinct-score aggregate — domain-bounded (<= ~56k distinct
-    #   cents by the feed's value range at any SF).
-    "quality_score_auc",
-    # - revenue_autocorrelation (round 15): the six LAG windows run over
-    #   the monthly aggregate — calendar-bounded (<= ~84 rows at any SF).
-    "revenue_autocorrelation",
-    # - revenue_seasonal_decomposition (round 15): the LAG/LEAD/rolling
-    #   2x12-MA windows run over the monthly aggregate —
-    #   calendar-bounded (<= ~84 rows at any SF).
-    "revenue_seasonal_decomposition",
     # - heaps_law_fit (round 16): the OLS accumulation windows run over
     #   the per-source shard table — one row per corpus source, a
     #   config-sized set (the mixture_sampling_plan class).
@@ -254,20 +213,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     #   by construction (ngram_distribution_profile's bound); the
     #   corpus-sized work is the two stacked hash aggregates below it.
     "zipf_slope_fit",
-    # - spearman_rank_corr (round 18): the two midrank prefix windows
-    #   run over per-column distinct-VALUE count tables — quantity's
-    #   domain is 50 values and discount's 11 by the TPC-H pricing spec
-    #   at any SF (the zipf counts-of-counts class); the corpus-sized
-    #   pass is the single map-side-combined sufficient-statistics
-    #   aggregate below them.
-    "spearman_rank_corr",
-    # - score_lift_deciles (round 18): the score-DESC cumulative window
-    #   runs over the distinct-score count table — DOMAIN-bounded at
-    #   <= ~56k cent values at any SF (the quality_score_auc bound) —
-    #   and the gains cumulative window over the 10-row decile bin
-    #   table; the corpus-sized pass is the single per-score hash
-    #   aggregate below them.
-    "score_lift_deciles",
     "kmv_sketch_union",
     "ngram_distribution_profile",
     "bm25_doc_retrieval",
@@ -294,16 +239,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
 # - ngram_distribution_profile: the counts-of-counts table — ≤ √(2N) rows
 #   by construction (d distinct count values satisfy d(d+1)/2 ≤ N).
 SINGLE_PARTITION_WHITELIST = {
-    # - spearman_rank_corr (round 18): the exchanges feed the two
-    #   midrank prefix windows over per-column distinct-value count
-    #   tables — 50- and 11-row domains by spec at any SF (see the
-    #   unpartitioned-window entry above).
-    "spearman_rank_corr",
-    # - score_lift_deciles (round 18): the exchanges feed the score-DESC
-    #   cumulative window over the distinct-score aggregate
-    #   (domain-bounded) and the gains window over the 10-row bin
-    #   aggregate — see the unpartitioned-window entry above.
-    "score_lift_deciles",
     # - pareto_frontier_parts: the single-partition exchange feeds the
     #   bucket-summary prefix-max window — a FINAL aggregate over the $1
     #   price buckets, domain-bounded at <= ~1,201 rows (see the
@@ -316,22 +251,6 @@ SINGLE_PARTITION_WHITELIST = {
     #   the bucket count — does not grow with SF); the corpus-sized rank
     #   work runs in the bucket-PARTITIONED window beside it.
     "revenue_gini_lorenz",
-    # - revenue_cusum_changepoint (round 15): the exchange feeds the
-    #   index/prefix/peak windows over the monthly aggregate —
-    #   calendar-bounded (<= ~84 rows at any SF).
-    "revenue_cusum_changepoint",
-    # - quality_score_auc (round 15): the exchange feeds the midrank
-    #   prefix sum over the distinct-score aggregate — DOMAIN-bounded
-    #   (<= ~56k distinct cents by the feed's value range at any SF).
-    "quality_score_auc",
-    # - revenue_autocorrelation (round 15): the exchange feeds the LAG
-    #   windows over the monthly aggregate — calendar-bounded
-    #   (<= ~84 rows at any SF).
-    "revenue_autocorrelation",
-    # - revenue_seasonal_decomposition (round 15): the exchange feeds
-    #   the LAG/LEAD/rolling-MA windows over the monthly aggregate —
-    #   calendar-bounded (<= ~84 rows at any SF).
-    "revenue_seasonal_decomposition",
     "window_running_total",
     "null_ordering",
     "window_frames_suite",
@@ -490,6 +409,33 @@ def test_length_cell_aggregate_is_keyed(spark):
     assert "hashpartitioning(source" in plan, plan
     assert not unpartitioned_windows(df)
     assert not single_partition_funnels(df)
+
+
+def test_month_score_and_rank_cell_aggregates_are_keyed(spark):
+    """The monthly-revenue, score and Spearman statistics return a
+    driver-built readout; each one bounded read collects a lazy cell
+    aggregate.  Audit the three: one keyed hash aggregate over the scan,
+    no nested loop, no unpartitioned window and no single-partition
+    funnel."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.analysis import (
+        _rank_agg,
+    )
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.diagnostics import (
+        _month_agg,
+        _score_agg,
+    )
+
+    for agg, keys in (
+        (_month_agg, "Keys [1]: [ym"),
+        (_score_agg, "Keys [1]: [score"),
+        (_rank_agg, "Keys [2]: [l_quantity"),
+    ):
+        df = agg(spark, SF001)
+        plan = formatted_plan(df)
+        assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan
+        assert plan.count("Exchange (") == 1 and keys in plan, plan
+        assert not unpartitioned_windows(df), keys
+        assert not single_partition_funnels(df), keys
 
 
 def test_window_detector_flags_injected_funnel(spark):

@@ -385,20 +385,22 @@ def test_auc_tied_rank_equals_pairwise_definition(labeled):
     midrank formula quality_score_auc ships — AUC = (S2 - n_pos(n_pos+1))
     / (2 n_pos n_neg) with S2 = sum over distinct scores of
     pos_c*(2*c_lt+c+1) — equals the definitional P(s_pos > s_neg) +
-    P(s_pos = s_neg)/2, exactly as rationals."""
+    P(s_pos = s_neg)/2, exactly as rationals.  Drives the engine's fold
+    on the (score, pos_c, c) cells the query reads."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.diagnostics import (
+        _auc_fold,
+    )
+
     pos = [s for s, y in labeled if y]
     neg = [s for s, y in labeled if not y]
     if not pos or not neg:
         return
-    scores = sorted({s for s, _y in labeled})
-    c_lt, s2 = 0, 0
-    for v in scores:
-        pos_c = pos.count(v)
-        c = pos_c + neg.count(v)
-        s2 += pos_c * (2 * c_lt + c + 1)
-        c_lt += c
-    n_pos, n_neg = len(pos), len(neg)
-    num = s2 - n_pos * (n_pos + 1)  # == 2 * U
+    cells = [
+        (v, pos.count(v), pos.count(v) + neg.count(v))
+        for v in sorted({s for s, _y in labeled})
+    ]
+    n_pos, n_neg, num = _auc_fold(cells)  # num == 2 * U
+    assert (n_pos, n_neg) == (len(pos), len(neg))
     den = 2 * n_pos * n_neg
     # definitional: wins + half-ties, doubled to stay integer
     pairwise2 = sum(
@@ -420,43 +422,18 @@ def test_cusum_peaks_exactly_at_a_clean_level_shift(k, m, a, b):
     m steps (a != b, no noise), the scaled CUSUM S'_t = N*cum_t -
     t*total peaks in absolute value exactly at the shift point t = k —
     the detection property revenue_cusum_changepoint's flag claims,
-    checked in the same pure-BIGINT arithmetic the query uses."""
+    checked on the engine's own integer fold."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.diagnostics import (
+        _cusum_fold,
+    )
+
     if a == b:
         return
-    xs = [a] * k + [b] * m
-    n, total = len(xs), sum(xs)
-    cum, best_t, best = 0, None, -1
-    for t, x in enumerate(xs, start=1):
-        cum += x
-        s = abs(n * cum - t * total)
-        if s > best:
-            best, best_t = s, t
-    assert best_t == k
+    _scaled, peak_t = _cusum_fold([a] * k + [b] * m)
+    assert peak_t == k
 
 
 # --- seasonal decomposition and HHI laws --------------------------------------
-
-
-def _decompose24(xs: list[int]) -> tuple[list, dict]:
-    """revenue_seasonal_decomposition's integer construction: trend24 =
-    x[t-6] + x[t+6] + 2*sum(x[t-5..t+5]) for interior t, seasonal
-    numerator per month-of-year = sum(24*x - trend24).  Month-of-year of
-    index t is t % 12.  Returns (trend24 list with None edges, seasonal
-    {moy: (snum, scnt)})."""
-    n = len(xs)
-    trend24 = [
-        xs[t - 6] + xs[t + 6] + 2 * sum(xs[t - 5 : t + 6])
-        if 6 <= t < n - 6
-        else None
-        for t in range(n)
-    ]
-    seas: dict[int, tuple[int, int]] = {}
-    for t, tr in enumerate(trend24):
-        if tr is None:
-            continue
-        sn, sc = seas.get(t % 12, (0, 0))
-        seas[t % 12] = (sn + 24 * xs[t] - tr, sc + 1)
-    return trend24, seas
 
 
 @FAST
@@ -475,7 +452,11 @@ def test_seasonal_decomposition_recovers_a_clean_trend_plus_seasonal(
     zero-sum seasonal vanishes over any aligned 12-window), so
     trend24 == 24*(a + b*t) and the month-of-year means recover s
     exactly — the decomposition identity the registered query's
-    construction claims, checked in the same integer arithmetic."""
+    construction claims, checked on the engine's own integer fold."""
+    from walmart_e_commerce_sales_data_pipeline_spark.queries.diagnostics import (
+        _decompose24,
+    )
+
     s_mean12 = sum(s_raw) // 12
     s = [v - s_mean12 for v in s_raw]
     rem = sum(s)  # distribute the rounding remainder to keep sum == 0
@@ -485,7 +466,7 @@ def test_seasonal_decomposition_recovers_a_clean_trend_plus_seasonal(
     if min(xs) < 0:
         xs = [x - min(xs) for x in xs]  # keep cents nonnegative
         a = a - min(a + b * t + s[t % 12] for t in range(n))
-    trend24, seas = _decompose24(xs)
+    trend24, seas = _decompose24(xs, [t % 12 for t in range(n)])
     for t, tr in enumerate(trend24):
         if tr is not None:
             assert tr == 24 * (a + b * t), (t, tr)

@@ -322,20 +322,19 @@ COMMENT = {
     "is the only pair-sized exchange, top-10 by TakeOrderedAndProject, "
     "and the 10-row result broadcasts against the streaming "
     "part-frequency dim",
-    "revenue_cusum_changepoint": "round 15 wave 4: one monthly keyed "
-    "aggregate; index/prefix/peak windows on the <= ~84-row calendar "
-    "table; the changepoint argmax is pure-BIGINT cross-multiplied "
-    "arithmetic",
-    "quality_score_auc": "round 15 wave 4: one keyed aggregate per "
-    "distinct score; the midrank prefix sum runs on the domain-bounded "
-    "distinct-score table — never a per-event sort",
-    "revenue_autocorrelation": "round 15 wave 5: one monthly keyed "
-    "aggregate; six LAG windows + the lag-stacked ratio all on the "
-    "<= ~84-row calendar table; sufficient statistics in DECIMAL(38,0)",
-    "revenue_seasonal_decomposition": "round 15 wave 6: one monthly "
-    "keyed aggregate; LAG/LEAD/rolling 2x12-MA windows and the 12-row "
-    "seasonal join all on the <= ~84-row calendar table; trend24 and "
-    "seasonal numerators pure BIGINT",
+    "revenue_cusum_changepoint": "one monthly keyed aggregate, read "
+    "once by the driver under a 4,096-month bound; the prefix sum and "
+    "the integer argmax run there, so the plan is a local readout",
+    "quality_score_auc": "one keyed aggregate per distinct score, read "
+    "once by the driver under a 131,072-score bound; the midrank sum "
+    "runs there, so the plan is a 1-row local readout",
+    "revenue_autocorrelation": "the revenue_cusum_changepoint monthly "
+    "read; the exact lag products run on the driver, so the plan is a "
+    "6-row local readout",
+    "revenue_seasonal_decomposition": "the revenue_cusum_changepoint "
+    "monthly read; trend24, the seasonal numerators and the "
+    "calendar-gap check run on the driver, so the plan is a local "
+    "readout",
     "market_concentration_hhi": "round 15 wave 6: one (nation, "
     "supplier)-keyed aggregate behind a broadcast supplier dim, one "
     "nation rollup with DECIMAL(38,0) squared-share cells, a broadcast "
@@ -351,10 +350,10 @@ COMMENT = {
     "counts, one for the instance join on (w1, w2); vocab-bounded "
     "unigram counts and the 1-row vocab total broadcast; the logprob "
     "fold window is doc-PARTITIONED",
-    "spearman_rank_corr": "round 18: midrank prefix windows over the "
-    "50-value quantity and 11-value discount DOMAIN tables, broadcast "
-    "back onto ONE map-side-combined sufficient-statistics pass; 1-row "
-    "output",
+    "spearman_rank_corr": "one map-side-combined (quantity, discount) "
+    "count aggregate, read once by the driver under a 4,096-cell bound "
+    "(550 by spec); midranks and sufficient statistics run there, so "
+    "the plan is a 1-row local readout",
     "ngram_novelty_rate": "round 18: trigram instances shuffle once on "
     "the shingle for the min-doc aggregate and once for the instance "
     "join back (the standard dedup shingle shape), then one map-side-"
@@ -367,10 +366,9 @@ COMMENT = {
     "rank window is hour-PARTITIONED; the probe join is a "
     "(hour, r, b)-keyed equi-join — the eighth streaming family's "
     "batch readout",
-    "score_lift_deciles": "round 18: one per-score hash aggregate, "
-    "then every window (score-DESC cumulative, decile gains) and the "
-    "10-row k-grid range join run on the DOMAIN-bounded distinct-score "
-    "table; 10-row output",
+    "score_lift_deciles": "the quality_score_auc score read; the "
+    "score-descending decile walk runs on the driver, so the plan is a "
+    "10-row local readout",
     "source_length_levene": "the source_length_kruskal cell read; the "
     "median scan and the F fold run on the driver, so the plan is a "
     "1-row local readout",

@@ -258,10 +258,10 @@ HEAVY = [
     "survival_time_to_purchase",
     # round 15 wave 4: the basket self-join (10x orders with the SAME
     # per-order fan-out — candidate volume must scale linearly), the
-    # CUSUM scan (10x orders through one monthly aggregate; all window
-    # work on the <= ~84-row calendar table), and the midrank AUC (10x
-    # events through one distinct-score aggregate; the rank windows run
-    # on the domain-bounded score table, which must NOT grow 10x).
+    # CUSUM scan (10x orders through one monthly aggregate; the driver
+    # reads the <= ~84-month series once and folds it), and the midrank
+    # AUC (10x events through one distinct-score aggregate; the driver
+    # reads the domain-bounded score table, which must NOT grow 10x).
     "basket_association_rules",
     "revenue_cusum_changepoint",
     "quality_score_auc",
@@ -269,12 +269,12 @@ HEAVY = [
     # stacked map-side-combining aggregates; the replica token suffix
     # grows the vocab ~10x, so the token-count shuffle is the one
     # growing stage) and the ACF profile (10x orders through one monthly
-    # aggregate; all lag work on the <= ~84-row calendar table).
+    # aggregate; the driver folds the lag products of the same series).
     "vocab_coverage_estimators",
     "revenue_autocorrelation",
     # round 15 wave 6: the seasonal decomposition (10x orders through
-    # one monthly aggregate; all MA/seasonal work on the <= ~84-row
-    # calendar table) and the HHI rollup (10x lineitem through a
+    # one monthly aggregate; the driver folds the MA and seasonal sums
+    # of the <= ~84-month series) and the HHI rollup (10x lineitem through a
     # (nation, supplier)-keyed aggregate behind a broadcast dim; the
     # DECIMAL(38) squared-share accumulator must not overflow).
     "revenue_seasonal_decomposition",
@@ -296,9 +296,9 @@ HEAVY = [
     "survival_km_logrank",
     "zipf_slope_fit",
     "events_hourly_mg",
-    # round 16 wave 2: the Mann-Kendall pair join (10x orders collapse
-    # to the SAME calendar-bounded monthly table — the localCheckpoint
-    # holds it to one scan and the <= ~3.5k-pair join must not grow)
+    # round 16 wave 2: Mann-Kendall (10x orders collapse to the SAME
+    # calendar-bounded monthly series, read once; the driver's
+    # <= ~3.5k-pair sign sum must not grow)
     # and the per-source diversity fold (10x tokens through one
     # (source, token) aggregate; the replica token suffix grows each
     # source's vocab ~linearly, so the fold input tracks vocab).
@@ -311,8 +311,8 @@ HEAVY = [
     # round 18: the cluster-composition pair (ride the measured
     # jaccard-pairs + components shape), the bigram LM scorer (corpus
     # bigram counts + doc-partitioned fold) and the Spearman rank
-    # correlation (domain-bounded midrank windows + one sufficient-
-    # statistics pass).
+    # correlation (one (quantity, discount) cell aggregate, 550 cells by
+    # spec, folded on the driver).
     "cluster_aware_split",
     "cluster_sampling_weights",
     "bigram_lm_quality",
@@ -328,9 +328,9 @@ HEAVY = [
     # is bounded at depth*width per hour, so shuffle must stay flat per
     # hour as event volume grows.
     "events_hourly_countsketch",
-    # round 18: the decile lift table — all post-aggregate work runs on
-    # the domain-bounded distinct-score table, so shuffle must stay
-    # flat as event volume grows.
+    # round 18: the decile lift table — the driver reads the
+    # domain-bounded distinct-score table once, so shuffle and the
+    # driver's rows must stay flat as event volume grows.
     "score_lift_deciles",
     # round 18: the Brown-Forsythe dispersion test — the same bounded
     # (source, length) cell read, so shuffle and the driver's rows must

@@ -20,6 +20,8 @@ Layout
 - ``streaming``  : Structured Streaming variants (windowed aggs, watermarks,
                    session windows).
 - ``plans``      : plan-inspection helpers (pushdown / broadcast assertions).
+- ``reference``  : the reference ETL's pandas steps, for the parity test
+                   and the bench's same-host comparison.
 """
 
 __version__ = "0.1.0"

@@ -9,12 +9,15 @@ contract (queries/registry.py docstring).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from .diagnostics import midranks2
 from .registry import register
-from .tables import table
+from .tables import local_frame, read_bounded, table
 
 # ---------------------------------------------------------------------------
 # KMV sketch set operations (union / intersection from MERGED sketches).
@@ -208,17 +211,17 @@ def kmv_sketch_union(
                 F.round(_est("m_b", "kth_b"), 4).alias("est_b"),
                 F.round(_est("m_u", "kth_u"), 4).alias("est_union"),
                 F.round(
-                    (F.col("m_both").cast("double") / F.col("m_u"))
+                    F.try_divide(F.col("m_both").cast("double"), F.col("m_u"))
                     * _est("m_u", "kth_u"),
                     4,
                 ).alias("est_inter"),
             )
         )
     exact = flags.agg(
-        F.sum("ia").cast("long").alias("n_a"),
-        F.sum("ib").cast("long").alias("n_b"),
+        F.count_if(F.col("ia") == 1).cast("long").alias("n_a"),
+        F.count_if(F.col("ib") == 1).cast("long").alias("n_b"),
         F.count("*").cast("long").alias("n_union"),
-        F.sum(F.col("ia") * F.col("ib")).cast("long").alias("n_inter"),
+        F.count_if((F.col("ia") == 1) & (F.col("ib") == 1)).cast("long").alias("n_inter"),
     )
     return (
         exact.crossJoin(F.broadcast(a_stats))
@@ -234,7 +237,7 @@ def kmv_sketch_union(
             F.round(_est("m_b", "kth_b"), 4).alias("est_b"),
             F.round(_est("m_u", "kth_u"), 4).alias("est_union"),
             F.round(
-                (F.col("m_both").cast("double") / F.col("m_u"))
+                F.try_divide(F.col("m_both").cast("double"), F.col("m_u"))
                 * _est("m_u", "kth_u"),
                 4,
             ).alias("est_inter"),
@@ -1486,6 +1489,21 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spearman rank correlation (tied midranks, exact integer cells).
 # ---------------------------------------------------------------------------
 
+# Bound on spearman_rank_corr's one driver read: the (quantity, discount)
+# cells, 50 x 11 = 550 by the TPC-H spec at any scale factor.
+_RANK_CELLS = 4_096
+
+
+def _rank_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy ``(l_quantity, l_discount, c)`` count aggregate
+    spearman_rank_corr reads."""
+    return (
+        table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_quantity").isNotNull() & F.col("l_discount").isNotNull())
+        .groupBy("l_quantity", "l_discount")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+
 
 @register(
     "spearman_rank_corr",
@@ -1542,8 +1560,9 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline re-runs when a promo engine starts coupling them).  "
     "Exactness: ties make ranks HALF-integers, so everything runs on "
     "DOUBLED midranks mr2 = 2*cum_before + cnt + 1 — pure BIGINT — and "
-    "Pearson-on-midranks uses DECIMAL(38,0) sufficient statistics "
-    "(headroom: n*s11 <= 4n^4 < 10^38 to n ~ 10^9 rows; the "
+    "Pearson-on-midranks uses exact sufficient statistics (Python "
+    "integers in the query, DECIMAL(38,0) in the oracle — headroom: "
+    "n*s11 <= 4n^4 < 10^38 to n ~ 10^9 rows; the "
     "corr_matrix_lineitem documentation pattern); the three exact "
     "numerators ride along so the oracle pins the estimator "
     "arithmetic bit-for-bit — published as DIGIT STRINGS, because a "
@@ -1551,68 +1570,50 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash has never accepted (0-for-5 across rounds 1-18: arrow "
     "decimal128/Decimal-object hashing diverges across engine builds "
     "where an integer's digit string cannot; internal arithmetic stays "
-    "DECIMAL(38,0)) — and rho itself is one closed-form double "
+    "exact) — and rho itself is one closed-form double "
     "expression rounded once (degenerate all-tied columns NULL-guarded "
-    "in both engines).  Scale shape: midranks come from per-column "
-    "distinct-value count tables — quantity's domain is 50 values and "
-    "discount's 11 BY SPEC at any SF, so the two rank windows run over "
-    "domain-bounded inputs (the zipf counts-of-counts class) and "
-    "broadcast back onto one map-side-combined pass over lineitem; "
-    "1-row output",
+    "in both engines).  Scale shape: one map-side-combined pass over "
+    "lineitem to the (quantity, discount) count cells — 50 x 11 = 550 "
+    "BY SPEC at any SF; the driver reads them once, bounded at 4,096 "
+    "cells (more raises), forms both columns' doubled midranks and the "
+    "sufficient statistics with exact Python integers, and one row "
+    "returns to Spark for rho; 1-row output",
     tags=("statistics", "correlation", "exact-cells"),
 )
 def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").alias("a"), F.col("l_discount").alias("b")
-    ).filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-
-    def midranks(df, col):
-        cnt = df.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("c"))
-        w = Window.orderBy(col).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        return cnt.select(
-            col,
-            (
-                F.lit(2) * (F.sum("c").over(w).cast("long") - F.col("c"))
-                + F.col("c")
-                + F.lit(1)
-            ).alias("mr2"),
-        )
-
-    dec = "decimal(38,0)"
-    ra = midranks(li.select("a"), "a").withColumnRenamed("mr2", "mr2_a")
-    rb = midranks(li.select("b"), "b").withColumnRenamed("mr2", "mr2_b")
-    cells = (
-        li.join(F.broadcast(ra), "a")
-        .join(F.broadcast(rb), "b")
-        .agg(
-            F.count(F.lit(1)).cast(dec).alias("n"),
-            F.sum("mr2_a").cast(dec).alias("s1"),
-            F.sum("mr2_b").cast(dec).alias("s2"),
-            F.sum(F.col("mr2_a").cast(dec) * F.col("mr2_a")).cast(dec).alias("s11"),
-            F.sum(F.col("mr2_b").cast(dec) * F.col("mr2_b")).cast(dec).alias("s22"),
-            F.sum(F.col("mr2_a").cast(dec) * F.col("mr2_b")).cast(dec).alias("s12"),
-        )
+    cells = read_bounded(
+        _rank_agg(spark, sf_dir), _RANK_CELLS, "spearman_rank_corr: the rank cell read"
     )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    s11, s22, s12 = F.col("s11"), F.col("s22"), F.col("s12")
-    cov = (n * s12 - s1 * s2).cast(dec)
-    va = (n * s11 - s1 * s1).cast(dec)
-    vb = (n * s22 - s2 * s2).cast(dec)
-    return cells.select(
-        n.cast("long").alias("n"),
-        cov.cast("string").alias("cov_num"),
-        va.cast("string").alias("var_a_num"),
-        vb.cast("string").alias("var_b_num"),
+    qty: Counter = Counter()
+    disc: Counter = Counter()
+    for a, b, c in cells:
+        qty[a] += c
+        disc[b] += c
+    ra, rb = midranks2(qty), midranks2(disc)
+    n = s1 = s2 = s11 = s22 = s12 = 0
+    for a, b, c in cells:
+        n += c
+        s1 += c * ra[a]
+        s2 += c * rb[b]
+        s11 += c * ra[a] * ra[a]
+        s22 += c * rb[b] * rb[b]
+        s12 += c * ra[a] * rb[b]
+    # the numerators are NULL without a row, as the oracle's SUMs are
+    nums = (n * s12 - s1 * s2, n * s11 - s1 * s1, n * s22 - s2 * s2)
+    row = (n, *(str(v) if n else None for v in nums))
+    out = local_frame(
+        spark, [row], "n long, cov_num string, var_a_num string, var_b_num string"
+    )
+    # each digit string casts to the double nearest its integer, as the
+    # DECIMAL(38,0) numerators did
+    cov, va, vb = (F.col(c).cast("double") for c in ("cov_num", "var_a_num", "var_b_num"))
+    return out.select(
+        "n",
+        "cov_num",
+        "var_a_num",
+        "var_b_num",
         F.when(
-            (n * s11 > s1 * s1) & (n * s22 > s2 * s2),
-            F.round(
-                cov.cast("double")
-                / (F.sqrt(va.cast("double")) * F.sqrt(vb.cast("double"))),
-                6,
-            ),
+            (va > 0) & (vb > 0),
+            F.round(cov / (F.sqrt(va) * F.sqrt(vb)), 6),
         ).alias("spearman_rho"),
     )

@@ -596,8 +596,10 @@ def bloom_semijoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_true",
             (F.col("n_pass") - F.col("n_true")).alias("false_positives"),
             F.round(
-                (F.col("n_pass") - F.col("n_true"))
-                / (F.col("n_orders") - F.col("n_true")),
+                F.try_divide(
+                    F.col("n_pass") - F.col("n_true"),
+                    F.col("n_orders") - F.col("n_true"),
+                ),
                 6,
             ).alias("fp_rate"),
         )
@@ -1385,12 +1387,12 @@ def benford_digit_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "digit",
             "n",
             "n_total",
-            F.round(F.col("n").cast("double") / F.col("n_total"), 6).alias(
+            F.round(F.try_divide(F.col("n").cast("double"), F.col("n_total")), 6).alias(
                 "obs_freq"
             ),
             F.round(p, 6).alias("benford_freq"),
             F.round(
-                F.pow(F.col("n") - exp_n, F.lit(2.0)) / exp_n, 4
+                F.try_divide(F.pow(F.col("n") - exp_n, F.lit(2.0)), exp_n), 4
             ).alias("chi2_contrib"),
         )
         .orderBy("digit")
@@ -1602,6 +1604,75 @@ def revenue_gini_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the monthly revenue series: one bounded (month, cents) read --------------
+
+# From here on, the monthly-series, score and length statistics and
+# event_dow_independence fold bounded cell tables on the driver.
+# Integers stay exact Python ints, and each double sum adds its terms in
+# the oracle's window order with Spark's expression order, so the float
+# bits match the window plans they replace.  Rounding, sqrt, exp and ln
+# stay Spark readout expressions over a local frame: Spark's HALF_UP
+# round and StrictMath are not Python's.  The monthly and score folds
+# keep SQL's NULLs (a month or score key of NULL sorts first, a NULL
+# term drops out of a sum, a sum of no terms is NULL), so a NULL date,
+# price or value gives the rows the window plans gave.
+
+
+def _null_first(v) -> tuple:
+    """Sort key of a value: ascending, NULL first, as Spark's ascending
+    order puts it."""
+    return (v is not None, v)
+
+
+def _sorted_cells(agg: DataFrame, bound: int, what: str) -> list:
+    """Read a lazy cell aggregate once through ``read_bounded``, rows by
+    their first column ascending; more than ``bound`` rows raises the
+    error ``what`` names."""
+    return sorted(read_bounded(agg, bound, what), key=lambda row: _null_first(row[0]))
+
+
+def _sql_sum(terms):
+    """SUM over ``terms``: NULL terms drop out, and no term left is NULL."""
+    kept = [t for t in terms if t is not None]
+    return sum(kept) if kept else None
+
+
+# Bound on the monthly statistics' one driver read: one row per calendar
+# month.  TPC-H orders span about 84 months at every scale factor; the
+# bound admits 341 years.
+_MONTH_CELLS = 4_096
+
+
+def _month_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy ``(ym, cents)`` monthly revenue aggregate the monthly
+    statistics read."""
+    return (
+        table(spark, sf_dir, "orders")
+        .select(
+            F.date_trunc("month", "o_orderdate").cast("date").alias("ym"),
+            F.round(F.col("o_totalprice") * F.lit(100.0), 0)
+            .cast("long")
+            .alias("cents"),
+        )
+        .groupBy("ym")
+        .agg(F.sum("cents").cast("long").alias("cents"))
+    )
+
+
+def _cusum_fold(xs: list) -> tuple[list, int | None]:
+    """The scaled CUSUM S'_t = N*cum_t - t*total of a series (NULL where
+    cum_t or total is), and the 1-based t of its largest |S'_t| (ties to
+    the earliest; None without one)."""
+    n, total, cum, scaled = len(xs), _sql_sum(xs), None, []
+    for t, x in enumerate(xs, start=1):
+        cum = _sql_sum([cum, x])
+        scaled.append(None if cum is None or total is None else n * cum - t * total)
+    peak = max((abs(s) for s in scaled if s is not None), default=None)
+    return scaled, next(
+        (t for t, s in enumerate(scaled, 1) if s is not None and abs(s) == peak), None
+    )
+
+
 # --- CUSUM changepoint over the monthly revenue series ------------------------
 
 
@@ -1663,83 +1734,95 @@ def revenue_gini_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one rounded normalized column for human eyes.  Emits the whole "
     "CUSUM trajectory with the peak month flagged (ties -> earliest, "
     "via an explicit MIN-over-peak rule identical in both engines).  "
-    "Scale shape: one keyed monthly aggregate over the orders scan; "
-    "ALL window work (index, prefix sum, peak flag) runs on the "
-    "calendar-bounded <= ~84-row monthly table — the whitelisted "
-    "monthly-rollup window class; no second scan",
+    "Scale shape: one keyed monthly aggregate over the orders scan; the "
+    "driver reads that series once, bounded at 4,096 months (the "
+    "calendar, not the data, sizes it: ~84 months at any SF; more "
+    "raises), runs the prefix sum and the peak scan in month order with "
+    "exact Python integers, and the months return to Spark for the "
+    "rounding",
     tags=("event-time", "window", "changepoint", "exact-cents"),
 )
 def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    m = (
-        table(spark, sf_dir, "orders")
-        .select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("ym"),
-            F.round(F.col("o_totalprice") * F.lit(100.0), 0)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("ym")
-        .agg(F.sum("cents").cast("long").alias("cents"))
+    m = _sorted_cells(
+        _month_agg(spark, sf_dir),
+        _MONTH_CELLS,
+        "revenue_cusum_changepoint: the month cell read",
     )
-    w_ord = Window.orderBy("ym")
-    upto = Window.orderBy("ym").rowsBetween(Window.unboundedPreceding, 0)
-    idx = m.select(
-        "ym",
-        "cents",
-        F.row_number().over(w_ord).cast("long").alias("t"),
-        F.sum("cents").over(upto).cast("long").alias("cum"),
+    scaled, peak_t = _cusum_fold([cents for _ym, cents in m])
+    n, total = len(m), _sql_sum(cents for _ym, cents in m)
+    rows = [
+        (ym, cents, t, s, n, total, int(t == peak_t))
+        for t, ((ym, cents), s) in enumerate(zip(m, scaled), start=1)
+    ]
+    out = local_frame(
+        spark,
+        rows,
+        "ym date, cents long, t long, cusum_scaled long, n long, total long, "
+        "is_changepoint int",
     )
-    tot = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("total"),
-    )
-    s = idx.crossJoin(F.broadcast(tot)).select(
-        "ym",
-        "cents",
-        "t",
-        (F.col("n") * F.col("cum") - F.col("t") * F.col("total"))
-        .cast("long")
-        .alias("cusum_scaled"),
-        "n",
-        "total",
-    )
-    whole = Window.orderBy("ym").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    mx = s.select(
+    return out.select(
         "ym",
         "cents",
         "t",
         "cusum_scaled",
         F.round(
-            F.col("cusum_scaled").cast("double")
-            / (F.col("n") * F.col("total")),
-            6,
+            F.col("cusum_scaled").cast("double") / (F.col("n") * F.col("total")), 6
         ).alias("cusum_norm"),
-        F.max(F.abs(F.col("cusum_scaled"))).over(whole).alias("peak"),
-        F.min(
-            F.when(
-                F.abs(F.col("cusum_scaled"))
-                == F.max(F.abs(F.col("cusum_scaled"))).over(whole),
-                F.col("t"),
-            )
-        )
-        .over(whole)
-        .alias("peak_t"),
+        "is_changepoint",
     )
-    return mx.select(
-        "ym",
-        "cents",
-        "t",
-        "cusum_scaled",
-        "cusum_norm",
-        F.when(F.col("t") == F.col("peak_t"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("is_changepoint"),
-    ).orderBy("ym")
+
+
+# --- the value score as a purchase classifier: one bounded score read --------
+
+# Bound on the score statistics' one driver read: one row per distinct
+# cent score.  The count grows with the events: 385, 3,270 and 13,246
+# distinct cents over 390, 3,963 and 40,025 views and purchases at
+# sf0.001, sf0.01 and sf0.1.  The feed draws values from an exponential
+# of mean 50, under which n events give about 5000*(ln(n/5000) + 0.58)
+# distinct cents (13,287 at sf0.1, about 25k at 4e5 events and 48k at
+# 4e7); the bound admits 131,072, which that growth reaches near 7e14
+# events.
+_SCORE_CELLS = 131_072
+
+
+def _score_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy ``(score, pos_c, c)`` per-cent-score count of views and
+    purchases the score statistics read."""
+    return (
+        table(spark, sf_dir, "events")
+        .filter(F.col("event_type").isin("view", "purchase"))
+        .select(
+            F.round(F.col("value") * F.lit(100.0), 0).cast("long").alias("score"),
+            F.when(F.col("event_type") == "purchase", F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("y"),
+        )
+        .groupBy("score")
+        .agg(
+            F.sum("y").cast("long").alias("pos_c"),
+            F.count(F.lit(1)).cast("long").alias("c"),
+        )
+    )
+
+
+def midranks2(hist: dict) -> dict:
+    """Doubled midranks ``2*cum_before + c + 1`` of ``{value: count}``,
+    values ascending: exact integers where ties make ranks halves."""
+    out, before = {}, 0
+    for v in sorted(hist, key=_null_first):
+        out[v] = 2 * before + hist[v] + 1
+        before += hist[v]
+    return out
+
+
+def _auc_fold(cells: list) -> tuple[int, int, int]:
+    """``(n_pos, n_neg, u2)`` of ``[(score, pos_c, c)]``: u2 = 2U is the
+    positives' doubled midrank sum less n_pos*(n_pos + 1)."""
+    mr2 = midranks2({score: c for score, _pos_c, c in cells})
+    n_pos = sum(pos_c for _score, pos_c, _c in cells)
+    n_neg = sum(c for _score, _pos_c, c in cells) - n_pos
+    s2 = sum(pos_c * mr2[score] for score, pos_c, _c in cells)
+    return n_pos, n_neg, s2 - n_pos * (n_pos + 1)
 
 
 # --- rank-sum AUC: does the value score separate purchases from views? -------
@@ -1799,63 +1882,28 @@ def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "first — the BIGINT product wraps once each class passes ~2e9 rows "
     "at large SF), and the one "
     "float op is the final rounded division.  Scale shape: one keyed "
-    "aggregate per distinct score, then ALL rank work runs on the "
-    "distinct-score table — DOMAIN-bounded (value in (0, ~560) by the "
-    "feed's schema => <= ~56k distinct cents at any SF; the whitelisted "
-    "bounded-summary window class) — never a per-event global sort; two "
-    "1-row broadcasts assemble the output",
+    "aggregate per distinct score; the driver reads that score table "
+    "once, bounded at 131,072 scores (13,246 distinct cents at sf0.1, "
+    "growing like the log of the event count; more raises), sums the "
+    "doubled midranks of the positives with exact Python integers, and "
+    "one row returns to Spark for the rounding — never a per-event "
+    "global sort",
     tags=("profiling", "window", "ranking", "evaluation"),
 )
 def quality_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    lab = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "purchase"))
-        .select(
-            F.round(F.col("value") * F.lit(100.0), 0)
-            .cast("long")
-            .alias("score"),
-            F.when(F.col("event_type") == "purchase", F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("y"),
-        )
+    cells = _sorted_cells(
+        _score_agg(spark, sf_dir),
+        _SCORE_CELLS,
+        "quality_score_auc: the score cell read",
     )
-    grp = lab.groupBy("score").agg(
-        F.sum("y").cast("long").alias("pos_c"),
-        F.sum(F.lit(1) - F.col("y")).cast("long").alias("neg_c"),
-        F.count(F.lit(1)).cast("long").alias("c"),
-    )
-    before = Window.orderBy("score").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w = grp.select(
-        "score",
-        "pos_c",
-        "c",
-        F.coalesce(F.sum("c").over(before), F.lit(0))
-        .cast("long")
-        .alias("c_lt"),
-    )
-    tot = grp.agg(
-        F.sum("pos_c").cast("long").alias("n_pos"),
-        F.sum("neg_c").cast("long").alias("n_neg"),
-    )
-    s = w.agg(
-        F.sum(F.col("pos_c") * (2 * F.col("c_lt") + F.col("c") + 1))
-        .cast("long")
-        .alias("s2")
-    )
-    return s.crossJoin(F.broadcast(tot)).select(
+    rows = [_auc_fold(cells)] if cells else [(None, None, None)]
+    out = local_frame(spark, rows, "n_pos long, n_neg long, u2 long")
+    return out.select(
         "n_pos",
         "n_neg",
-        (F.col("s2") - F.col("n_pos") * (F.col("n_pos") + 1))
-        .cast("long")
-        .alias("u2"),
+        "u2",
         F.round(
-            (F.col("s2") - F.col("n_pos") * (F.col("n_pos") + 1)).cast(
-                "double"
-            )
+            F.col("u2").cast("double")
             / (
                 F.lit(2.0)
                 * F.col("n_pos").cast("double")
@@ -1929,83 +1977,66 @@ def _acf_oracle() -> str:
     "(the per-term product passes 2^63 — corr_matrix_lineitem's "
     "overflow lesson applied a priori; the N^2 factors cancel in the "
     "ratio), and divides once per lag, rounded at 6 dp in both "
-    "engines.  Lag alignment by LAG windows over the monthly table; "
-    "lag-k numerators sum over the N-k aligned pairs (the Box-Jenkins "
-    "sample ACF convention of a shared full-series denominator).  "
-    "Scale shape: one keyed monthly aggregate over the orders scan, "
-    "then ALL lag/stack/ratio work runs on the calendar-bounded "
-    "<= ~84-row monthly table — the whitelisted monthly-rollup window "
-    "class; no second scan, no per-order window",
+    "engines.  Lag-k numerators sum over the N-k aligned pairs (the "
+    "Box-Jenkins sample ACF convention of a shared full-series "
+    "denominator).  Scale shape: one keyed monthly aggregate over the "
+    "orders scan; the driver reads that series once under the "
+    "revenue_cusum_changepoint bound (4,096 months; more raises), forms "
+    "the centered lag products with exact Python integers, and the six "
+    "lag rows return to Spark for the rounded ratio; no per-order "
+    "window",
     tags=("event-time", "window", "timeseries", "exact-cents"),
 )
 def revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    m = (
-        table(spark, sf_dir, "orders")
-        .select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("ym"),
-            F.round(F.col("o_totalprice") * F.lit(100.0), 0)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("ym")
-        .agg(F.sum("cents").cast("long").alias("cents"))
+    m = _sorted_cells(
+        _month_agg(spark, sf_dir),
+        _MONTH_CELLS,
+        "revenue_autocorrelation: the month cell read",
     )
-    tot = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("total"),
-    )
-    y0 = m.crossJoin(F.broadcast(tot)).select(
-        "ym",
-        (F.col("n") * F.col("cents") - F.col("total"))
-        .cast("long")
-        .alias("y"),
-    )
-    w = Window.orderBy("ym")
-    lagged = y0.select(
-        "ym",
-        "y",
-        *[
-            F.lag("y", k).over(w).alias(f"y_{k}")
-            for k in range(1, _ACF_MAX_LAG + 1)
-        ],
-    )
-    den = y0.agg(
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("ss")
-    )
-    stacked = lagged.select(
-        "y",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("lag"), F.col(f"y_{k}").alias("y_lag")
-                    )
-                    for k in range(1, _ACF_MAX_LAG + 1)
-                ]
-            )
-        ).alias("p"),
-    ).select("y", F.col("p.lag").cast("int").alias("lag"), "p.y_lag")
-    return (
-        stacked.filter(F.col("y_lag").isNotNull())
-        .crossJoin(F.broadcast(den))
-        .groupBy("lag", "ss")
-        .agg(
-            F.count("y_lag").cast("long").alias("n_pairs"),
-            F.round(
-                F.sum(F.col("y").cast("decimal(38,0)") * F.col("y_lag"))
-                .cast("double")
-                / F.col("ss").cast("double"),
-                6,
-            ).alias("acf"),
-        )
-        .select("lag", "n_pairs", "acf")
-        .orderBy("lag")
+    xs = [cents for _ym, cents in m]
+    n, total = len(xs), _sql_sum(xs)
+    y = [None if x is None or total is None else n * x - total for x in xs]
+    ss = _sql_sum(v * v for v in y if v is not None)
+    # the exact sums travel as digit strings: each casts to the double
+    # nearest it, as the DECIMAL(38,0) sums did
+    ss_digits = None if ss is None else str(ss)
+    rows = []
+    for k in range(1, _ACF_MAX_LAG + 1):
+        # a lag row exists where some y_{t-k} does, as the filtered LAGs
+        pairs = [(y[t], y[t - k]) for t in range(k, n) if y[t - k] is not None]
+        if pairs:
+            num = _sql_sum(a * b for a, b in pairs if a is not None)
+            rows.append((k, len(pairs), None if num is None else str(num), ss_digits))
+    out = local_frame(spark, rows, "lag int, n_pairs long, num string, ss string")
+    return out.select(
+        "lag",
+        "n_pairs",
+        F.round(F.col("num").cast("double") / F.col("ss").cast("double"), 6).alias(
+            "acf"
+        ),
     )
 
 
 # --- classical seasonal decomposition of the monthly revenue series -----------
+
+
+def _decompose24(xs: list, moy: list) -> tuple[list, dict]:
+    """The centered 2x12 moving average times 24 of each month, trend24 =
+    x[t-6] + x[t+6] + 2*sum(x[t-5..t+5]) (None where the window does not
+    fit), and the seasonal numerator and count per month-of-year,
+    ``{moy: (sum(24*x - trend24), count)}`` over the months with a trend."""
+    n = len(xs)
+    trend24 = []
+    for t in range(n):
+        fits = 6 <= t < n - 6
+        lo, hi = (xs[t - 6], xs[t + 6]) if fits else (None, None)
+        s11 = _sql_sum(xs[t - 5 : t + 6]) if fits else None
+        trend24.append(lo + hi + 2 * s11 if None not in (lo, hi, s11) else None)
+    terms: dict = {}
+    for x, tr, k in zip(xs, trend24, moy):
+        if tr is not None:
+            terms.setdefault(k, []).append(None if x is None else 24 * x - tr)
+    return trend24, {k: (_sql_sum(v), len(v)) for k, v in terms.items()}
 
 
 @register(
@@ -2076,115 +2107,64 @@ def revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "statistic is integer-exact and both engines perform the IDENTICAL "
     "two IEEE divisions per row before the rounded emit; edge months "
     "(no full +-6 window) carry NULL trend/residual by an explicit "
-    "count guard, identical in both engines.  The row-based frames "
-    "assume a gap-free monthly calendar (true for TPC-H); a missing "
-    "month ANYWHERE raises loudly in BOTH engines — a 1-row gap flag "
-    "aggregated over every month-to-month step, cross-joined into the "
-    "output, and threaded through every emitted row (a per-row guard "
-    "on the gapped row alone is bypassable: the seasonal join can "
-    "prune that row while its neighbors emit misaligned frames) — "
-    "instead of silently misaligning the centered MA.  Scale shape: "
-    "one keyed "
-    "monthly aggregate over the orders scan; the LAG/LEAD/rolling "
-    "windows and the 12-row seasonal join all run on the "
-    "calendar-bounded <= ~84-row monthly table — the whitelisted "
-    "monthly-rollup window class; no second scan",
+    "count guard, identical in both engines; months whose "
+    "month-of-year never gets a seasonal mean are not emitted.  The "
+    "centered frames assume a gap-free monthly calendar (true for "
+    "TPC-H); a missing month ANYWHERE raises loudly in BOTH engines "
+    "whenever a row would be emitted (the oracle threads a global gap "
+    "flag through every row; the query checks every month-to-month "
+    "step on the driver) instead of silently misaligning the centered "
+    "MA.  Scale shape: one keyed monthly aggregate over the orders "
+    "scan; the driver reads that series once under the "
+    "revenue_cusum_changepoint bound (4,096 months; more raises), "
+    "forms trend24 and the per-month-of-year numerators with exact "
+    "Python integers, and the months return to Spark for the two "
+    "divisions and the rounding",
     tags=("event-time", "window", "timeseries", "exact-cents"),
 )
 def revenue_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    m = (
-        table(spark, sf_dir, "orders")
-        .select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("ym"),
-            F.round(F.col("o_totalprice") * F.lit(100.0), 0)
-            .cast("long")
-            .alias("cents"),
+    m = _sorted_cells(
+        _month_agg(spark, sf_dir),
+        _MONTH_CELLS,
+        "revenue_seasonal_decomposition: the month cell read",
+    )
+    moy = [None if ym is None else ym.month for ym, _cents in m]
+    trend24, seas = _decompose24([cents for _ym, cents in m], moy)
+    rows = [
+        (ym, cents, k, tr, *seas[k])
+        for (ym, cents), k, tr in zip(m, moy, trend24)
+        if k in seas
+    ]
+    # the 2x12 frames count months by position, so one missing calendar
+    # month would misalign every window that spans it (a NULL month,
+    # first, has no step)
+    steps = [
+        b.year * 12 + b.month - a.year * 12 - a.month
+        for (a, _), (b, _) in zip(m, m[1:])
+        if a is not None
+    ]
+    if rows and any(step != 1 for step in steps):
+        raise ValueError(
+            "revenue_seasonal_decomposition: monthly series has a calendar "
+            "gap — row-based 2x12 MA frames would misalign"
         )
-        .groupBy("ym")
-        .agg(F.sum("cents").cast("long").alias("cents"))
-    )
-    w_ord = Window.orderBy("ym")
-    w11 = Window.orderBy("ym").rowsBetween(-5, 5)
-    # Gap-free guard: the ROWS-based LAG/LEAD(6) and 5-preceding frames
-    # assume consecutive calendar months; a missing month would silently
-    # misalign trend24 to non-adjacent months.  Fail loudly instead.
-    # The flag is a 1-row aggregate over ALL month gaps, cross-joined
-    # into the output and threaded through every emitted row — a
-    # per-row guard on the gapped row alone is bypassable (the seasonal
-    # inner join can prune exactly that row while its neighbors emit
-    # misaligned frames); the oracle carries the same global flag via
-    # error().  With zero emitted rows nothing can be misaligned, so
-    # the vacuous case is safe by construction.
-    prev_ym = F.lag("ym", 1).over(w_ord)
-    has_gap = (
-        m.select(
-            F.when(
-                prev_ym.isNull()
-                | (F.months_between(F.col("ym"), prev_ym) == 1.0),
-                F.lit(0),
-            )
-            .otherwise(F.lit(1))
-            .alias("g")
-        )
-        .agg(F.max("g").alias("has_gap"))
-    )
-    w = m.select(
-        "ym",
-        "cents",
-        F.month("ym").cast("int").alias("moy"),
-        F.lag("cents", 6).over(w_ord).alias("x_m6"),
-        F.lead("cents", 6).over(w_ord).alias("x_p6"),
-        F.sum("cents").over(w11).alias("s11"),
-        F.count(F.lit(1)).over(w11).alias("c11"),
-    )
-    tr = w.select(
-        "ym",
-        "cents",
-        "moy",
-        F.when(
-            F.col("x_m6").isNotNull()
-            & F.col("x_p6").isNotNull()
-            & (F.col("c11") == 11),
-            (F.col("x_m6") + F.col("x_p6") + 2 * F.col("s11")).cast("long"),
-        ).alias("trend24"),
-    )
-    seas = (
-        tr.filter(F.col("trend24").isNotNull())
-        .groupBy("moy")
-        .agg(
-            F.sum(24 * F.col("cents") - F.col("trend24"))
-            .cast("long")
-            .alias("snum"),
-            F.count(F.lit(1)).cast("long").alias("scnt"),
-        )
+    out = local_frame(
+        spark,
+        rows,
+        "ym date, cents long, moy int, trend24 long, snum long, scnt long",
     )
     trend = F.col("trend24").cast("double") / F.lit(24.0)
     seasonal = F.col("snum").cast("double") / (F.lit(24.0) * F.col("scnt"))
-    guard = F.when(
-        F.col("has_gap") == 1,
-        F.expr(
-            "raise_error('revenue_seasonal_decomposition: monthly series"
-            " has a calendar gap — row-based 2x12 MA frames would"
-            " misalign')"
-        ),
-    ).otherwise(F.col("moy"))
-    return (
-        tr.join(F.broadcast(seas), "moy")
-        .crossJoin(F.broadcast(has_gap))
-        .select(
-            "ym",
-            "cents",
-            guard.alias("moy"),
-            F.round(trend, 4).alias("trend"),
-            F.round(seasonal, 4).alias("seasonal"),
-            F.when(
-                F.col("trend24").isNotNull(),
-                F.round(F.col("cents") - trend - seasonal, 4),
-            ).alias("residual"),
-        )
-        .orderBy("ym")
+    return out.select(
+        "ym",
+        "cents",
+        "moy",
+        F.round(trend, 4).alias("trend"),
+        F.round(seasonal, 4).alias("seasonal"),
+        F.when(
+            F.col("trend24").isNotNull(),
+            F.round(F.col("cents") - trend - seasonal, 4),
+        ).alias("residual"),
     )
 
 
@@ -2260,76 +2240,37 @@ def revenue_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
     "IEEE accumulation question at all); Z and tau-b are single "
     "closed-form double expressions of those integers, mirrored "
     "term-by-term in both engines, rounded once.  Scale shape: one "
-    "keyed monthly aggregate over the orders scan, then the pair "
-    "sign-join and tie fold run on the calendar-bounded <= ~84-row "
-    "monthly table (<= ~3.5k pairs at ANY scale factor — the "
-    "whitelisted bounded-self-join class); no window at all",
+    "keyed monthly aggregate over the orders scan; the driver reads "
+    "that series once under the revenue_cusum_changepoint bound (4,096 "
+    "months, <= ~3.5k pairs at ~84 months; more raises) and sums the "
+    "pair signs and tie terms with exact Python integers; one row "
+    "returns to Spark for Z and tau-b",
     tags=("agg", "timeseries", "trend", "exact-cents"),
 )
 def revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = (
-        table(spark, sf_dir, "orders")
-        .select(
-            F.date_trunc("month", "o_orderdate").cast("date").alias("ym"),
-            F.round(F.col("o_totalprice") * F.lit(100.0), 0)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("ym")
-        .agg(F.sum("cents").cast("long").alias("cents"))
+    m = _sorted_cells(
+        _month_agg(spark, sf_dir),
+        _MONTH_CELLS,
+        "revenue_mann_kendall: the month cell read",
     )
-    # Materialize the <= ~84-row monthly frame once (the triangle-census
-    # localCheckpoint pattern): the pair self-join reads it twice and the
-    # tie fold a third time, and exchange reuse only collapsed two of the
-    # three — at scale that's a second full orders scan for an 84-row
-    # frame.  One scan, then every statistic reads the checkpoint.
-    m = m.localCheckpoint(eager=True)
-    a = m.select(F.col("ym").alias("ym_a"), F.col("cents").alias("c_a"))
-    b = m.select(F.col("ym").alias("ym_b"), F.col("cents").alias("c_b"))
-    s = (
-        a.join(b, F.col("ym_a") < F.col("ym_b"))
-        .agg(
-            F.sum(
-                F.when(F.col("c_b") > F.col("c_a"), 1)
-                .when(F.col("c_b") < F.col("c_a"), -1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("s")
-        )
+    ties = [t for t in Counter(cents for _ym, cents in m).values() if t > 1]
+    # the pairs join on ym_a < ym_b, so a NULL month is in no pair, and a
+    # NULL month total scores 0; S is NULL without a pair and n without a
+    # month, as SUMs over no rows are
+    xs = [cents for ym, cents in m if ym is not None]
+    s = sum(
+        (b > a) - (b < a)
+        for i, a in enumerate(xs)
+        for b in xs[i + 1 :]
+        if a is not None and b is not None
     )
-    # n, the tie term, and the tie-pair count all fold out of ONE
-    # cents-grouped aggregate over the monthly table: keeping them in a
-    # single branch (instead of a separate COUNT(*) branch that prunes
-    # to a narrower scan) lets exchange reuse collapse the whole plan
-    # onto one orders scan — the a/b pair sides and this branch all
-    # share the monthly aggregate's exchange.
-    ties = (
-        m.groupBy("cents")
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .agg(
-            F.sum("t").cast("long").alias("n"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("t") > 1,
-                        F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5),
-                    )
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("tie_term"),
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("t") > 1, F.col("t") * (F.col("t") - 1))
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("tie_pairs2"),
-        )
+    row = (
+        len(m) or None,
+        s if len(xs) > 1 else None,
+        sum(t * (t - 1) * (2 * t + 5) for t in ties),
+        sum(t * (t - 1) for t in ties),
     )
+    stats = local_frame(spark, [row], "n long, s long, tie_term long, tie_pairs2 long")
     nd = F.col("n").cast("double")
     sd = F.col("s").cast("double")
     sigma = F.sqrt(
@@ -2349,35 +2290,22 @@ def revenue_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         d_pairs - F.col("tie_pairs2").cast("double") / F.lit(2.0)
     )
     tau_b = F.when(tb_den > 0, sd / F.sqrt(tb_den))
-    return (
-        s.crossJoin(F.broadcast(ties))
-        .select(
-            F.col("n").alias("n_months"),
-            F.col("s").alias("s_statistic"),
-            (
-                F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
-                - F.col("tie_term")
-            )
-            .cast("long")
-            .alias("var18"),
-            F.round(z, 4).alias("z_score"),
-            F.round(tau_b, 4).alias("tau_b"),
-            F.when((F.col("s") > 0) & (z > 1.96), F.lit("increasing"))
-            .when((F.col("s") < 0) & (z < -1.96), F.lit("decreasing"))
-            .otherwise(F.lit("no-trend"))
-            .alias("trend"),
-        )
+    return stats.select(
+        F.col("n").alias("n_months"),
+        F.col("s").alias("s_statistic"),
+        (F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5) - F.col("tie_term"))
+        .cast("long")
+        .alias("var18"),
+        F.round(z, 4).alias("z_score"),
+        F.round(tau_b, 4).alias("tau_b"),
+        F.when((F.col("s") > 0) & (z > 1.96), F.lit("increasing"))
+        .when((F.col("s") < 0) & (z < -1.96), F.lit("decreasing"))
+        .otherwise(F.lit("no-trend"))
+        .alias("trend"),
     )
 
 
 # --- document-length statistics: one bounded (source, length) cell read ------
-
-# The statistics below and event_dow_independence fold their bounded
-# cell tables on the driver.  Integers stay exact Python ints, and each
-# double sum adds its terms in the oracle's window order with Spark's
-# expression order, so the float bits match the window plans they
-# replace.  Rounding, exp and ln stay Spark readout expressions over a
-# local frame: Spark's HALF_UP round and StrictMath are not Python's.
 
 # Bound on the length statistics' one driver read.  The (source, length)
 # cell table has at most sources x distinct lengths cells: the corpus
@@ -2922,12 +2850,10 @@ def source_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_length_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _length_cells(spark, sf_dir, "source_length_kruskal")
-    # doubled midranks 2*cum_before + c + 1 over the pooled histogram
-    mr2, n, tie_term = {}, 0, 0
-    for v, c in _pooled(cells).items():
-        mr2[v] = 2 * n + c + 1
-        n += c
-        tie_term += c * c * c - c
+    pooled = _pooled(cells)
+    mr2 = midranks2(pooled)
+    n = sum(pooled.values())
+    tie_term = sum(c * c * c - c for c in pooled.values())
     s = 0.0
     for by_len in cells.values():
         s2_g = float(sum(c * mr2[v] for v, c in by_len.items()))
@@ -3028,10 +2954,9 @@ def source_length_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per bin read the positive rate, the cumulative share of all "
     "positives captured (the gains curve a curation pipeline uses to "
     "pick how deep to keep), and the lift over the base rate.  Decile "
-    "assignment is the source_psi_drift edge machinery run top-down: "
-    "the per-SCORE cumulative count (score-DESC window over the "
-    "domain-bounded distinct-score table) joins a 10-row k-grid on "
-    "k*N >= 10*cf and takes MIN(k) — pure integer comparisons, no "
+    "assignment is the source_psi_drift edge rule run top-down: a "
+    "score's decile is the smallest k with k*N >= 10*cf, cf its "
+    "score-DESC cumulative count — pure integer comparisons, no "
     "division, so tied score blocks land in one engine-identical "
     "decile and bins can be unequal exactly when ties straddle an "
     "edge.  Exactness: n / n_pos / sum_score / cum_pos are BIGINT; "
@@ -3039,95 +2964,60 @@ def source_length_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expression over exact integers rounded once (lift multiplies "
     "cross-wise — pos_c*N / (n*N_pos) — so no chained divisions); "
     "zero-positive corpora NULL-guard share and lift.  Scale shape: "
-    "one keyed aggregate per distinct score, then every window and "
-    "join runs on the distinct-score table — DOMAIN-bounded at <= "
-    "~56k cent values at any SF (the quality_score_auc bound) — and "
-    "the 10-row bin table; never a per-event sort; one 1-row total "
-    "broadcast",
+    "one keyed aggregate per distinct score; the driver reads that "
+    "score table once under the quality_score_auc bound (131,072 "
+    "scores; more raises), walks it score-descending into the ten bins "
+    "with exact Python integers, and the bin rows return to Spark for "
+    "the rounding; never a per-event sort",
     tags=("profiling", "ranking", "evaluation", "exact-cells"),
 )
 def score_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    lab = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "purchase"))
-        .select(
-            F.round(F.col("value") * F.lit(100.0), 0)
-            .cast("long")
-            .alias("score"),
-            F.when(F.col("event_type") == "purchase", F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("y"),
-        )
+    cells = _sorted_cells(
+        _score_agg(spark, sf_dir),
+        _SCORE_CELLS,
+        "score_lift_deciles: the score cell read",
     )
-    grp = lab.groupBy("score").agg(
-        F.sum("y").cast("long").alias("pos_c"),
-        F.count(F.lit(1)).cast("long").alias("c"),
+    n_tot = sum(c for _score, _pos_c, c in cells)
+    n_pos_tot = sum(pos_c for _score, pos_c, _c in cells)
+    # decile -> [n, n_pos, sum_score]; a score's decile is ceil(10*cf/N),
+    # and a NULL score (last, score-descending) adds no sum_score term
+    bins: dict = {}
+    cf = 0
+    for score, pos_c, c in reversed(cells):
+        cf += c
+        b = bins.setdefault(-(-10 * cf // n_tot), [0, 0, None])
+        b[0] += c
+        b[1] += pos_c
+        b[2] = _sql_sum([b[2], None if score is None else score * c])
+    rows, cum_pos = [], 0
+    for decile in sorted(bins):
+        n, n_pos, sum_score = bins[decile]
+        cum_pos += n_pos
+        rows.append((decile, n, n_pos, sum_score, cum_pos, n_tot, n_pos_tot))
+    gains = local_frame(
+        spark,
+        rows,
+        "decile long, n long, n_pos long, sum_score long, cum_pos long, "
+        "n_tot long, n_pos_tot long",
     )
-    tot = grp.agg(
-        F.sum("c").cast("long").alias("n_tot"),
-        F.sum("pos_c").cast("long").alias("n_pos_tot"),
-    )
-    wdesc = Window.orderBy(F.col("score").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = grp.select(
-        "score", "pos_c", "c", F.sum("c").over(wdesc).cast("long").alias("cf")
-    )
-    kgrid = spark.range(1, 11).select(F.col("id").cast("long").alias("k"))
-    dec = (
-        cum.crossJoin(F.broadcast(tot))
-        .join(
-            F.broadcast(kgrid),
-            F.col("k") * F.col("n_tot") >= F.lit(10) * F.col("cf"),
-        )
-        .groupBy("score", "pos_c", "c")
-        .agg(F.min("k").alias("decile"))
-    )
-    bins = dec.groupBy("decile").agg(
-        F.sum("c").cast("long").alias("n"),
-        F.sum("pos_c").cast("long").alias("n_pos"),
-        F.sum(F.col("score") * F.col("c")).cast("long").alias("sum_score"),
-    )
-    wgain = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    gains = bins.select(
+    return gains.select(
         "decile",
         "n",
         "n_pos",
-        "sum_score",
-        F.sum("n_pos").over(wgain).cast("long").alias("cum_pos"),
-    )
-    return (
-        gains.crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "n",
-            "n_pos",
-            F.round(F.col("n_pos").cast("double") / F.col("n"), 6).alias(
-                "pos_rate"
+        F.round(F.col("n_pos").cast("double") / F.col("n"), 6).alias("pos_rate"),
+        F.round(F.col("sum_score").cast("double") / F.col("n"), 6).alias("avg_score"),
+        F.when(
+            F.col("n_pos_tot") > 0,
+            F.round(F.col("cum_pos").cast("double") / F.col("n_pos_tot"), 6),
+        ).alias("cum_pos_share"),
+        F.when(
+            F.col("n_pos_tot") > 0,
+            F.round(
+                (F.col("n_pos").cast("double") * F.col("n_tot"))
+                / (F.col("n").cast("double") * F.col("n_pos_tot")),
+                6,
             ),
-            F.round(F.col("sum_score").cast("double") / F.col("n"), 6).alias(
-                "avg_score"
-            ),
-            F.when(
-                F.col("n_pos_tot") > 0,
-                F.round(
-                    F.col("cum_pos").cast("double") / F.col("n_pos_tot"), 6
-                ),
-            ).alias("cum_pos_share"),
-            F.when(
-                F.col("n_pos_tot") > 0,
-                F.round(
-                    (F.col("n_pos").cast("double") * F.col("n_tot"))
-                    / (F.col("n").cast("double") * F.col("n_pos_tot")),
-                    6,
-                ),
-            ).alias("lift"),
-        )
-        .orderBy("decile")
+        ).alias("lift"),
     )
 
 

@@ -116,8 +116,9 @@ def _changeset(base: DataFrame, span: int) -> DataFrame:
 def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     # Bounded driver scalar (one max over the key column) — same posture
-    # as the percentile-threshold scalars in orders_rfm_segments.
-    span = base.agg(F.max("o_orderkey")).first()[0] + 1
+    # as the percentile-threshold scalars in orders_rfm_segments.  An
+    # empty table has no max and no row to shift.
+    span = (base.agg(F.max("o_orderkey")).first()[0] or 0) + 1
 
     root = scratch_dir(
         "merge_upsert", table_fingerprint(sf_dir, "orders", _MERGE_VERSION)

@@ -458,7 +458,7 @@ def corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.lit(x).alias("col_x"),
                 F.lit(y).alias("col_y"),
-                (num / den).alias("r"),
+                F.try_divide(num, den).alias("r"),
             )
         )
     return (

@@ -2628,8 +2628,8 @@ def countsketch_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c") * F.col("c")).cast("long").alias("f2_row")
     )
     med = rows_.agg(
-        F.element_at(
-            F.sort_array(F.collect_list("f2_row")), _CS_DEPTH // 2 + 1
+        F.try_element_at(
+            F.sort_array(F.collect_list("f2_row")), F.lit(_CS_DEPTH // 2 + 1)
         )
         .cast("long")
         .alias("est_f2")
@@ -2766,8 +2766,8 @@ def countsketch_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     est = ip.agg(
-        F.element_at(
-            F.sort_array(F.collect_list("inner_product")), _CS_DEPTH // 2 + 1
+        F.try_element_at(
+            F.sort_array(F.collect_list("inner_product")), F.lit(_CS_DEPTH // 2 + 1)
         )
         .cast("long")
         .alias("est_join")
@@ -2792,8 +2792,10 @@ def countsketch_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_join",
             (F.col("est_join") - F.col("exact_join")).alias("err"),
             F.round(
-                (F.col("est_join") - F.col("exact_join")).cast("double")
-                / F.col("exact_join"),
+                F.try_divide(
+                    (F.col("est_join") - F.col("exact_join")).cast("double"),
+                    F.col("exact_join"),
+                ),
                 6,
             ).alias("rel_err"),
         )

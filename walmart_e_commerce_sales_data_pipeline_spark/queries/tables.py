@@ -112,11 +112,13 @@ def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     """A driver-built result as a Spark frame for its readout expressions.
     The rows go through a pandas frame, so Arrow hands them over as a
     LocalRelation: no RDD and no Python-worker job, which a list-form
-    ``createDataFrame`` costs per call."""
+    ``createDataFrame`` costs per call.  The columns stay ``object``: pandas
+    would turn an integer column holding a None into float64, which
+    rounds integers past 2^53."""
     import pandas as pd
 
     st = StructType.fromDDL(schema)
-    return spark.createDataFrame(pd.DataFrame.from_records(rows, columns=st.names), st)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=st.names, dtype=object), st)
 
 
 def _stat_entry(path: str, rel: str) -> tuple:
